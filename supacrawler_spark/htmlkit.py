@@ -31,6 +31,14 @@ reference's cleaning rules and our fixtures (headings, paragraphs,
 lists, links, images, emphasis, code/pre, blockquote, hr, tables are
 flattened); goquery's net/html normalization (implicit <body>) is
 emulated by falling back to the document root when no <body> exists.
+
+Guard rule: a whole-string regex pass runs only when the string holds
+the substring its pattern needs to match (a C-speed ``in`` or
+``str.isprintable()`` test, e.g. ``_N3_RE`` needs ``"\\n\\n\\n"``), and
+a literal pattern is a ``str.replace``. A pass that cannot match
+returns its input unchanged, so the guard never changes the output
+bytes; ``tests/test_htmlkit.py`` checks each guard against its plain
+regex form, ``tests/test_htmlkit_pins.py`` pins the per-page output.
 """
 
 from __future__ import annotations
@@ -212,6 +220,17 @@ _INLINE_TAGS = {
 }
 
 _WS_RE = re.compile(r"[ \t\r\n\f]+")
+_SPACES_RE = re.compile(r" +")
+
+
+def _collapse_ws(s: str) -> str:
+    """HTML whitespace collapse: runs of space/tab/CR/LF/FF become one
+    space. Without a double space, tab, CR, LF or FF every run is a
+    single space already."""
+    if ("  " in s or "\n" in s or "\t" in s or "\r" in s
+            or "\f" in s):
+        return _WS_RE.sub(" ", s)
+    return s
 
 
 def _inline_md(node) -> str:
@@ -225,7 +244,7 @@ def _inline_md(node) -> str:
 
 def _inline_md_node(n) -> str:
     if n.tag is None:
-        return _WS_RE.sub(" ", n.text)
+        return _collapse_ws(n.text)
     t = n.tag
     if t == "br":
         return "\n"
@@ -326,7 +345,8 @@ def _container_md(node, blocks):
     def flush():
         if run:
             txt = "".join(_inline_md_node(x) for x in run).strip()
-            txt = re.sub(r" +", " ", txt)
+            if "  " in txt:
+                txt = _SPACES_RE.sub(" ", txt)
             if txt:
                 blocks.append(txt)
             run.clear()
@@ -398,12 +418,12 @@ def fix_control_characters(text: str) -> str:
     """markdown.go:166-199. The invisible-codepoint replaces only
     matter for non-ASCII text \u2014 every target is > U+007F \u2014 so ASCII
     lines (the overwhelming majority) skip all 13 scans."""
-    text = _CONTROL_RE.sub("", text)
+    if not text.isprintable():
+        text = _CONTROL_RE.sub("", text)  # also strips every \x00
     if not text.isascii():
         for ch in _INVISIBLE:
             text = text.replace(ch, "")
         text = text.replace("\uFFFF", "")
-    text = text.replace("\x00", "")
     return text
 
 
@@ -442,6 +462,10 @@ _IMG_RE = re.compile(r"!\[[^\]]*\]\([^\)]+\)")
 _N3_RE = re.compile(r"\n{3,}")
 
 
+def _collapse_n3(s: str) -> str:
+    return _N3_RE.sub("\n\n", s) if "\n\n\n" in s else s
+
+
 def clean_markdown_boilerplate(md_text: str) -> str:
     """markdown.go:236-262: drop blank lines and pure-image lines, fix
     escapes per line, re-collapse, trim."""
@@ -454,9 +478,7 @@ def clean_markdown_boilerplate(md_text: str) -> str:
                 and _IMG_RE.sub("", line).strip() == ""):
             continue
         out.append(fix_invalid_escapes(line))
-    cleaned = "\n".join(out)
-    cleaned = _N3_RE.sub("\n\n", cleaned)
-    return cleaned.strip()
+    return _collapse_n3("\n".join(out)).strip()
 
 
 def html_to_markdown(html: "str | None", root=None) -> str:
@@ -470,14 +492,12 @@ def html_to_markdown(html: "str | None", root=None) -> str:
     out = _convert_to_markdown(sel)
     out = remove_duplicates(out)
     out = clean_markdown_boilerplate(out)
-    out = _N3_RE.sub("\n\n", out)
-    return out.strip()
+    return _collapse_n3(out).strip()
 
 
 _END_BS_RE = re.compile(r"\\+\n")
 _IMG_BOLD_RE = re.compile(r"\)\n{1,2}(\*\*[^\]]+\*\*)\]\(")
 _IMG_NEXT_RE = re.compile(r"\)\n{1,2}\[([^\]]+)\]\(")
-_ADJ_RE = re.compile(r"\) \[!\[")
 _HDR_RE = re.compile(r"([^\n])\n(#+)")
 
 
@@ -489,12 +509,15 @@ def clean_content(md: str) -> str:
     cleaned = md.replace("\r\n", "\n")
     cleaned = cleaned.replace(")\\\n[", ")\n[")
     cleaned = cleaned.replace("]\\\n(", "]\n(")
-    cleaned = _END_BS_RE.sub("\n", cleaned)
-    cleaned = _IMG_BOLD_RE.sub(r") \1](", cleaned)
-    cleaned = _IMG_NEXT_RE.sub(r") [\1](", cleaned)
-    cleaned = _ADJ_RE.sub(")\n\n[![", cleaned)
-    cleaned = _N3_RE.sub("\n\n", cleaned)
-    cleaned = _HDR_RE.sub(r"\1\n\n\2", cleaned)
+    if "\\\n" in cleaned:
+        cleaned = _END_BS_RE.sub("\n", cleaned)
+    if ")\n" in cleaned:
+        cleaned = _IMG_BOLD_RE.sub(r") \1](", cleaned)
+        cleaned = _IMG_NEXT_RE.sub(r") [\1](", cleaned)
+    cleaned = cleaned.replace(") [![", ")\n\n[![")
+    cleaned = _collapse_n3(cleaned)
+    if "\n#" in cleaned:
+        cleaned = _HDR_RE.sub(r"\1\n\n\2", cleaned)
     cleaned = cleaned.strip() + "\n\n"
     if not cleaned.endswith("\n\n"):
         cleaned = cleaned.rstrip("\n") + "\n\n"
@@ -542,7 +565,7 @@ def extract_text(html: "str | None" = None, root=None) -> str:
     cur = []
 
     def flush():
-        s = _WS_RE.sub(" ", "".join(cur)).strip()
+        s = _collapse_ws("".join(cur)).strip()
         if s:
             lines.append(s)
         cur.clear()
@@ -657,7 +680,7 @@ def extract_anchor_pairs(html: str, base_url: str) -> "list[tuple[str, str]]":
         link = _absolutize(link, base_url)
         if not (link.startswith("http://") or link.startswith("https://")):
             continue
-        text = _WS_RE.sub(" ", _INNER_TAG_RE.sub("", m.group(2))).strip()
+        text = _collapse_ws(_INNER_TAG_RE.sub("", m.group(2))).strip()
         pairs.append((link, text))
     return pairs
 

@@ -238,3 +238,83 @@ class TestMetadata:
         m = H.extract_metadata("<body></body>", "https://a.com", 404)
         assert m["status_code"] == 404
         assert m["title"] is None
+
+
+# --------------------------------------------------------------------------
+# Guarded regex passes == their plain regex forms
+# --------------------------------------------------------------------------
+
+import re  # noqa: E402
+
+from hypothesis import given, settings  # noqa: E402
+from hypothesis import strategies as st  # noqa: E402
+
+# dense in the characters the guards test for: whitespace, markup, and
+# control / zero-width code points, plus the multi-character fragments
+# the guarded patterns match on
+_GUARD_TOKENS = (
+    list(" \t\r\n\f\v\\()[]!*#\x01\x7f\u200b")
+    + ["a", "b", "1", "  ", ")\n", ")\n\n", "**", "](", "\n#", "![",
+       "\\\n", "\n\n\n", ") [![", "**a**](", "[b]("]
+)
+_guard_text = st.lists(st.sampled_from(_GUARD_TOKENS), max_size=30).map("".join)
+_GUARD_SETTINGS = settings(max_examples=300, deadline=None)
+
+
+def _plain_fix_control_characters(text):
+    text = re.sub(r"[\x00-\x08\x0B\x0C\x0E-\x1F]", "", text)
+    for ch in H._INVISIBLE + ["\uFFFF", "\x00"]:
+        text = text.replace(ch, "")
+    return text
+
+
+def _plain_clean_content(md):
+    if md == "":
+        return ""
+    cleaned = md.replace("\r\n", "\n")
+    cleaned = cleaned.replace(")\\\n[", ")\n[")
+    cleaned = cleaned.replace("]\\\n(", "]\n(")
+    cleaned = re.sub(r"\\+\n", "\n", cleaned)
+    cleaned = re.sub(r"\)\n{1,2}(\*\*[^\]]+\*\*)\]\(", r") \1](", cleaned)
+    cleaned = re.sub(r"\)\n{1,2}\[([^\]]+)\]\(", r") [\1](", cleaned)
+    cleaned = re.sub(r"\) \[!\[", ")\n\n[![", cleaned)
+    cleaned = re.sub(r"\n{3,}", "\n\n", cleaned)
+    cleaned = re.sub(r"([^\n])\n(#+)", r"\1\n\n\2", cleaned)
+    cleaned = cleaned.strip() + "\n\n"
+    if not cleaned.endswith("\n\n"):
+        cleaned = cleaned.rstrip("\n") + "\n\n"
+    return cleaned
+
+
+class TestRegexGuards:
+    @_GUARD_SETTINGS
+    @given(_guard_text)
+    def test_collapse_ws(self, s):
+        assert H._collapse_ws(s) == re.sub(r"[ \t\r\n\f]+", " ", s)
+
+    @_GUARD_SETTINGS
+    @given(_guard_text)
+    def test_collapse_n3(self, s):
+        assert H._collapse_n3(s) == re.sub(r"\n{3,}", "\n\n", s)
+
+    @_GUARD_SETTINGS
+    @given(_guard_text)
+    def test_fix_control_characters(self, s):
+        assert H.fix_control_characters(s) == _plain_fix_control_characters(s)
+
+    @_GUARD_SETTINGS
+    @given(_guard_text)
+    def test_clean_content(self, s):
+        assert H.clean_content(s) == _plain_clean_content(s)
+
+    @_GUARD_SETTINGS
+    @given(_guard_text)
+    def test_space_run_needs_double_space(self, s):
+        # the inline-paragraph flush squeezes " +" only behind "  "
+        assert "  " in s or H._SPACES_RE.sub(" ", s) == s
+
+    def test_inline_run_spaces_squeezed(self):
+        # joining a div's inline run can create the space runs the
+        # flush squeezes
+        assert H.html_to_markdown("<div>a <span></span> c</div>") == "a c"
+        assert H.html_to_markdown("<div>a <b></b> <i></i> c</div>") == "a c"
