@@ -472,637 +472,640 @@ def run_crawl(
         if not (resume and os.path.exists(pages_path)):
             _write(prepare_pages(pages_df), pages_path)
         pages_prep = spark.read.parquet(pages_path)
-    # Size the corpus-scan splits to the cluster BEFORE the corpus's
-    # first action below (pages_urls write / cache materialization) —
-    # a persisted corpus keeps whatever partitioning its first scan
-    # had, so tuning after the fact would silently never engage for
-    # the cached path. Default 128 MB packs a modest corpus into a
-    # handful of splits and caps the extraction stage at that many
-    # Python workers regardless of core count (measured: a 377 MB
-    # corpus scanned as ~7 splits pinned wave extraction at ~7/16
-    # cores; 4->16-core scaling flatlined at ~2x). At 100-TB scale
-    # bytes/(3*cores) >> 128 MB and this is a no-op. Restored after
-    # the loop.
-    base_split = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    base_opencost = spark.conf.get("spark.sql.files.openCostInBytes")
-    _cores = spark.sparkContext.defaultParallelism
+    # Every session conf the crawl overrides, restored by the finally
+    # below whether the crawl returns or raises.
+    base_conf = {k: spark.conf.get(k) for k in (
+        "spark.sql.files.openCostInBytes",
+        "spark.sql.adaptive.enabled",
+        "spark.sql.shuffle.partitions")}
+    pages_urls = _rank_cache = None
+    wave_caches: list = []
     try:
-        _corpus_bytes = sum(
-            os.path.getsize(f[5:] if f.startswith("file:") else f)
-            for f in pages_prep.inputFiles())
-    except Exception:  # non-file source (in-memory test frame)
-        _corpus_bytes = 0
-    if _corpus_bytes:
-        # One task-wave per core: the scan stage fuses the corpus
-        # read, the broadcast fetch join AND the extraction UDF, and
-        # its per-task fixed cost (task-binary deserialize + Python
-        # worker dispatch) measured 165-400 ms/task on this box — at
-        # bytes/(3*cores) the 377 MB bench corpus became 160 tasks
-        # whose fixed cost (~26 s CPU per wave-stage) rivaled the
-        # extraction work itself. bytes/cores keeps every core busy
-        # exactly once per wave with per-task work >> per-task cost
-        # (interleaved A/B medians 52.5 s -> 36.4 s on the 7-wave
-        # bench crawl). At design scale this is a no-op: bytes/cores
-        # >> 128 MB caps at the default split size.
-        _split = min(128 * 1024 * 1024,
-                     max(4 * 1024 * 1024, _corpus_bytes // _cores))
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(_split))
-        # default 4 MB open-cost re-packs small files into few splits
-        spark.conf.set("spark.sql.files.openCostInBytes",
-                       str(512 * 1024))
-    if cache_pages:
-        # the fetch join scans the corpus every wave — keep it hot
-        # (memory+disk). At 100-TB scale this is the executors' cache
-        # of hot table partitions; disable for corpora >> cluster RAM.
-        pages_prep = pages_prep.persist()
-    # url-only corpus projection for the miss path of the fetch join:
-    # a few bytes/row, so the fat html column is scanned once per wave.
-    # Written on a pool thread — the scan is independent of the rest
-    # of preloop (politeness collapse, seed init, frontier count), so
-    # overlapping it takes its 1-2 s off the preloop critical path;
-    # joined just before the wave loop, where the projection is first
-    # read. Concurrent jobs on one SparkSession are supported (the
-    # wave loop's bloom/known appends already rely on this).
-    urls_path = os.path.join(state_dir, "pages_urls")
-    _urls_err: list = []
-
-    def _urls_work():
         try:
-            _write(pages_prep.select("url_canon"), urls_path)
-        except BaseException as exc:  # re-raised on join
-            _urls_err.append(exc)
+            _corpus_bytes = sum(
+                os.path.getsize(f[5:] if f.startswith("file:") else f)
+                for f in pages_prep.inputFiles())
+        except Exception:  # non-file source (in-memory test frame)
+            _corpus_bytes = 0
+        if _corpus_bytes:
+            # The scan split size is Spark's own: min(maxPartitionBytes,
+            # (bytes + files x openCost) / parallelism), which spreads
+            # the corpus over every core and charges each file its open
+            # cost. A bytes/cores override left that charge out: on the
+            # 16-file, 12 MB-per-file benchmark corpus at 4 cores it
+            # fitted 3 files per split (6 scan tasks, two rounds of
+            # 3-file tasks); Spark's sizing gives 3,4,4,4,1 files.
+            # The open cost stays lowered from 4 MB to 512 KB because it
+            # is charged per file when packing: once the 128 MB cap
+            # binds, at 4 MB a corpus of many small files is split by
+            # its file count rather than its bytes, into more tasks that
+            # each pay the stage's fixed per-task cost. It is set before
+            # the corpus's first action: a persisted corpus keeps the
+            # partitioning of its first scan.
+            spark.conf.set("spark.sql.files.openCostInBytes",
+                           str(512 * 1024))
+        if cache_pages:
+            # the fetch join scans the corpus every wave — keep it hot
+            # (memory+disk). At 100-TB scale this is the executors' cache
+            # of hot table partitions; disable for corpora >> cluster RAM.
+            pages_prep = pages_prep.persist()
+        # url-only corpus projection for the miss path of the fetch join:
+        # a few bytes/row, so the fat html column is scanned once per wave.
+        # Written on a pool thread — the scan is independent of the rest
+        # of preloop (politeness collapse, seed init, frontier count), so
+        # overlapping it takes its 1-2 s off the preloop critical path;
+        # joined just before the wave loop, where the projection is first
+        # read. Concurrent jobs on one SparkSession are supported (the
+        # wave loop's bloom/known appends already rely on this).
+        urls_path = os.path.join(state_dir, "pages_urls")
+        _urls_err: list = []
 
-    _urls_th = None
-    if not (resume and os.path.exists(urls_path)):
-        _urls_th = threading.Thread(target=_urls_work, daemon=True)
-        _urls_th.start()
+        def _urls_work():
+            try:
+                _write(pages_prep.select("url_canon"), urls_path)
+            except BaseException as exc:  # re-raised on join
+                _urls_err.append(exc)
 
-    D = params.max_depth
-    L = params.link_limit
-    ML = params.discovery_cap
-    pattern_udf = match_patterns_udf(params.patterns)
+        _urls_th = None
+        if not (resume and os.path.exists(urls_path)):
+            _urls_th = threading.Thread(target=_urls_work, daemon=True)
+            _urls_th.start()
 
-    # upper bound on any host's politeness budget — used with the
-    # frontier's distinct-host count to bound the scheduled-wave size
-    # before it is computed (broadcast-vs-shuffle gate). politeness_df
-    # is a broadcastable dim by design, so this one-time driver action
-    # is tiny at any scale.
-    max_budget = default_host_budget
-    # Per-host delays fold into the budget BEFORE the collapse below
-    # (semantics + citations: effective_politeness docstring).
-    pol_eff = effective_politeness(politeness_df, robots_df,
-                                   params.wave_window_ms,
-                                   default_host_budget)
-    pol_arg = pol_eff
-    if pol_eff is not None:
-        # Small dims (the norm: one row per throttled host) collapse to
-        # a driver dict -> literal MAP lookup in politeness_select: one
-        # collect here instead of a broadcast-build job EVERY wave.
-        # Large dims keep the broadcast-join path.
-        # coalesce(1) first: a limited collect over a many-partition
-        # dim otherwise runs Spark's incremental take — up to 4
-        # escalating jobs (1 -> 4 -> 16 -> all partitions) for a
-        # dim of a few dozen rows (measured 4.9 s of preloop on a
-        # cold session). One partition -> one job; the single-thread
-        # scan is bounded because this IS a dim (and the limit bounds
-        # driver memory regardless).
-        _rows = (pol_eff.select("host", "max_parallel")
-                 .coalesce(1).limit(1025).collect())
-        if len(_rows) <= 1024:
-            pol_arg = {r["host"]: int(r["max_parallel"]) for r in _rows
-                       if r["max_parallel"] is not None}
-            if pol_arg:
-                max_budget = max(max(pol_arg.values()), default_host_budget)
+        D = params.max_depth
+        L = params.link_limit
+        ML = params.discovery_cap
+        pattern_udf = match_patterns_udf(params.patterns)
+
+        # upper bound on any host's politeness budget — used with the
+        # frontier's distinct-host count to bound the scheduled-wave size
+        # before it is computed (broadcast-vs-shuffle gate). politeness_df
+        # is a broadcastable dim by design, so this one-time driver action
+        # is tiny at any scale.
+        max_budget = default_host_budget
+        # Per-host delays fold into the budget BEFORE the collapse below
+        # (semantics + citations: effective_politeness docstring).
+        pol_eff = effective_politeness(politeness_df, robots_df,
+                                       params.wave_window_ms,
+                                       default_host_budget)
+        pol_arg = pol_eff
+        if pol_eff is not None:
+            # Small dims (the norm: one row per throttled host) collapse to
+            # a driver dict -> literal MAP lookup in politeness_select: one
+            # collect here instead of a broadcast-build job EVERY wave.
+            # Large dims keep the broadcast-join path.
+            # coalesce(1) first: a limited collect over a many-partition
+            # dim otherwise runs Spark's incremental take — up to 4
+            # escalating jobs (1 -> 4 -> 16 -> all partitions) for a
+            # dim of a few dozen rows (measured 4.9 s of preloop on a
+            # cold session). One partition -> one job; the single-thread
+            # scan is bounded because this IS a dim (and the limit bounds
+            # driver memory regardless).
+            _rows = (pol_eff.select("host", "max_parallel")
+                     .coalesce(1).limit(1025).collect())
+            if len(_rows) <= 1024:
+                pol_arg = {r["host"]: int(r["max_parallel"]) for r in _rows
+                           if r["max_parallel"] is not None}
+                if pol_arg:
+                    max_budget = max(max(pol_arg.values()),
+                                     default_host_budget)
+            else:
+                _mb = pol_eff.agg(F.max("max_parallel")).first()[0]
+                if _mb is not None:
+                    max_budget = max(int(_mb), default_host_budget)
+
+        # ---- init / resume ------------------------------------------------
+        manifest = backend.read_manifest() if resume else []
+        seedset = _SeedSet(spark, seeds, state_dir, resume=bool(manifest),
+                           force_dim=seed_dim)
+        if manifest:
+            last = manifest[-1]
+            it0 = last["iter"] + 1
+            next_ord = last["next_ord"]
+            successes = last["successes"]
+            failures = last.get("failures")  # None on pre-upgrade state dirs
+            discovered_cnt = last["discovered_cnt"]
+            limit_reached = last["limit_reached"]
+            run_id = last["run_id"]
+            hosts_est = last.get("hosts_next")
+            prev_sched = last.get("scheduled")
+            frontier = _schedulable_frontier(
+                backend.read_wave("frontier", last["iter"],
+                                  FRONTIER_DISK_SCHEMA), seedset)
+            n_frontier = last["n_frontier_next"]
         else:
-            _mb = pol_eff.agg(F.max("max_parallel")).first()[0]
-            if _mb is not None:
-                max_budget = max(int(_mb), default_host_budget)
+            it0 = 0
+            next_ord = 0
+            successes = 0
+            failures = 0
+            limit_reached = False
+            run_id = uuid.uuid4().hex[:12]
+            frontier = seedset.frontier()
+            # literal-seed mode: the deduped canonical count is already
+            # driver-known — no count job (dim mode still counts)
+            n_frontier = (len(seedset.urls) if seedset.urls is not None
+                          else frontier.count())
+            discovered_cnt = 0
+            hosts_est = None
+            prev_sched = None
+        backend.run_id = run_id  # known-table namespace (parquet backend)
+        # crash-window hygiene: drop any wave tables newer than the last
+        # committed manifest line (all of them on a fresh start)
+        backend.prune_uncommitted(manifest[-1]["iter"] if manifest else -1)
 
-    # ---- init / resume ----------------------------------------------------
-    manifest = backend.read_manifest() if resume else []
-    seedset = _SeedSet(spark, seeds, state_dir, resume=bool(manifest),
-                       force_dim=seed_dim)
-    if manifest:
-        last = manifest[-1]
-        it0 = last["iter"] + 1
-        next_ord = last["next_ord"]
-        successes = last["successes"]
-        failures = last.get("failures")  # None on pre-upgrade state dirs
-        discovered_cnt = last["discovered_cnt"]
-        limit_reached = last["limit_reached"]
-        run_id = last["run_id"]
-        hosts_est = last.get("hosts_next")
-        prev_sched = last.get("scheduled")
-        frontier = _schedulable_frontier(
-            backend.read_wave("frontier", last["iter"],
-                              FRONTIER_DISK_SCHEMA), seedset)
-        n_frontier = last["n_frontier_next"]
-    else:
-        it0 = 0
-        next_ord = 0
-        successes = 0
-        failures = 0
-        limit_reached = False
-        run_id = uuid.uuid4().hex[:12]
-        frontier = seedset.frontier()
-        # literal-seed mode: the deduped canonical count is already
-        # driver-known — no count job (dim mode still counts)
-        n_frontier = (len(seedset.urls) if seedset.urls is not None
-                      else frontier.count())
-        discovered_cnt = 0
-        hosts_est = None
-        prev_sched = None
-    backend.run_id = run_id  # known-table namespace (parquet backend)
-    # crash-window hygiene: drop any wave tables newer than the last
-    # committed manifest line (all of them on a fresh start)
-    backend.prune_uncommitted(manifest[-1]["iter"] if manifest else -1)
+        # Bloom engages lazily: below BLOOM_THRESHOLD known keys the exact
+        # anti-join alone is faster than the probe shuffle; at the 10^10
+        # regime the filter prunes nearly all probe volume (SURVEY.md J2).
+        # The first activation bulk-builds from the known table (this also
+        # covers resume — no separate rebuild path needed).
+        # `seen_filter` picks the probabilistic pre-filter family the north
+        # rule names ("Bloom/cuckoo URL-seen"): "bloom" (default),
+        # "cuckoo" (cuckoo.py — deletable, 2-row probes), or "off". Both
+        # expose the same add/flag API, so everything below is
+        # filter-agnostic; trace equivalence bloom == cuckoo == off is
+        # pinned by tests (the exact anti-join always re-checks positives).
+        if seen_filter is None:
+            seen_filter = "bloom" if use_bloom else "off"
+        if seen_filter == "bloom":
+            bloom = BloomState(os.path.join(state_dir, "bloom"))
+        elif seen_filter == "cuckoo":
+            bloom = CuckooState(os.path.join(state_dir, "cuckoo"))
+        elif seen_filter == "off":
+            bloom = None
+        else:
+            raise ValueError(f"unknown seen_filter {seen_filter!r}")
+        bloom_built = False
+        # incremental bloom adds run on a background thread: the add only
+        # has to complete before the NEXT wave's probe executes, so it
+        # overlaps the next wave's (much longer) fetch+extract job instead
+        # of serializing ~0.3-0.5s of fixed latency into every wave
+        bloom_pending: list = []
+        bloom_errors: list = []
 
-    # Bloom engages lazily: below BLOOM_THRESHOLD known keys the exact
-    # anti-join alone is faster than the probe shuffle; at the 10^10
-    # regime the filter prunes nearly all probe volume (SURVEY.md J2).
-    # The first activation bulk-builds from the known table (this also
-    # covers resume — no separate rebuild path needed).
-    # `seen_filter` picks the probabilistic pre-filter family the north
-    # rule names ("Bloom/cuckoo URL-seen"): "bloom" (default),
-    # "cuckoo" (cuckoo.py — deletable, 2-row probes), or "off". Both
-    # expose the same add/flag API, so everything below is
-    # filter-agnostic; trace equivalence bloom == cuckoo == off is
-    # pinned by tests (the exact anti-join always re-checks positives).
-    if seen_filter is None:
-        seen_filter = "bloom" if use_bloom else "off"
-    if seen_filter == "bloom":
-        bloom = BloomState(os.path.join(state_dir, "bloom"))
-    elif seen_filter == "cuckoo":
-        bloom = CuckooState(os.path.join(state_dir, "cuckoo"))
-    elif seen_filter == "off":
-        bloom = None
-    else:
-        raise ValueError(f"unknown seen_filter {seen_filter!r}")
-    bloom_built = False
-    # incremental bloom adds run on a background thread: the add only
-    # has to complete before the NEXT wave's probe executes, so it
-    # overlaps the next wave's (much longer) fetch+extract job instead
-    # of serializing ~0.3-0.5s of fixed latency into every wave
-    bloom_pending: list = []
-    bloom_errors: list = []
+        def _bloom_add_async(df):
+            def work():
+                try:
+                    bloom.add(df)
+                except BaseException as e:  # noqa: BLE001 — re-raised below
+                    bloom_errors.append(e)
+            th = threading.Thread(target=work, daemon=True)
+            th.start()
+            bloom_pending.append(th)
 
-    def _bloom_add_async(df):
-        def work():
-            try:
-                bloom.add(df)
-            except BaseException as e:  # noqa: BLE001 — re-raised below
-                bloom_errors.append(e)
-        th = threading.Thread(target=work, daemon=True)
-        th.start()
-        bloom_pending.append(th)
+        def _bloom_join():
+            """A silently failed add would turn seen URLs into bloom false
+            negatives, which the anti-join TRUSTS — so failures propagate."""
+            while bloom_pending:
+                bloom_pending.pop().join()
+            if bloom_errors:
+                raise bloom_errors[0]
 
-    def _bloom_join():
-        """A silently failed add would turn seen URLs into bloom false
-        negatives, which the anti-join TRUSTS — so failures propagate."""
-        while bloom_pending:
-            bloom_pending.pop().join()
-        if bloom_errors:
-            raise bloom_errors[0]
+        def _known_files_df() -> "DataFrame | None":
+            """The mapper's `links` set = all capped candidates ever
+            emitted. Each appears exactly once across frontier files with
+            is_new=true (deferred re-appearances are flagged false), so
+            the frontier table doubles as the known table — one write per
+            wave, two roles. Duplicates would be harmless anyway (the
+            consumer is a LEFT ANTI join)."""
+            raw = backend.read_all("frontier", FRONTIER_DISK_SCHEMA)
+            if raw is None:
+                return None
+            return raw.filter("is_new").select("url", "url_hash")
 
-    def _known_files_df() -> "DataFrame | None":
-        """The mapper's `links` set = all capped candidates ever
-        emitted. Each appears exactly once across frontier files with
-        is_new=true (deferred re-appearances are flagged false), so
-        the frontier table doubles as the known table — one write per
-        wave, two roles. Duplicates would be harmless anyway (the
-        consumer is a LEFT ANTI join)."""
-        raw = backend.read_all("frontier", FRONTIER_DISK_SCHEMA)
-        if raw is None:
-            return None
-        return raw.filter("is_new").select("url", "url_hash")
+        # ---- bucketed known-state table (module docstring scale note) -----
+        # Engaged above KNOWN_TABLE_THRESHOLD (or forced by bucket_known):
+        # the cumulative known set lives in a parquet table bucketed on
+        # `url`, so the per-wave exact anti-join reads it bucket-aligned —
+        # candidates exchange into the table's partitioning, the known
+        # side NEVER re-shuffles, and per-wave anti-join cost stops
+        # growing with wave count. The table is derived state: (re)built
+        # from committed frontier waves on engage/resume (overwrite also
+        # discards any crash-orphaned append), appended per committed
+        # wave, compacted into the next generation every
+        # KNOWN_COMPACT_EVERY appends. Storage lives on the state backend
+        # (StateBackend.known_*).
 
-    # ---- bucketed known-state table (module docstring scale note) ---------
-    # Engaged above KNOWN_TABLE_THRESHOLD (or forced by bucket_known):
-    # the cumulative known set lives in a parquet table bucketed on
-    # `url`, so the per-wave exact anti-join reads it bucket-aligned —
-    # candidates exchange into the table's partitioning, the known
-    # side NEVER re-shuffles, and per-wave anti-join cost stops
-    # growing with wave count. The table is derived state: (re)built
-    # from committed frontier waves on engage/resume (overwrite also
-    # discards any crash-orphaned append), appended per committed
-    # wave, compacted into the next generation every
-    # KNOWN_COMPACT_EVERY appends. Storage lives on the state backend
-    # (StateBackend.known_*).
+        def _known_engage() -> None:
+            src = _known_files_df()
+            if src is None:
+                return
+            backend.known_rebuild(src)
 
-    def _known_engage() -> None:
-        src = _known_files_df()
-        if src is None:
-            return
-        backend.known_rebuild(src)
+        # like the bloom adds, the known append only has to land before
+        # the NEXT wave's anti-join reads the table — run it on a
+        # background thread so it overlaps that wave's (much longer)
+        # fetch+extract job instead of adding fixed latency to every wave.
+        # The join discipline (joined before every known_df() use and at
+        # run end) serializes appends, so the bucketed table never sees
+        # two concurrent writers; failures propagate — a lost append would
+        # silently drop discoveries via the anti-join.
+        known_pending: list = []
+        known_errors: list = []
 
-    # like the bloom adds, the known append only has to land before
-    # the NEXT wave's anti-join reads the table — run it on a
-    # background thread so it overlaps that wave's (much longer)
-    # fetch+extract job instead of adding fixed latency to every wave.
-    # The join discipline (joined before every known_df() use and at
-    # run end) serializes appends, so the bucketed table never sees
-    # two concurrent writers; failures propagate — a lost append would
-    # silently drop discoveries via the anti-join.
-    known_pending: list = []
-    known_errors: list = []
+        def _known_append_async(df):
+            def work():
+                try:
+                    backend.known_append(df)
+                except BaseException as e:  # noqa: BLE001 — re-raised below
+                    known_errors.append(e)
+            th = threading.Thread(target=work, daemon=True)
+            th.start()
+            known_pending.append(th)
 
-    def _known_append_async(df):
-        def work():
-            try:
-                backend.known_append(df)
-            except BaseException as e:  # noqa: BLE001 — re-raised below
-                known_errors.append(e)
-        th = threading.Thread(target=work, daemon=True)
-        th.start()
-        known_pending.append(th)
+        def _known_join():
+            while known_pending:
+                known_pending.pop().join()
+            if known_errors:
+                raise known_errors[0]
 
-    def _known_join():
-        while known_pending:
-            known_pending.pop().join()
-        if known_errors:
-            raise known_errors[0]
+        def known_df() -> "DataFrame | None":
+            if backend.known_active():
+                return backend.known_read()
+            return _known_files_df()
 
-    def known_df() -> "DataFrame | None":
-        if backend.known_active():
-            return backend.known_read()
-        return _known_files_df()
+        # Seed-membership semantics (why seeds are excluded from the known
+        # anti-join but dropped from the next frontier) live on _SeedSet.
 
-    # Seed-membership semantics (why seeds are excluded from the known
-    # anti-join but dropped from the next frontier) live on _SeedSet.
+        # ---- wave loop ----------------------------------------------------
+        if _urls_th is not None:
+            _urls_th.join()
+            if _urls_err:
+                raise _urls_err[0]
+        pages_urls = spark.read.parquet(urls_path).persist()
+        it = it0
+        t_loop = time.time()
+        # AQE off for the wave loop: adaptive execution materializes every
+        # exchange as a query stage with a driver round-trip — pure fixed
+        # latency on iterative micro-waves. The two things AQE would buy
+        # are already done explicitly here: shuffle partitions are sized to
+        # the wave (wave_shuffle below) and hot-host skew is pre-salted
+        # (operators/frontier.py). Restored on exit.
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        cores = spark.sparkContext.defaultParallelism
+        t_start = time.time()
+        deadline_hit = False
+        while n_frontier > 0 and it < params.max_waves:
+            if L > 0 and successes >= L:
+                break
+            if (params.max_seconds is not None
+                    and time.time() - t_start > params.max_seconds):
+                # L6 wall-clock cap (crawl/service.go:323-331): stop
+                # between waves; committed state stays resumable
+                deadline_hit = True
+                break
+            t0 = time.time()
 
-    # ---- wave loop ----------------------------------------------------------
-    if _urls_th is not None:
-        _urls_th.join()
-        if _urls_err:
-            raise _urls_err[0]
-    pages_urls = spark.read.parquet(urls_path).persist()
-    it = it0
-    t_loop = time.time()
-    base_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    base_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    # AQE off for the wave loop: adaptive execution materializes every
-    # exchange as a query stage with a driver round-trip — pure fixed
-    # latency on iterative micro-waves. The two things AQE would buy
-    # are already done explicitly here: shuffle partitions are sized to
-    # the wave (wave_shuffle below) and hot-host skew is pre-salted
-    # (operators/frontier.py). Restored after the loop.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    cores = spark.sparkContext.defaultParallelism
-    t_start = time.time()
-    deadline_hit = False
-    while n_frontier > 0 and it < params.max_waves:
-        if L > 0 and successes >= L:
-            break
-        if (params.max_seconds is not None
-                and time.time() - t_start > params.max_seconds):
-            # L6 wall-clock cap (crawl/service.go:323-331): stop
-            # between waves; committed state stays resumable
-            deadline_hit = True
-            break
-        t0 = time.time()
+            # explicit shuffle-partition control per wave (north_rule):
+            # micro-waves pay per-task scheduling latency on every one of
+            # their ~10 shuffle stages — size the partition count to the
+            # wave, not the cluster. The heavy extraction stage is
+            # parallelized separately by an explicit repartition.
+            # Floor at cores/4, not cores: the wave-loop shuffles move
+            # O(wave) tiny frontier rows, and each shuffle task pays the
+            # same fixed deserialize/dispatch cost as above (~0.37 s/task
+            # measured on the frontier-commit stage — 83% of its task
+            # time at 64 partitions). Extraction parallelism is ruled by
+            # the corpus-scan splits and the explicit repartition of
+            # `scheduled`, not by this; large frontiers still scale via
+            # the rows term (10^7 frontier rows -> 3333 partitions).
+            wave_shuffle = min(max(1, cores // 4, n_frontier // 3000),
+                               4 * cores)
+            spark.conf.set("spark.sql.shuffle.partitions", str(wave_shuffle))
 
-        # explicit shuffle-partition control per wave (north_rule):
-        # micro-waves pay per-task scheduling latency on every one of
-        # their ~10 shuffle stages — size the partition count to the
-        # wave, not the cluster. The heavy extraction stage is
-        # parallelized separately by an explicit repartition.
-        # Floor at cores/4, not cores: the wave-loop shuffles move
-        # O(wave) tiny frontier rows, and each shuffle task pays the
-        # same fixed deserialize/dispatch cost as above (~0.37 s/task
-        # measured on the frontier-commit stage — 83% of its task
-        # time at 64 partitions). Extraction parallelism is ruled by
-        # the corpus-scan splits and the explicit repartition of
-        # `scheduled`, not by this; large frontiers still scale via
-        # the rows term (10^7 frontier rows -> 3333 partitions).
-        wave_shuffle = min(max(1, cores // 4, n_frontier // 3000), 4 * cores)
-        spark.conf.set("spark.sql.shuffle.partitions", str(wave_shuffle))
+            # Driver-known bound on this wave's SCHEDULED row count, before
+            # anything is computed: <= n_frontier, <= remaining link
+            # budget, and <= distinct frontier hosts (prev wave's fused
+            # aggregate) x max host budget. Decides the fetch-join physical
+            # strategy and (tightened by the prev wave's actual width, a
+            # sound predictor because BFS discovery fans out <= ~10
+            # links/page) which global-rank path to take — gating on
+            # n_frontier alone would broadcast a huge scheduled frame when
+            # hosts are many (driver OOM), shuffle needlessly when a huge
+            # frontier collapses to a tiny polite wave, and pay the
+            # two-phase rank's extra exchanges + broadcast-build job on
+            # every steady-state micro-wave.
+            sched_bound = n_frontier
+            if L > 0:
+                sched_bound = min(sched_bound, max(L - successes, 0))
+            if hosts_est:
+                # +10% for approx_count_distinct error, +16 slack
+                sched_bound = min(sched_bound,
+                                  int(hosts_est * 1.1 + 16) * max_budget)
+            rank_hint = sched_bound
+            if prev_sched is not None:
+                # x4 covers every observed inter-wave growth ratio; an
+                # underestimate only means a single-partition sort of a
+                # <=4x-larger-than-hinted wave (slower, never wrong)
+                rank_hint = min(rank_hint, max(prev_sched * 4, 4096))
 
-        # Driver-known bound on this wave's SCHEDULED row count, before
-        # anything is computed: <= n_frontier, <= remaining link
-        # budget, and <= distinct frontier hosts (prev wave's fused
-        # aggregate) x max host budget. Decides the fetch-join physical
-        # strategy and (tightened by the prev wave's actual width, a
-        # sound predictor because BFS discovery fans out <= ~10
-        # links/page) which global-rank path to take — gating on
-        # n_frontier alone would broadcast a huge scheduled frame when
-        # hosts are many (driver OOM), shuffle needlessly when a huge
-        # frontier collapses to a tiny polite wave, and pay the
-        # two-phase rank's extra exchanges + broadcast-build job on
-        # every steady-state micro-wave.
-        sched_bound = n_frontier
-        if L > 0:
-            sched_bound = min(sched_bound, max(L - successes, 0))
-        if hosts_est:
-            # +10% for approx_count_distinct error, +16 slack
-            sched_bound = min(sched_bound,
-                              int(hosts_est * 1.1 + 16) * max_budget)
-        rank_hint = sched_bound
-        if prev_sched is not None:
-            # x4 covers every observed inter-wave growth ratio; an
-            # underestimate only means a single-partition sort of a
-            # <=4x-larger-than-hinted wave (slower, never wrong)
-            rank_hint = min(rank_hint, max(prev_sched * 4, 4096))
+            # 1. politeness selection (salted two-phase per-host top-B
+            # above the salt threshold; plain per-host window below),
+            # cached across the wave's two commits
+            selected, deferred, _rank_cache = politeness_select(
+                frontier, pol_arg, default_host_budget,
+                hint_count=n_frontier, persist=True)
 
-        # 1. politeness selection (salted two-phase per-host top-B
-        # above the salt threshold; plain per-host window below),
-        # cached across the wave's two commits
-        selected, deferred, _rank_cache = politeness_select(
-            frontier, pol_arg, default_host_budget,
-            hint_count=n_frontier, persist=True)
+            # 2. global rank in crawl order K; budget cut; crawl_ord
+            wave_caches = []
+            selected = ordered_row_number(
+                selected, order_exprs(), "_grank", hint_count=rank_hint,
+                cache_out=wave_caches)
+            if L > 0:
+                rem = L - successes
+                overflow = (selected.filter(F.col("_grank") > rem)
+                            .drop("_grank"))
+                deferred = deferred.unionByName(overflow)
+                selected = selected.filter(F.col("_grank") <= rem)
+            scheduled = (selected
+                         .withColumn("crawl_ord",
+                                     (F.lit(next_ord) + F.col("_grank") - 1))
+                         .drop("_grank")
+                         .withColumn("iter", F.lit(it)))
 
-        # 2. global rank in crawl order K; budget cut; crawl_ord
-        wave_caches = []
-        selected = ordered_row_number(
-            selected, order_exprs(), "_grank", hint_count=rank_hint,
-            cache_out=wave_caches)
-        if L > 0:
-            rem = L - successes
-            overflow = selected.filter(F.col("_grank") > rem).drop("_grank")
-            deferred = deferred.unionByName(overflow)
-            selected = selected.filter(F.col("_grank") <= rem)
-        scheduled = (selected
-                     .withColumn("crawl_ord",
-                                 (F.lit(next_ord) + F.col("_grank") - 1))
-                     .drop("_grank")
-                     .withColumn("iter", F.lit(it)))
-
-        # 3. per-row flags: seed pattern gate + robots page gate
-        scheduled = scheduled.withColumn(
-            "pattern_ok",
-            F.when(F.col("parent_ord") == -1, pattern_udf(F.col("url")))
-            .otherwise(F.lit(True)))
-        if robots_df is not None:
-            rules = robots_df.select(
-                "host", "allow_prefixes", "disallow_prefixes")
-            scheduled = scheduled.join(F.broadcast(rules), "host", "left")
+            # 3. per-row flags: seed pattern gate + robots page gate
             scheduled = scheduled.withColumn(
-                "robots_ok",
-                robots_allowed_udf(F.col("url"), F.col("disallow_prefixes"),
-                                   F.col("allow_prefixes"))
-            ).drop("allow_prefixes", "disallow_prefixes")
-        else:
-            scheduled = scheduled.withColumn("robots_ok", F.lit(True))
+                "pattern_ok",
+                F.when(F.col("parent_ord") == -1, pattern_udf(F.col("url")))
+                .otherwise(F.lit(True)))
+            if robots_df is not None:
+                rules = robots_df.select(
+                    "host", "allow_prefixes", "disallow_prefixes")
+                scheduled = scheduled.join(F.broadcast(rules), "host", "left")
+                scheduled = scheduled.withColumn(
+                    "robots_ok",
+                    robots_allowed_udf(F.col("url"),
+                                       F.col("disallow_prefixes"),
+                                       F.col("allow_prefixes"))
+                ).drop("allow_prefixes", "disallow_prefixes")
+            else:
+                scheduled = scheduled.withColumn("robots_ok", F.lit(True))
 
-        # 4. fetch (corpus join) + extraction, committed to state.
-        # The global-rank window leaves `scheduled` in ONE partition —
-        # repartition first or extraction runs on a single core.
-        # `scheduled` appears 3x in the fetch-join plan (hits broadcast,
-        # miss probe, hit-url broadcast): persist it so the politeness/
-        # rank window chain materializes once per wave, not per
-        # occurrence.
-        scheduled = scheduled.repartition(
-            max(8, spark.sparkContext.defaultParallelism), "url").persist()
-        wave_caches.append(scheduled)
+            # 4. fetch (corpus join) + extraction, committed to state.
+            # The global-rank window leaves `scheduled` in ONE partition —
+            # repartition first or extraction runs on a single core.
+            # `scheduled` appears 3x in the fetch-join plan (hits broadcast,
+            # miss probe, hit-url broadcast): persist it so the politeness/
+            # rank window chain materializes once per wave, not per
+            # occurrence.
+            scheduled = scheduled.repartition(
+                max(8, spark.sparkContext.defaultParallelism), "url").persist()
+            wave_caches.append(scheduled)
 
-        # J3 scrape cache: only successful prior rows are cached
-        # (ScrapeWithCache caches after isValidResult,
-        # scrape/service.go:46-48); pattern-skipped seeds never reach
-        # the cache path (streamCrawl checks the pattern first, 470).
-        cache_hits = None
-        if scrape_cache is not None and not params.fresh:
-            cacheable = scheduled.filter(F.col("pattern_ok"))
-            c = scrape_cache.filter("success").select(
-                "url", "status_code", "title", "markdown", "text",
-                "links", "discovery", "discovered", "metadata", "html")
-            hit = c.join(
-                F.broadcast(cacheable.select(
+            # J3 scrape cache: only successful prior rows are cached
+            # (ScrapeWithCache caches after isValidResult,
+            # scrape/service.go:46-48); pattern-skipped seeds never reach
+            # the cache path (streamCrawl checks the pattern first, 470).
+            cache_hits = None
+            if scrape_cache is not None and not params.fresh:
+                cacheable = scheduled.filter(F.col("pattern_ok"))
+                c = scrape_cache.filter("success").select(
+                    "url", "status_code", "title", "markdown", "text",
+                    "links", "discovery", "discovered", "metadata", "html")
+                hit = c.join(
+                    F.broadcast(cacheable.select(
+                        "url", "iter", "depth", "crawl_ord", "seed_rank",
+                        "seed_host", "host", "url_hash", "parent_ord",
+                        "link_pos", "attempt")), "url", "inner")
+                cache_hits = hit.select(
                     "url", "iter", "depth", "crawl_ord", "seed_rank",
                     "seed_host", "host", "url_hash", "parent_ord",
-                    "link_pos", "attempt")), "url", "inner")
-            cache_hits = hit.select(
-                "url", "iter", "depth", "crawl_ord", "seed_rank",
-                "seed_host", "host", "url_hash", "parent_ord",
-                "link_pos", "attempt", "status_code",
-                F.lit(True).alias("success"),
-                F.lit(None).cast("string").alias("error"),
-                "title", "markdown", "text", "links", "discovery",
-                "discovered", "metadata", "html")
-            scheduled = scheduled.join(
-                F.broadcast(cache_hits.select("url")), "url", "left_anti")
+                    "link_pos", "attempt", "status_code",
+                    F.lit(True).alias("success"),
+                    F.lit(None).cast("string").alias("error"),
+                    "title", "markdown", "text", "links", "discovery",
+                    "discovered", "metadata", "html")
+                scheduled = scheduled.join(
+                    F.broadcast(cache_hits.select("url")), "url", "left_anti")
 
-        # broadcast-semi strategy while the politeness-capped SCHEDULED
-        # wave is broadcast-sized (sched_bound, computed above);
-        # shuffle-hash beyond (never sorts the corpus). With an
-        # injected transport the corpus join is bypassed entirely (the
-        # live-path seam).
-        extractor = make_extractor(params.include_html, params.fresh)
-        if transport is not None:
-            fetched = transport_fetch(scheduled, transport)
-            results = fetched.mapInPandas(extractor, RESULT_SCHEMA)
-        elif sched_bound <= SMALL_WAVE_ROWS:
-            # r6: misses never cross the Python boundary — their
-            # result rows are pure codegen expressions of the
-            # scheduled row (miss_results == the extractor's
-            # html-is-None branch, equality-tested), so the
-            # extraction UDF runs on hit rows only.
-            hits, miss = fetch_join_split(
-                scheduled, pages_prep, pages_urls=pages_urls,
-                broadcast_urls=bool(
-                    _corpus_bytes
-                    and _corpus_bytes <= CORPUS_URLS_BROADCAST_BYTES))
-            results = (hits.mapInPandas(extractor, RESULT_SCHEMA)
-                       .unionByName(miss_results(miss, params.fresh)))
-        else:
-            fetched = fetch_join(scheduled, pages_prep, small_wave=False,
-                                 pages_urls=pages_urls)
-            results = fetched.mapInPandas(extractor, RESULT_SCHEMA)
-        if cache_hits is not None:
-            results = results.unionByName(
-                cache_hits.select(*[f.name for f in RESULT_SCHEMA.fields]))
-        t_fetch = time.time()
-        # per-wave aggregates ride the write actions as observed
-        # metrics — zero standalone aggregation jobs per wave (every
-        # saved action is ~0.5-1s of fixed, non-scaling driver latency)
-        obs_res = Observation(f"res_{run_id}_{it}")
-        results = results.observe(
-            obs_res, F.count(F.lit(1)).alias("sched"),
-            F.sum(F.col("success").cast("long")).alias("succ"),
-            F.sum(F.col("error").isNotNull().cast("long")).alias("fail"))
-        backend.write_wave("results", it, results)
-        res_m = obs_res.get
-        stage_ms = {"fetch_extract": int((time.time() - t_fetch) * 1000)}
-        res_df = backend.read_wave("results", it, RESULT_SCHEMA)
+            # broadcast-semi strategy while the politeness-capped SCHEDULED
+            # wave is broadcast-sized (sched_bound, computed above);
+            # shuffle-hash beyond (never sorts the corpus). With an
+            # injected transport the corpus join is bypassed entirely (the
+            # live-path seam).
+            extractor = make_extractor(params.include_html, params.fresh)
+            if transport is not None:
+                fetched = transport_fetch(scheduled, transport)
+                results = fetched.mapInPandas(extractor, RESULT_SCHEMA)
+            elif sched_bound <= SMALL_WAVE_ROWS:
+                # r6: misses never cross the Python boundary — their
+                # result rows are pure codegen expressions of the
+                # scheduled row (miss_results == the extractor's
+                # html-is-None branch, equality-tested), so the
+                # extraction UDF runs on hit rows only.
+                hits, miss = fetch_join_split(
+                    scheduled, pages_prep, pages_urls=pages_urls,
+                    broadcast_urls=bool(
+                        _corpus_bytes
+                        and _corpus_bytes <= CORPUS_URLS_BROADCAST_BYTES))
+                results = (hits.mapInPandas(extractor, RESULT_SCHEMA)
+                           .unionByName(miss_results(miss, params.fresh)))
+            else:
+                fetched = fetch_join(scheduled, pages_prep, small_wave=False,
+                                     pages_urls=pages_urls)
+                results = fetched.mapInPandas(extractor, RESULT_SCHEMA)
+            if cache_hits is not None:
+                results = results.unionByName(
+                    cache_hits.select(*[f.name for f in RESULT_SCHEMA.fields]))
+            t_fetch = time.time()
+            # per-wave aggregates ride the write actions as observed
+            # metrics — zero standalone aggregation jobs per wave (every
+            # saved action is ~0.5-1s of fixed, non-scaling driver latency)
+            obs_res = Observation(f"res_{run_id}_{it}")
+            results = results.observe(
+                obs_res, F.count(F.lit(1)).alias("sched"),
+                F.sum(F.col("success").cast("long")).alias("succ"),
+                F.sum(F.col("error").isNotNull().cast("long")).alias("fail"))
+            backend.write_wave("results", it, results)
+            res_m = obs_res.get
+            # manifest phase timings: disjoint, consecutive intervals
+            t_disc = time.time()
+            stage_ms = {"fetch_extract": int((t_disc - t_fetch) * 1000)}
+            res_df = backend.read_wave("results", it, RESULT_SCHEMA)
 
-        if collect_lineage:
-            lin = (res_df.groupBy(F.spark_partition_id().alias("partition_id"))
-                   .agg(F.count("*").alias("rows"))
-                   .select(F.lit(run_id).alias("run_id"),
-                           F.lit(it).alias("iter"),
-                           F.lit("extract").alias("stage"),
-                           "partition_id", "rows"))
-            backend.write_wave("lineage", it, lin)
+            if collect_lineage:
+                lin = (res_df
+                       .groupBy(F.spark_partition_id().alias("partition_id"))
+                       .agg(F.count("*").alias("rows"))
+                       .select(F.lit(run_id).alias("run_id"),
+                               F.lit(it).alias("iter"),
+                               F.lit("extract").alias("stage"),
+                               "partition_id", "rows"))
+                backend.write_wave("lineage", it, lin)
 
-        # 5. discovery: emission filters -> known-dedup -> cap, fused
-        # with the frontier commit: ONE write (deferred is_new=false ∪
-        # new candidates is_new=true) + ONE count job per wave.
-        t_s = time.time()
-        n_new = 0
-        if not limit_reached:
-            cand = expand_candidates(
-                res_df, params.include_subdomains, params.patterns,
-                robots_df, max_depth=D)
-            # the anti-join below must see every known append issued
-            _known_join()
-            if (bucket_known is not False
-                    and not backend.known_active()
-                    and (bucket_known is True
-                         or discovered_cnt > KNOWN_TABLE_THRESHOLD)):
-                _known_engage()
-            kdf = known_df()
-            if kdf is not None:
-                bloom_active = bloom is not None and \
-                    discovered_cnt > BLOOM_THRESHOLD
-                # the probe below must see every add issued so far
-                _bloom_join()
-                if bloom_active and not bloom_built:
-                    bloom.add(kdf.select("url_hash"))
-                    bloom_built = True
-                if bloom_active:
-                    flagged = bloom.flag(cand)
-                    fresh_c = flagged.filter(~F.col("_maybe_seen")).drop(
-                        "_maybe_seen")
-                    maybe = flagged.filter(F.col("_maybe_seen")).drop(
-                        "_maybe_seen")
-                    maybe = maybe.join(kdf.select("url"), "url", "left_anti")
-                    cand = fresh_c.unionByName(maybe)
-                else:
-                    cand = cand.join(kdf.select("url"), "url", "left_anti")
-            # intra-wave first-seen dedup (J5): min discovery order
-            # wins. Expressed as min(struct) — NOT a row_number window
-            # — because struct-min has a map-side partial aggregate:
-            # each task collapses its local duplicates before the
-            # exchange, so the shuffle carries ~distinct-url volume
-            # instead of every discovered link (a window must shuffle
-            # all rows first). (parent_ord, link_pos) is unique per
-            # candidate row and leads the struct, so lexicographic
-            # struct ordering == the discovery order and the result is
-            # deterministic and identical to the row_number form.
-            other = [c for c in cand.columns
-                     if c not in ("url", "parent_ord", "link_pos")]
-            cand = (cand.groupBy("url")
-                    .agg(F.min(F.struct("parent_ord", "link_pos",
-                                        *other)).alias("_first"))
-                    .select("url", "_first.*"))
-            # discovery cap (mapper limitReached)
-            if ML is not None:
-                avail = ML - discovered_cnt
-                cand = ordered_row_number(
-                    cand, ["parent_ord", "link_pos"], "_dord",
-                    cache_out=wave_caches)
-                cand = cand.filter(F.col("_dord") <= avail).drop("_dord")
-            new_cand = cand.select(*FRONTIER_SCHEMA.fieldNames())
-        else:
-            new_cand = spark.createDataFrame([], FRONTIER_SCHEMA)
+            # 5. discovery: emission filters -> known-dedup -> cap, fused
+            # with the frontier commit: ONE write (deferred is_new=false ∪
+            # new candidates is_new=true) + ONE count job per wave.
+            n_new = 0
+            if not limit_reached:
+                cand = expand_candidates(
+                    res_df, params.include_subdomains, params.patterns,
+                    robots_df, max_depth=D)
+                # the anti-join below must see every known append issued
+                _known_join()
+                if (bucket_known is not False
+                        and not backend.known_active()
+                        and (bucket_known is True
+                             or discovered_cnt > KNOWN_TABLE_THRESHOLD)):
+                    _known_engage()
+                kdf = known_df()
+                if kdf is not None:
+                    bloom_active = bloom is not None and \
+                        discovered_cnt > BLOOM_THRESHOLD
+                    # the probe below must see every add issued so far
+                    _bloom_join()
+                    if bloom_active and not bloom_built:
+                        bloom.add(kdf.select("url_hash"))
+                        bloom_built = True
+                    if bloom_active:
+                        flagged = bloom.flag(cand)
+                        fresh_c = flagged.filter(~F.col("_maybe_seen")).drop(
+                            "_maybe_seen")
+                        maybe = flagged.filter(F.col("_maybe_seen")).drop(
+                            "_maybe_seen")
+                        maybe = maybe.join(kdf.select("url"), "url",
+                                           "left_anti")
+                        cand = fresh_c.unionByName(maybe)
+                    else:
+                        cand = cand.join(kdf.select("url"), "url", "left_anti")
+                # intra-wave first-seen dedup (J5): min discovery order
+                # wins. Expressed as min(struct) — NOT a row_number window
+                # — because struct-min has a map-side partial aggregate:
+                # each task collapses its local duplicates before the
+                # exchange, so the shuffle carries ~distinct-url volume
+                # instead of every discovered link (a window must shuffle
+                # all rows first). (parent_ord, link_pos) is unique per
+                # candidate row and leads the struct, so lexicographic
+                # struct ordering == the discovery order and the result is
+                # deterministic and identical to the row_number form.
+                other = [c for c in cand.columns
+                         if c not in ("url", "parent_ord", "link_pos")]
+                cand = (cand.groupBy("url")
+                        .agg(F.min(F.struct("parent_ord", "link_pos",
+                                            *other)).alias("_first"))
+                        .select("url", "_first.*"))
+                # discovery cap (mapper limitReached)
+                if ML is not None:
+                    avail = ML - discovered_cnt
+                    cand = ordered_row_number(
+                        cand, ["parent_ord", "link_pos"], "_dord",
+                        cache_out=wave_caches)
+                    cand = cand.filter(F.col("_dord") <= avail).drop("_dord")
+                new_cand = cand.select(*FRONTIER_SCHEMA.fieldNames())
+            else:
+                new_cand = spark.createDataFrame([], FRONTIER_SCHEMA)
 
-        # F9 retry: a failed fetch releases its budget slot and the URL
-        # re-enters the frontier (delete(processed,u) + releaseSlot,
-        # crawl/service.go:564-571) up to max_retries total attempts
-        # (TASK_MAX_RETRIES, config.go:90). Retry rows keep their
-        # original crawl-order key (depth, parent_ord, link_pos) and
-        # bypass the known-set anti-join (is_new=false: the processed
-        # map and the mapper's discovery dedup are separate states).
-        retry_rows = None
-        if params.retry_failures:
-            retry_rows = (res_df.filter(
-                F.col("error").isNotNull()
-                & (F.col("attempt") < params.max_retries - 1))
-                .select("url", "host", "url_hash", "depth", "parent_ord",
-                        "link_pos", "seed_rank", "seed_host",
-                        F.lit(0.0).alias("priority"),
-                        (F.col("attempt") + 1).alias("attempt")))
+            # F9 retry: a failed fetch releases its budget slot and the URL
+            # re-enters the frontier (delete(processed,u) + releaseSlot,
+            # crawl/service.go:564-571) up to max_retries total attempts
+            # (TASK_MAX_RETRIES, config.go:90). Retry rows keep their
+            # original crawl-order key (depth, parent_ord, link_pos) and
+            # bypass the known-set anti-join (is_new=false: the processed
+            # map and the mapper's discovery dedup are separate states).
+            retry_rows = None
+            if params.retry_failures:
+                retry_rows = (res_df.filter(
+                    F.col("error").isNotNull()
+                    & (F.col("attempt") < params.max_retries - 1))
+                    .select("url", "host", "url_hash", "depth", "parent_ord",
+                            "link_pos", "seed_rank", "seed_host",
+                            F.lit(0.0).alias("priority"),
+                            (F.col("attempt") + 1).alias("attempt")))
 
-        # 6. frontier commit. Seed-pointing candidates stay in the
-        # file with is_new=true (they consumed discovery budget and
-        # must stay in `known`) but are never scheduled — the read
-        # filter drops them (the crawler's processed map,
-        # crawl/service.go:525-527).
-        next_frontier = (
-            deferred.select(*FRONTIER_SCHEMA.fieldNames())
-            .withColumn("is_new", F.lit(False))
-            .unionByName(new_cand.withColumn("is_new", F.lit(True))))
-        if retry_rows is not None:
-            next_frontier = next_frontier.unionByName(
-                retry_rows.select(*FRONTIER_SCHEMA.fieldNames())
-                .withColumn("is_new", F.lit(False)))
-        next_frontier = seedset.flag(next_frontier)
-        sched_cond = ~(F.col("is_new") & F.col("_seed"))
-        obs_fr = Observation(f"fr_{run_id}_{it}")
-        next_frontier = next_frontier.observe(
-            obs_fr,
-            F.sum(F.col("is_new").cast("long")).alias("new"),
-            F.sum(sched_cond.cast("long")).alias("sched"),
-            F.approx_count_distinct(
-                F.when(sched_cond, F.col("host"))).alias("hosts")
-        ).drop("_seed")
-        t_s = time.time()
-        backend.write_wave("frontier", it, next_frontier)
-        fr_m = obs_fr.get
-        raw = backend.read_wave("frontier", it, FRONTIER_DISK_SCHEMA)
-        wave_sched = int(res_m["sched"] or 0)
-        prev_sched = wave_sched
-        wave_succ = int(res_m["succ"] or 0)
-        if failures is not None:
-            failures += int(res_m["fail"] or 0)
-        n_new = int(fr_m["new"] or 0)
-        n_frontier = int(fr_m["sched"] or 0)
-        hosts_est = int(fr_m["hosts"] or 0)
-        stage_ms["agg"] = int((time.time() - t_s) * 1000)
-        if _rank_cache is not None:
-            _rank_cache.unpersist()
-        for c in wave_caches:
-            c.unpersist()
-        if wave_sched == 0:
-            # a zero-budget politeness table starved every remaining
-            # host: nothing is ever schedulable again. Match the
-            # oracle's empty-selection exit — the empty wave is not
-            # committed (no manifest line, files pruned), instead of
-            # looping to max_waves at fixed driver cost per iteration.
-            backend.prune_uncommitted(it - 1)
-            break
-        frontier = _schedulable_frontier(raw, seedset)
-        if not limit_reached:
-            if bloom_built and n_new:
-                _bloom_add_async(raw.filter("is_new").select("url_hash"))
-            if backend.known_active() and n_new:
-                # this wave's accepted candidates become `known` for
-                # wave it+1 (joined before that wave's anti-join);
-                # crash before the manifest line is healed by the
-                # engage-time overwrite rebuild on resume
-                _known_append_async(raw.filter("is_new")
-                                    .select("url", "url_hash"))
-            if ML is not None and discovered_cnt + n_new >= ML:
-                limit_reached = True
-            discovered_cnt += n_new
-        stage_ms["discovery"] = int((time.time() - t_s) * 1000)
-        stage_ms["frontier"] = 0
+            # 6. frontier commit. Seed-pointing candidates stay in the
+            # file with is_new=true (they consumed discovery budget and
+            # must stay in `known`) but are never scheduled — the read
+            # filter drops them (the crawler's processed map,
+            # crawl/service.go:525-527).
+            next_frontier = (
+                deferred.select(*FRONTIER_SCHEMA.fieldNames())
+                .withColumn("is_new", F.lit(False))
+                .unionByName(new_cand.withColumn("is_new", F.lit(True))))
+            if retry_rows is not None:
+                next_frontier = next_frontier.unionByName(
+                    retry_rows.select(*FRONTIER_SCHEMA.fieldNames())
+                    .withColumn("is_new", F.lit(False)))
+            next_frontier = seedset.flag(next_frontier)
+            sched_cond = ~(F.col("is_new") & F.col("_seed"))
+            obs_fr = Observation(f"fr_{run_id}_{it}")
+            next_frontier = next_frontier.observe(
+                obs_fr,
+                F.sum(F.col("is_new").cast("long")).alias("new"),
+                F.sum(sched_cond.cast("long")).alias("sched"),
+                F.approx_count_distinct(
+                    F.when(sched_cond, F.col("host"))).alias("hosts")
+            ).drop("_seed")
+            t_fr = time.time()
+            stage_ms["discovery"] = int((t_fr - t_disc) * 1000)
+            backend.write_wave("frontier", it, next_frontier)
+            fr_m = obs_fr.get
+            t_agg = time.time()
+            stage_ms["frontier"] = int((t_agg - t_fr) * 1000)
+            raw = backend.read_wave("frontier", it, FRONTIER_DISK_SCHEMA)
+            wave_sched = int(res_m["sched"] or 0)
+            prev_sched = wave_sched
+            wave_succ = int(res_m["succ"] or 0)
+            if failures is not None:
+                failures += int(res_m["fail"] or 0)
+            n_new = int(fr_m["new"] or 0)
+            n_frontier = int(fr_m["sched"] or 0)
+            hosts_est = int(fr_m["hosts"] or 0)
+            if _rank_cache is not None:
+                _rank_cache.unpersist()
+            for c in wave_caches:
+                c.unpersist()
+            if wave_sched == 0:
+                # a zero-budget politeness table starved every remaining
+                # host: nothing is ever schedulable again. Match the
+                # oracle's empty-selection exit — the empty wave is not
+                # committed (no manifest line, files pruned), instead of
+                # looping to max_waves at fixed driver cost per iteration.
+                backend.prune_uncommitted(it - 1)
+                break
+            frontier = _schedulable_frontier(raw, seedset)
+            if not limit_reached:
+                if bloom_built and n_new:
+                    _bloom_add_async(raw.filter("is_new").select("url_hash"))
+                if backend.known_active() and n_new:
+                    # this wave's accepted candidates become `known` for
+                    # wave it+1 (joined before that wave's anti-join);
+                    # crash before the manifest line is healed by the
+                    # engage-time overwrite rebuild on resume
+                    _known_append_async(raw.filter("is_new")
+                                        .select("url", "url_hash"))
+                if ML is not None and discovered_cnt + n_new >= ML:
+                    limit_reached = True
+                discovered_cnt += n_new
+            stage_ms["agg"] = int((time.time() - t_agg) * 1000)
 
-        successes += wave_succ
-        next_ord += wave_sched
+            successes += wave_succ
+            next_ord += wave_sched
 
-        # 7. commit the wave
-        line = dict(run_id=run_id, iter=it, scheduled=wave_sched,
-                    wave_successes=wave_succ, successes=successes,
-                    failures=failures, retry=params.retry_failures,
-                    next_ord=next_ord, discovered_cnt=discovered_cnt,
-                    limit_reached=limit_reached, n_frontier_next=n_frontier,
-                    hosts_next=hosts_est,
-                    wall_ms=int((time.time() - t0) * 1000),
-                    stage_ms=stage_ms)
-        manifest.append(line)
-        backend.append_manifest(line, truncate=(it == 0 and not resume))
-        it += 1
+            # 7. commit the wave
+            line = dict(run_id=run_id, iter=it, scheduled=wave_sched,
+                        wave_successes=wave_succ, successes=successes,
+                        failures=failures, retry=params.retry_failures,
+                        next_ord=next_ord, discovered_cnt=discovered_cnt,
+                        limit_reached=limit_reached,
+                        n_frontier_next=n_frontier,
+                        hosts_next=hosts_est,
+                        wall_ms=int((time.time() - t0) * 1000),
+                        stage_ms=stage_ms)
+            manifest.append(line)
+            backend.append_manifest(line, truncate=(it == 0 and not resume))
+            it += 1
 
-    t_post = time.time()
-    _bloom_join()  # bloom state must be durable before the run returns
-    _known_join()
-    backend.known_close()
-    spark.conf.set("spark.sql.shuffle.partitions", base_shuffle)
-    spark.conf.set("spark.sql.adaptive.enabled", base_aqe)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", base_split)
-    spark.conf.set("spark.sql.files.openCostInBytes", base_opencost)
-    if cache_pages:
-        pages_prep.unpersist()
-    pages_urls.unpersist()
+        t_post = time.time()
+        _bloom_join()  # bloom state must be durable before the run returns
+        _known_join()
+        backend.known_close()
+    finally:
+        for k, v in base_conf.items():
+            spark.conf.set(k, v)
+        # a crawl that raised mid-wave still holds that wave's caches
+        for c in [pages_urls, _rank_cache] + wave_caches:
+            if c is not None:
+                c.unpersist()
+        if cache_pages:
+            pages_prep.unpersist()
     run = CrawlRun(spark=spark, state_dir=state_dir, run_id=run_id,
                    manifest=manifest, link_limit=L, backend=backend)
     n_res = min(successes, L) if L > 0 else successes
