@@ -51,7 +51,7 @@ def test_stage_ms_phases_are_disjoint(spark, web):
     run = run_crawl(spark, pages_df, gen_seeds(n_docs, k=2),
                     CrawlParams(depth=2, link_limit=30))
     assert {k: spark.conf.get(k) for k in CONFS} == before
-    assert run.manifest
+    assert any(ln["n_frontier_next"] > 0 for ln in run.manifest)
     for line in run.manifest:
         ms = line["stage_ms"]
         assert set(ms) == {"fetch_extract", "discovery", "frontier", "agg"}
