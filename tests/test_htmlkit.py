@@ -253,7 +253,7 @@ from hypothesis import strategies as st  # noqa: E402
 # control / zero-width code points, plus the multi-character fragments
 # the guarded patterns match on
 _GUARD_TOKENS = (
-    list(" \t\r\n\f\v\\()[]!*#\x01\x7f\u200b")
+    list(" \t\r\n\f\v\\()[]!*#\x00\x01\x7f\u200b")
     + ["a", "b", "1", "  ", ")\n", ")\n\n", "**", "](", "\n#", "![",
        "\\\n", "\n\n\n", ") [![", "**a**](", "[b]("]
 )
