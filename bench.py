@@ -216,7 +216,7 @@ def main() -> int:
             politeness_df=politeness, default_host_budget=budget,
             state_dir=os.path.join(work, f"warm_{tag}"),
             pages_prepared=True,
-            collect_lineage=False, use_bloom=False, cache_pages=False)
+            collect_lineage=False, seen_filter="off", cache_pages=False)
         warm_sec = round(time.time() - t0, 2)
         log(f"warmup crawl [{tag}]: {warm.stats['urls_scheduled']} urls "
             f"in {warm_sec}s")
@@ -233,9 +233,8 @@ def main() -> int:
                 state_dir=os.path.join(work, f"state_{tag}_{i}"),
                 pages_prepared=True,
                 collect_lineage=False,
-                use_bloom=True,
                 # A/B the URL-seen pre-filter (bloom | cuckoo | off)
-                seen_filter=os.environ.get("BENCH_SEEN_FILTER") or None,
+                seen_filter=os.environ.get("BENCH_SEEN_FILTER") or "bloom",
                 # measured on this box: materializing the corpus into
                 # the Spark block cache costs ~85s (decompress+
                 # re-encode of the fat html column) while a plain warm

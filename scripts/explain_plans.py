@@ -2,8 +2,8 @@
 the `.explain("formatted")` evidence that the plans have the shape the
 scale design claims (see README "Scale design" and BENCH.md):
 
-- fetch_join broadcast path: ONE broadcast exchange of the slim wave,
-  corpus scanned (not shuffled), ReusedExchange for the semi join;
+- fetch_join_split hits (small waves): ONE broadcast exchange of the
+  slim wave, corpus scanned (not shuffled);
 - fetch_join shuffle path: SHUFFLE_HASH with frontier build side;
 - known-state anti-join vs the BUCKETED table: known side scans
   `Bucketed: true` with NO Exchange (candidates adapt);
@@ -35,7 +35,7 @@ def main():
     spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     from supacrawler_spark import simsearch, textops
-    from supacrawler_spark.operators.fetch import fetch_join
+    from supacrawler_spark.operators.fetch import fetch_join, fetch_join_split
     from supacrawler_spark.sources import gen_pages_df, prepare_pages
 
     pages_df, _ = gen_pages_df(spark, sf_dir, limit=200)
@@ -43,11 +43,11 @@ def main():
     sched = prep.limit(50).select(
         F.col("url_canon").alias("url"), F.lit(0).alias("attempt"))
 
-    header("fetch_join — broadcast-semi path (small wave)")
-    fetch_join(sched, prep, small_wave=True).explain("formatted")
+    header("fetch_join_split — broadcast hits (small wave)")
+    fetch_join_split(sched, prep)[0].explain("formatted")
 
     header("fetch_join — SHUFFLE_HASH path (large wave)")
-    fetch_join(sched, prep, small_wave=False).explain("formatted")
+    fetch_join(sched, prep).explain("formatted")
 
     header("known-state anti-join vs BUCKETED table (no Exchange on "
            "the known side)")

@@ -38,7 +38,8 @@ for name, params, pol, opt in cases:
     sds = gen_seeds(n_docs, k=2, include_dangling=opt.get("dangle", False))
     orc = crawl_oracle(pages_local, sds, params, politeness=pol_dict, robots_rules=rob_rules)
     run = run_crawl(spark, pages_df, sds, params, politeness_df=pol_df,
-                    robots_df=rob_df, use_bloom=opt.get("bloom", True))
+                    robots_df=rob_df,
+                    seen_filter="bloom" if opt.get("bloom", True) else "off")
     etrace = [(r.crawl_ord, r.iter, r.depth, r.url, r.status_code) for r in run.trace.collect()]
     eseen = {r.url for r in run.seen.collect()}
     epages = {r.url: r for r in run.results.collect()}

@@ -43,7 +43,9 @@ def build_parser() -> argparse.ArgumentParser:
     c.add_argument("--fresh", action="store_true")
     c.add_argument("--state-dir", default=None)
     c.add_argument("--resume", action="store_true")
-    c.add_argument("--no-bloom", action="store_true")
+    c.add_argument("--no-bloom", action="store_true",
+                   help="run the exact seen anti-join without the Bloom "
+                        "pre-filter (run_crawl seen_filter='off')")
     c.add_argument("--host-budget", type=int, default=10)
     c.add_argument("--output", default=None,
                    help="write results parquet here (else print stats)")
@@ -98,7 +100,7 @@ def main(argv=None) -> int:
         patterns=tuple(x for x in args.patterns.split(",") if x))
     run = run_crawl(spark, pages, seeds, params,
                     state_dir=args.state_dir, resume=args.resume,
-                    use_bloom=not args.no_bloom,
+                    seen_filter="off" if args.no_bloom else "bloom",
                     default_host_budget=args.host_budget)
     if args.output:
         run.results.write.mode("overwrite").parquet(args.output)

@@ -29,34 +29,15 @@ from supacrawler_spark.functions import (
 )
 
 
-def fetch_join(scheduled: DataFrame, pages_prep: DataFrame,
-               small_wave: bool = True,
-               pages_urls: "DataFrame | None" = None,
-               broadcast_urls: bool = False) -> DataFrame:
-    """J1: frontier left-joins the corpus on the canonical URL.
-
-    Two physical strategies, picked by the driver per wave:
-
-    - small_wave (politeness-capped wave, the common case): broadcast
-      ONLY the slim frontier. Hits come from ONE broadcast-inner join
-      against the html corpus scan (parallel; html never leaves the
-      executors — broadcasting the matched html slice would be serial
-      driver time that grows with wave size). Misses are computed
-      against ``pages_urls``, a url-only projection of the corpus
-      (tiny columnar scan), so the html column is scanned exactly once
-      per wave.
-    - large wave: SHUFFLE_HASH with the frontier as build side (never
-      sort-merge-sort the corpus); with a bucketed corpus table
-      (bucketize_pages / Iceberg bucket partitioning) the corpus side
-      of this shuffle disappears too.
-    """
+def fetch_join(scheduled: DataFrame, pages_prep: DataFrame) -> DataFrame:
+    """J1 for a wave above the broadcast size: the frontier left-joins
+    the corpus on the canonical URL with SHUFFLE_HASH, the frontier as
+    build side (never sort-merge-sort the corpus); with a bucketed
+    corpus table (bucketize_pages / Iceberg bucket partitioning) the
+    corpus side of this shuffle disappears too. run_crawl takes this
+    path above SMALL_WAVE_ROWS scheduled rows; broadcast-sized waves
+    take fetch_join_split."""
     web = pages_prep.select(F.col("url_canon").alias("url"), "html")
-    if small_wave:
-        hits, miss = fetch_join_split(scheduled, pages_prep,
-                                      pages_urls=pages_urls,
-                                      broadcast_urls=broadcast_urls)
-        miss = miss.withColumn("html", F.lit(None).cast("binary"))
-        return hits.unionByName(miss.select(*hits.columns))
     return scheduled.hint("SHUFFLE_HASH").join(web, "url", "left")
 
 
@@ -66,10 +47,14 @@ def fetch_join_split(scheduled: DataFrame, pages_prep: DataFrame,
     """Small-wave fetch join, hits and misses as SEPARATE frames (r6):
     the miss side needs no html column and — see miss_results — no
     Python at all, so callers can keep the extraction UDF strictly on
-    hit rows. ``fetch_join(small_wave=True)`` is this plus the union.
+    hit rows.
 
-    - ONE broadcast exchange of the wave, reused by the hits join and
-      the hit-url semi join.
+    - ONE broadcast exchange of the slim wave, reused by the hits join
+      and the hit-url semi join. Hits come from a broadcast-inner join
+      against the html corpus scan (parallel; html never leaves the
+      executors). Misses are computed against ``pages_urls``, a
+      url-only projection of the corpus (tiny columnar scan), so the
+      html column is scanned exactly once per wave.
     - broadcast_urls: when the caller KNOWS the corpus-url dim is
       broadcast-sized (driver-known corpus bytes), the miss path
       anti-joins the wave against the broadcast url dim directly. The

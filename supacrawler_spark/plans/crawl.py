@@ -66,7 +66,12 @@ from supacrawler_spark.schemas import (
     LINEAGE_SCHEMA,
     RESULT_SCHEMA,
 )
-from supacrawler_spark.plans.state import ParquetStateBackend, StateBackend
+from supacrawler_spark.plans.state import (
+    KNOWN_BUCKETS,
+    KNOWN_COMPACT_EVERY,
+    ParquetStateBackend,
+    StateBackend,
+)
 from supacrawler_spark.sources import prepare_pages
 
 BLOOM_THRESHOLD = 100_000
@@ -78,13 +83,9 @@ BLOOM_THRESHOLD = 100_000
 # bucket-aligned: candidates exchange into the table's partitioning;
 # the known side never exchanges). The Iceberg bucket-partitioned
 # state table stand-in at 10^10 design scale. Same auto threshold as
-# bloom; KNOWN_BUCKETS bounds per-task state at any total size.
+# bloom; KNOWN_BUCKETS (plans/state.py) bounds per-task state at any
+# total size.
 KNOWN_TABLE_THRESHOLD = BLOOM_THRESHOLD
-KNOWN_BUCKETS = 32
-# appends add one file per bucket per wave; compact (rewrite into the
-# next generation) after this many appends to bound file counts on
-# very deep crawls
-KNOWN_COMPACT_EVERY = 32
 
 # Broadcast the frontier side of the fetch join only while the
 # politeness-capped SCHEDULED wave (not the frontier!) is provably
@@ -246,19 +247,13 @@ class _SeedSet:
     crawl/service.go:525-527) — via ``flag``.
     """
 
-    def __init__(self, spark, seeds, state_dir: str, resume: bool,
-                 force_dim: "bool | None" = None):
+    def __init__(self, spark, seeds, state_dir: str, resume: bool):
         self.spark = spark
         self.urls: "list[str] | None" = None
         self._dim_path = os.path.join(state_dir, "seeds_dim")
         self._keys_path = os.path.join(state_dir, "seeds_keys")
         is_df = isinstance(seeds, DataFrame)
-        use_dim = (force_dim is True or is_df
-                   or (force_dim is None and len(seeds) > SEED_DIM_THRESHOLD))
-        if force_dim is False and is_df:
-            seeds = [(r["url"], r["seed_rank"])
-                     for r in seeds.select("url", "seed_rank").collect()]
-            use_dim = False
+        use_dim = is_df or len(seeds) > SEED_DIM_THRESHOLD
         if not use_dim:
             self.seeds_list = sorted(seeds, key=lambda s: s[1])
             self.urls = [U.canonical_url(u) for u, _ in self.seeds_list]
@@ -375,6 +370,43 @@ def effective_politeness(politeness_df, robots_df, wave_window_ms: int,
     return merged.select("host", b_eff.alias("max_parallel"))
 
 
+class _Background:
+    """Driver-side work that overlaps the crawl's own jobs (concurrent
+    jobs on one SparkSession are supported). Submitted work runs in
+    order, one piece at a time, so two known-table appends never write
+    at once. ``join`` waits for all of it and re-raises the first
+    error: a lost bloom add or known append would silently drop URLs
+    that the exact anti-join trusts. ``wait`` only waits."""
+
+    def __init__(self):
+        self._last: "threading.Thread | None" = None
+        self._errors: list = []
+
+    def submit(self, fn, *args) -> None:
+        prev = self._last
+
+        def work():
+            if prev is not None:
+                prev.join()
+            try:
+                fn(*args)
+            except BaseException as e:  # noqa: BLE001 — re-raised by join
+                self._errors.append(e)
+
+        self._last = threading.Thread(target=work, daemon=True)
+        self._last.start()
+
+    def wait(self) -> None:
+        if self._last is not None:
+            self._last.join()
+            self._last = None
+
+    def join(self) -> None:
+        self.wait()
+        if self._errors:
+            raise self._errors[0]
+
+
 def run_crawl(
     spark: SparkSession,
     pages_df: DataFrame,
@@ -385,10 +417,7 @@ def run_crawl(
     robots_df: "DataFrame | None" = None,
     state_dir: "str | None" = None,
     resume: bool = False,
-    use_bloom: bool = True,
-    seen_filter: "str | None" = None,
-    bucket_known: "bool | None" = None,
-    seed_dim: "bool | None" = None,
+    seen_filter: str = "bloom",
     collect_lineage: bool = True,
     default_host_budget: int = 10,
     pages_prepared: bool = False,
@@ -403,9 +432,6 @@ def run_crawl(
     ``seeds``: list of (url, seed_rank) OR a DataFrame with columns
     (url, seed_rank) — the scale path for Common-Crawl-style seed
     lists (the driver never materializes seed rows; see _SeedSet).
-    ``seed_dim``: None (default) auto-engages the seeds dim above
-    SEED_DIM_THRESHOLD or for DataFrame input; True forces it (tests);
-    False forces the literal path (collects a DataFrame input).
     ``pages_prepared``: pass True when pages_df already has url_canon
     (e.g. from bucketize_pages).
 
@@ -416,17 +442,19 @@ def run_crawl(
     (scrape/service.go:64-69). Extraction is a pure function of the
     html, so cached and fresh runs are bit-identical (tested).
 
-    ``seen_filter``: "bloom" | "cuckoo" | "off" — which URL-seen
-    pre-filter prunes the exact anti-join (north_rule: "Bloom/cuckoo
-    URL-seen"). None (default) derives it from ``use_bloom``. A pure
-    physical-plan choice: the exact anti-join re-checks every
-    positive, so traces are identical across all three (tested).
+    ``seen_filter``: "bloom" (default) | "cuckoo" | "off" — which
+    URL-seen pre-filter prunes the exact anti-join (north_rule:
+    "Bloom/cuckoo URL-seen"). A pure physical-plan choice: the exact
+    anti-join re-checks every positive, so traces are identical across
+    all three (tested).
 
-    ``bucket_known``: None (default) auto-engages the bucketed
-    known-state table above KNOWN_TABLE_THRESHOLD discovered URLs;
-    True forces it from the first wave (tests); False keeps the
-    frontier-file scan path only. Purely a physical-plan choice —
-    trace-equivalence is pinned by test_known_bucketed_equals_files.
+    Every other physical path is picked from observed sizes, and each
+    module threshold is the only selector of its path: the seeds dim
+    above SEED_DIM_THRESHOLD seeds (or for DataFrame input), the seen
+    filter above BLOOM_THRESHOLD and the bucketed known-state table
+    above KNOWN_TABLE_THRESHOLD discovered URLs, the shuffle-hash
+    fetch join above SMALL_WAVE_ROWS scheduled rows. None of them
+    changes the trace; tests force a path by setting its threshold.
 
     ``transport``: an injected live-fetch seam
     (transport.FetchTransport). When set, the wave's fetch runs
@@ -472,12 +500,18 @@ def run_crawl(
         if not (resume and os.path.exists(pages_path)):
             _write(prepare_pages(pages_df), pages_path)
         pages_prep = spark.read.parquet(pages_path)
-    # Every session conf the crawl overrides, restored by the finally
-    # below whether the crawl returns or raises.
-    base_conf = {k: spark.conf.get(k) for k in (
-        "spark.sql.files.openCostInBytes",
-        "spark.sql.adaptive.enabled",
-        "spark.sql.shuffle.partitions")}
+    # Every session conf the crawl overrides goes through set_conf, which
+    # keeps its first value for the finally below to restore whether the
+    # crawl returns or raises.
+    saved_conf: dict = {}
+
+    def set_conf(key: str, value: str) -> None:
+        if key not in saved_conf:
+            saved_conf[key] = spark.conf.get(key)
+        spark.conf.set(key, value)
+
+    # the corpus url projection, Bloom adds and known-table appends
+    bg = _Background()
     pages_urls = _rank_cache = None
     wave_caches: list = []
     try:
@@ -502,8 +536,7 @@ def run_crawl(
             # each pay the stage's fixed per-task cost. It is set before
             # the corpus's first action: a persisted corpus keeps the
             # partitioning of its first scan.
-            spark.conf.set("spark.sql.files.openCostInBytes",
-                           str(512 * 1024))
+            set_conf("spark.sql.files.openCostInBytes", str(512 * 1024))
         if cache_pages:
             # the fetch join scans the corpus every wave — keep it hot
             # (memory+disk). At 100-TB scale this is the executors' cache
@@ -511,25 +544,15 @@ def run_crawl(
             pages_prep = pages_prep.persist()
         # url-only corpus projection for the miss path of the fetch join:
         # a few bytes/row, so the fat html column is scanned once per wave.
-        # Written on a pool thread — the scan is independent of the rest
+        # Written in the background — the scan is independent of the rest
         # of preloop (politeness collapse, seed init, frontier count), so
         # overlapping it takes its 1-2 s off the preloop critical path;
         # joined just before the wave loop, where the projection is first
         # read. Concurrent jobs on one SparkSession are supported (the
-        # wave loop's bloom/known appends already rely on this).
+        # wave loop's bloom/known appends rely on this too).
         urls_path = os.path.join(state_dir, "pages_urls")
-        _urls_err: list = []
-
-        def _urls_work():
-            try:
-                _write(pages_prep.select("url_canon"), urls_path)
-            except BaseException as exc:  # re-raised on join
-                _urls_err.append(exc)
-
-        _urls_th = None
         if not (resume and os.path.exists(urls_path)):
-            _urls_th = threading.Thread(target=_urls_work, daemon=True)
-            _urls_th.start()
+            bg.submit(_write, pages_prep.select("url_canon"), urls_path)
 
         D = params.max_depth
         L = params.link_limit
@@ -575,8 +598,7 @@ def run_crawl(
 
         # ---- init / resume ------------------------------------------------
         manifest = backend.read_manifest() if resume else []
-        seedset = _SeedSet(spark, seeds, state_dir, resume=bool(manifest),
-                           force_dim=seed_dim)
+        seedset = _SeedSet(spark, seeds, state_dir, resume=bool(manifest))
         if manifest:
             last = manifest[-1]
             it0 = last["iter"] + 1
@@ -623,8 +645,6 @@ def run_crawl(
         # expose the same add/flag API, so everything below is
         # filter-agnostic; trace equivalence bloom == cuckoo == off is
         # pinned by tests (the exact anti-join always re-checks positives).
-        if seen_filter is None:
-            seen_filter = "bloom" if use_bloom else "off"
         if seen_filter == "bloom":
             bloom = BloomState(os.path.join(state_dir, "bloom"))
         elif seen_filter == "cuckoo":
@@ -634,30 +654,6 @@ def run_crawl(
         else:
             raise ValueError(f"unknown seen_filter {seen_filter!r}")
         bloom_built = False
-        # incremental bloom adds run on a background thread: the add only
-        # has to complete before the NEXT wave's probe executes, so it
-        # overlaps the next wave's (much longer) fetch+extract job instead
-        # of serializing ~0.3-0.5s of fixed latency into every wave
-        bloom_pending: list = []
-        bloom_errors: list = []
-
-        def _bloom_add_async(df):
-            def work():
-                try:
-                    bloom.add(df)
-                except BaseException as e:  # noqa: BLE001 — re-raised below
-                    bloom_errors.append(e)
-            th = threading.Thread(target=work, daemon=True)
-            th.start()
-            bloom_pending.append(th)
-
-        def _bloom_join():
-            """A silently failed add would turn seen URLs into bloom false
-            negatives, which the anti-join TRUSTS — so failures propagate."""
-            while bloom_pending:
-                bloom_pending.pop().join()
-            if bloom_errors:
-                raise bloom_errors[0]
 
         def _known_files_df() -> "DataFrame | None":
             """The mapper's `links` set = all capped candidates ever
@@ -672,8 +668,8 @@ def run_crawl(
             return raw.filter("is_new").select("url", "url_hash")
 
         # ---- bucketed known-state table (module docstring scale note) -----
-        # Engaged above KNOWN_TABLE_THRESHOLD (or forced by bucket_known):
-        # the cumulative known set lives in a parquet table bucketed on
+        # Engaged above KNOWN_TABLE_THRESHOLD discovered URLs: the
+        # cumulative known set lives in a parquet table bucketed on
         # `url`, so the per-wave exact anti-join reads it bucket-aligned —
         # candidates exchange into the table's partitioning, the known
         # side NEVER re-shuffles, and per-wave anti-join cost stops
@@ -684,39 +680,6 @@ def run_crawl(
         # KNOWN_COMPACT_EVERY appends. Storage lives on the state backend
         # (StateBackend.known_*).
 
-        def _known_engage() -> None:
-            src = _known_files_df()
-            if src is None:
-                return
-            backend.known_rebuild(src)
-
-        # like the bloom adds, the known append only has to land before
-        # the NEXT wave's anti-join reads the table — run it on a
-        # background thread so it overlaps that wave's (much longer)
-        # fetch+extract job instead of adding fixed latency to every wave.
-        # The join discipline (joined before every known_df() use and at
-        # run end) serializes appends, so the bucketed table never sees
-        # two concurrent writers; failures propagate — a lost append would
-        # silently drop discoveries via the anti-join.
-        known_pending: list = []
-        known_errors: list = []
-
-        def _known_append_async(df):
-            def work():
-                try:
-                    backend.known_append(df)
-                except BaseException as e:  # noqa: BLE001 — re-raised below
-                    known_errors.append(e)
-            th = threading.Thread(target=work, daemon=True)
-            th.start()
-            known_pending.append(th)
-
-        def _known_join():
-            while known_pending:
-                known_pending.pop().join()
-            if known_errors:
-                raise known_errors[0]
-
         def known_df() -> "DataFrame | None":
             if backend.known_active():
                 return backend.known_read()
@@ -726,10 +689,7 @@ def run_crawl(
         # anti-join but dropped from the next frontier) live on _SeedSet.
 
         # ---- wave loop ----------------------------------------------------
-        if _urls_th is not None:
-            _urls_th.join()
-            if _urls_err:
-                raise _urls_err[0]
+        bg.join()  # the url projection is read from the first wave on
         pages_urls = spark.read.parquet(urls_path).persist()
         it = it0
         t_loop = time.time()
@@ -739,7 +699,7 @@ def run_crawl(
         # are already done explicitly here: shuffle partitions are sized to
         # the wave (wave_shuffle below) and hot-host skew is pre-salted
         # (operators/frontier.py). Restored on exit.
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        set_conf("spark.sql.adaptive.enabled", "false")
         cores = spark.sparkContext.defaultParallelism
         t_start = time.time()
         deadline_hit = False
@@ -769,7 +729,7 @@ def run_crawl(
             # the rows term (10^7 frontier rows -> 3333 partitions).
             wave_shuffle = min(max(1, cores // 4, n_frontier // 3000),
                                4 * cores)
-            spark.conf.set("spark.sql.shuffle.partitions", str(wave_shuffle))
+            set_conf("spark.sql.shuffle.partitions", str(wave_shuffle))
 
             # Driver-known bound on this wave's SCHEDULED row count, before
             # anything is computed: <= n_frontier, <= remaining link
@@ -899,8 +859,7 @@ def run_crawl(
                 results = (hits.mapInPandas(extractor, RESULT_SCHEMA)
                            .unionByName(miss_results(miss, params.fresh)))
             else:
-                fetched = fetch_join(scheduled, pages_prep, small_wave=False,
-                                     pages_urls=pages_urls)
+                fetched = fetch_join(scheduled, pages_prep)
                 results = fetched.mapInPandas(extractor, RESULT_SCHEMA)
             if cache_hits is not None:
                 results = results.unionByName(
@@ -939,19 +898,18 @@ def run_crawl(
                 cand = expand_candidates(
                     res_df, params.include_subdomains, params.patterns,
                     robots_df, max_depth=D)
-                # the anti-join below must see every known append issued
-                _known_join()
-                if (bucket_known is not False
-                        and not backend.known_active()
-                        and (bucket_known is True
-                             or discovered_cnt > KNOWN_TABLE_THRESHOLD)):
-                    _known_engage()
+                # the anti-join and probe below must see every known
+                # append and bloom add issued so far
+                bg.join()
+                if (not backend.known_active()
+                        and discovered_cnt > KNOWN_TABLE_THRESHOLD):
+                    src = _known_files_df()
+                    if src is not None:
+                        backend.known_rebuild(src)
                 kdf = known_df()
                 if kdf is not None:
                     bloom_active = bloom is not None and \
                         discovered_cnt > BLOOM_THRESHOLD
-                    # the probe below must see every add issued so far
-                    _bloom_join()
                     if bloom_active and not bloom_built:
                         bloom.add(kdf.select("url_hash"))
                         bloom_built = True
@@ -1062,15 +1020,18 @@ def run_crawl(
                 break
             frontier = _schedulable_frontier(raw, seedset)
             if not limit_reached:
+                # both only have to land before the NEXT wave's anti-join,
+                # so they overlap that wave's (much longer) fetch+extract
+                # job instead of adding fixed latency to every wave
                 if bloom_built and n_new:
-                    _bloom_add_async(raw.filter("is_new").select("url_hash"))
+                    bg.submit(bloom.add,
+                              raw.filter("is_new").select("url_hash"))
                 if backend.known_active() and n_new:
                     # this wave's accepted candidates become `known` for
-                    # wave it+1 (joined before that wave's anti-join);
-                    # crash before the manifest line is healed by the
-                    # engage-time overwrite rebuild on resume
-                    _known_append_async(raw.filter("is_new")
-                                        .select("url", "url_hash"))
+                    # wave it+1; crash before the manifest line is healed
+                    # by the engage-time overwrite rebuild on resume
+                    bg.submit(backend.known_append,
+                              raw.filter("is_new").select("url", "url_hash"))
                 if ML is not None and discovered_cnt + n_new >= ML:
                     limit_reached = True
                 discovered_cnt += n_new
@@ -1094,11 +1055,15 @@ def run_crawl(
             it += 1
 
         t_post = time.time()
-        _bloom_join()  # bloom state must be durable before the run returns
-        _known_join()
+        bg.join()  # bloom/known state must be durable before the run returns
         backend.known_close()
     finally:
-        for k, v in base_conf.items():
+        # A crawl that raised still waits for its background jobs before
+        # it hands the session back; its own exception is the one that
+        # propagates. On the normal path, bg.join() above has already
+        # waited and re-raised.
+        bg.wait()
+        for k, v in saved_conf.items():
             spark.conf.set(k, v)
         # a crawl that raised mid-wave still holds that wave's caches
         for c in [pages_urls, _rank_cache] + wave_caches:

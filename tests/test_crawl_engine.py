@@ -190,8 +190,8 @@ def test_bloom_off_equals_on(spark, web, monkeypatch):
     pages_df, pages_local, n_docs = web
     seeds = gen_seeds(n_docs, k=2)
     params = CrawlParams(depth=2, link_limit=40)
-    run_on = run_crawl(spark, pages_df, seeds, params, use_bloom=True)
-    run_off = run_crawl(spark, pages_df, seeds, params, use_bloom=False)
+    run_on = run_crawl(spark, pages_df, seeds, params, seen_filter="bloom")
+    run_off = run_crawl(spark, pages_df, seeds, params, seen_filter="off")
     t_on = [tuple(r) for r in run_on.trace.collect()]
     t_off = [tuple(r) for r in run_off.trace.collect()]
     assert t_on == t_off
@@ -224,20 +224,20 @@ def test_known_bucketed_equals_files(spark, web, monkeypatch):
     pages_df, _, n_docs = web
     seeds = gen_seeds(n_docs, k=2)
     params = CrawlParams(depth=3, link_limit=80)
-    base = run_crawl(spark, pages_df, seeds, params, bucket_known=False)
+    base = run_crawl(spark, pages_df, seeds, params)
     t_base = [tuple(r) for r in base.trace.collect()]
 
+    monkeypatch.setattr(crawl_mod, "KNOWN_TABLE_THRESHOLD", -1)
     monkeypatch.setattr(crawl_mod, "KNOWN_COMPACT_EVERY", 2)
-    bucketed = run_crawl(spark, pages_df, seeds, params, bucket_known=True)
+    bucketed = run_crawl(spark, pages_df, seeds, params)
     assert [tuple(r) for r in bucketed.trace.collect()] == t_base
 
     monkeypatch.setattr(crawl_mod, "BLOOM_THRESHOLD", 0)
-    both = run_crawl(spark, pages_df, seeds, params, bucket_known=True,
-                     use_bloom=True)
+    both = run_crawl(spark, pages_df, seeds, params, seen_filter="bloom")
     assert [tuple(r) for r in both.trace.collect()] == t_base
 
 
-def test_known_bucketed_resume(spark, web):
+def test_known_bucketed_resume(spark, web, monkeypatch):
     """Resume over a state dir mid-crawl with the bucketed known table
     engaged: the engage-time overwrite rebuild from committed frontier
     files must discard any stale/orphan table state and reproduce the
@@ -245,19 +245,21 @@ def test_known_bucketed_resume(spark, web):
     import shutil
     import tempfile
 
+    from supacrawler_spark.plans import crawl as crawl_mod
+
+    monkeypatch.setattr(crawl_mod, "KNOWN_TABLE_THRESHOLD", -1)
     pages_df, _, n_docs = web
     seeds = gen_seeds(n_docs, k=2)
     params = CrawlParams(depth=3, link_limit=80)
-    full = run_crawl(spark, pages_df, seeds, params, bucket_known=True)
+    full = run_crawl(spark, pages_df, seeds, params)
     assert full.stats["waves"] >= 3
     state = tempfile.mkdtemp(prefix="known_resume_")
     try:
         run_crawl(spark, pages_df, seeds,
                   CrawlParams(depth=3, link_limit=80, max_waves=2),
-                  state_dir=state, bucket_known=True)
+                  state_dir=state)
         resumed = run_crawl(spark, pages_df, seeds, params,
-                            state_dir=state, resume=True,
-                            bucket_known=True)
+                            state_dir=state, resume=True)
         assert [tuple(r) for r in resumed.trace.collect()] == \
                [tuple(r) for r in full.trace.collect()]
     finally:

@@ -1,10 +1,12 @@
 """run_crawl's footprint on the caller's SparkSession and its manifest
 phase timings: a crawl that raises mid-wave restores every conf it
-overrode and releases its caches, and the per-wave ``stage_ms`` phases
-are disjoint intervals of the wave."""
+overrode, releases its caches and waits for its own background work,
+and the per-wave ``stage_ms`` phases are disjoint intervals of the
+wave."""
 
 import shutil
 import tempfile
+import time
 
 import pytest
 
@@ -22,6 +24,23 @@ class _FrontierWriteFails(ParquetStateBackend):
     def write_wave(self, name, it, df):
         if name == "frontier":
             raise RuntimeError("injected frontier write failure")
+        super().write_wave(name, it, df)
+
+
+class _SlowAppendThenResultsFail(ParquetStateBackend):
+    """Known appends land ~2 s after they are issued; the results write
+    of wave 2 raises while wave 1's append is still running."""
+
+    appended = False
+
+    def known_append(self, df):
+        time.sleep(2)
+        super().known_append(df)
+        self.appended = True
+
+    def write_wave(self, name, it, df):
+        if name == "results" and it == 2:
+            raise RuntimeError("injected results write failure")
         super().write_wave(name, it, df)
 
 
@@ -43,6 +62,61 @@ def test_raising_crawl_restores_session(spark, web):
         shutil.rmtree(d, ignore_errors=True)
     assert {k: spark.conf.get(k) for k in CONFS} == before
     assert _persistent_rdds(spark) == cached
+
+
+def test_raising_crawl_waits_for_background_work(spark, web, monkeypatch):
+    """The known append issued at the end of wave 1 has finished by the
+    time wave 2's exception reaches the caller: no job of the crawl is
+    still running on the session it handed back."""
+    from supacrawler_spark.plans import crawl as crawl_mod
+
+    monkeypatch.setattr(crawl_mod, "KNOWN_TABLE_THRESHOLD", -1)
+    pages_df, _, n_docs = web
+    d = tempfile.mkdtemp(prefix="crawl_session_")
+    be = _SlowAppendThenResultsFail(spark, d)
+    try:
+        with pytest.raises(RuntimeError, match="injected"):
+            run_crawl(spark, pages_df, gen_seeds(n_docs, k=2),
+                      CrawlParams(depth=3, link_limit=80), state_dir=d,
+                      state_backend=be)
+        assert be.appended
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_background_work_runs_in_order_and_reraises():
+    """run_crawl's background helper runs submitted work one piece at a
+    time, in submission order (two known-table appends never write at
+    once), and join re-raises the first failure once all of it has
+    run."""
+    import sys
+
+    from supacrawler_spark.plans.crawl import _Background
+
+    running, order, overlaps = [0], [], []
+
+    def work(i):
+        running[0] += 1
+        if running[0] > 1:
+            overlaps.append(i)
+        time.sleep(0.002)
+        order.append(i)
+        running[0] -= 1
+        if i in (5, 9):
+            raise ValueError(f"failed {i}")
+
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        bg = _Background()
+        for i in range(16):
+            bg.submit(work, i)
+        with pytest.raises(ValueError, match="failed 5"):
+            bg.join()
+    finally:
+        sys.setswitchinterval(prev)
+    assert order == list(range(16))
+    assert overlaps == []
 
 
 def test_stage_ms_phases_are_disjoint(spark, web):

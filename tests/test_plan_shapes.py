@@ -3,7 +3,8 @@ BENCH.md argues from are pinned here so a regression fails CI, not a
 prose audit —
 
 - the bucketed known-state anti-join never Exchanges the known side;
-- fetch_join picks broadcast vs SHUFFLE_HASH per the sched_bound gate;
+- the fetch join is a broadcast of the slim wave (fetch_join_split)
+  below the sched_bound gate and SHUFFLE_HASH (fetch_join) above it;
 - the fat html column is pruned from every post-extraction plan.
 """
 
@@ -55,10 +56,10 @@ def test_bucketed_known_scan_has_no_exchange(spark, tmp_path,
 
 
 def test_fetch_join_strategy_gate(spark, no_aqe_no_autobroadcast):
-    """small_wave=True -> the slim wave is broadcast (and the corpus is
-    scanned, not shuffled); small_wave=False -> ShuffledHashJoin, never
-    a sort of the corpus."""
-    from supacrawler_spark.operators.fetch import fetch_join
+    """fetch_join_split (small waves) -> the slim wave is broadcast and
+    the corpus is scanned, not shuffled; fetch_join (large waves) ->
+    ShuffledHashJoin, never a sort of the corpus."""
+    from supacrawler_spark.operators.fetch import fetch_join, fetch_join_split
     from supacrawler_spark.sources import gen_pages_df, prepare_pages
 
     pages_df, _ = gen_pages_df(spark, "/root/testdata/sf0.001", limit=60)
@@ -66,11 +67,12 @@ def test_fetch_join_strategy_gate(spark, no_aqe_no_autobroadcast):
     sched = prep.limit(10).select(
         F.col("url_canon").alias("url"), F.lit(0).alias("attempt"))
 
-    small = _plan(fetch_join(sched, prep, small_wave=True))
+    hits, _ = fetch_join_split(sched, prep)
+    small = _plan(hits)
     assert "BroadcastHashJoin" in small, small
     assert "SortMergeJoin" not in small, small
 
-    large = _plan(fetch_join(sched, prep, small_wave=False))
+    large = _plan(fetch_join(sched, prep))
     assert "ShuffledHashJoin" in large, large
     assert "SortMergeJoin" not in large, large
     assert "BroadcastHashJoin" not in large, large

@@ -82,7 +82,7 @@ def test_random_graph_engine_matches_oracle(spark, seed):
 
 
 @pytest.mark.parametrize("seed,dim", [(11, False), (31, False), (47, True)])
-def test_multi_seed_random_graph(spark, seed, dim):
+def test_multi_seed_random_graph(spark, seed, dim, monkeypatch):
     """Multi-seed contention hardening (VERDICT r3 #6): >=5 seeds over
     a shared random graph — seeds land on shared subtrees (J5 min-K
     contention), one seed is duplicated, and seeds are routinely also
@@ -106,8 +106,10 @@ def test_multi_seed_random_graph(spark, seed, dim):
     seeds.append((urls[picks[0]], 9))          # duplicate seed
     seeds.append((urls[picks[1]] + "#f", 11))  # dup via canonicalization
     orc = crawl_oracle(pages, seeds, params)
-    run = run_crawl(spark, _pages_df(spark, pages, urls), seeds, params,
-                    seed_dim=dim)
+    if dim:
+        from supacrawler_spark.plans import crawl as crawl_mod
+        monkeypatch.setattr(crawl_mod, "SEED_DIM_THRESHOLD", -1)
+    run = run_crawl(spark, _pages_df(spark, pages, urls), seeds, params)
     etrace = [(r.crawl_ord, r.iter, r.depth, r.url, r.status_code)
               for r in run.trace.collect()]
     assert etrace == orc.trace

@@ -100,7 +100,7 @@ def test_resume_retry_bloom_interaction(spark, web, monkeypatch):
     params = CrawlParams(depth=3, link_limit=60, retry_failures=True)
     orc = crawl_oracle(pages_local, seeds, params)
 
-    full = run_crawl(spark, pages_df, seeds, params, use_bloom=True)
+    full = run_crawl(spark, pages_df, seeds, params, seen_filter="bloom")
     assert full.stats["waves"] >= 3, "need >=3 waves to stage the resume"
     # the scenario must actually exercise retries across the boundary:
     # some url appears in waves both before and after the cut
@@ -116,10 +116,10 @@ def test_resume_retry_bloom_interaction(spark, web, monkeypatch):
         part = run_crawl(spark, pages_df, seeds,
                          CrawlParams(depth=3, link_limit=60,
                                      retry_failures=True, max_waves=2),
-                         state_dir=state, use_bloom=True)
+                         state_dir=state, seen_filter="bloom")
         assert part.stats["waves"] == 2
         resumed = run_crawl(spark, pages_df, seeds, params,
-                            state_dir=state, resume=True, use_bloom=True)
+                            state_dir=state, resume=True, seen_filter="bloom")
         assert _trace(resumed) == _trace(full)
         etrace = [(r.crawl_ord, r.iter, r.depth, r.url, r.status_code)
                   for r in resumed.trace.collect()]

@@ -7,6 +7,7 @@ import pytest
 
 from supacrawler_spark.oracle import crawl_oracle
 from supacrawler_spark.params import CrawlParams
+from supacrawler_spark.plans import crawl as crawl_mod
 from supacrawler_spark.plans import run_crawl
 from supacrawler_spark.sources import gen_seeds
 
@@ -16,14 +17,20 @@ def _trace(run):
             for r in run.trace.collect()]
 
 
-def test_seed_dim_equals_literal(spark, web):
+def _force_dim(monkeypatch):
+    """Every seed list above -1 seeds takes the dim path."""
+    monkeypatch.setattr(crawl_mod, "SEED_DIM_THRESHOLD", -1)
+
+
+def test_seed_dim_equals_literal(spark, web, monkeypatch):
     """Forced-dim crawl == literal crawl == oracle (the mirror of
     test_known_bucketed_equals_files for the seed path)."""
     pages_df, pages_local, n_docs = web
     seeds = gen_seeds(n_docs, k=3, include_dangling=True)
     params = CrawlParams(depth=2, link_limit=30)
-    lit = run_crawl(spark, pages_df, seeds, params, seed_dim=False)
-    dim = run_crawl(spark, pages_df, seeds, params, seed_dim=True)
+    lit = run_crawl(spark, pages_df, seeds, params)
+    _force_dim(monkeypatch)
+    dim = run_crawl(spark, pages_df, seeds, params)
     assert _trace(lit) == _trace(dim)
     assert {r.url for r in lit.seen.collect()} == \
            {r.url for r in dim.seen.collect()}
@@ -47,47 +54,50 @@ def test_seed_dataframe_input(spark, web):
     assert _trace(lit) == _trace(dim)
 
 
-def test_seed_dim_resume(spark, web, tmp_path):
+def test_seed_dim_resume(spark, web, tmp_path, monkeypatch):
     """Dim-path resume: run one wave, resume to completion — equals a
     one-shot dim run (the persisted seeds_dim/seeds_keys are reused)."""
+    _force_dim(monkeypatch)
     pages_df, _, n_docs = web
     seeds = gen_seeds(n_docs, k=2)
     sd = str(tmp_path / "state")
     partial = run_crawl(spark, pages_df, seeds,
                         CrawlParams(depth=2, link_limit=30, max_waves=1),
-                        state_dir=sd, seed_dim=True)
+                        state_dir=sd)
     assert partial.stats["waves"] == 1
     resumed = run_crawl(spark, pages_df, seeds,
                         CrawlParams(depth=2, link_limit=30),
-                        state_dir=sd, resume=True, seed_dim=True)
+                        state_dir=sd, resume=True)
     oneshot = run_crawl(spark, pages_df, seeds,
-                        CrawlParams(depth=2, link_limit=30), seed_dim=True)
+                        CrawlParams(depth=2, link_limit=30))
     assert _trace(resumed) == _trace(oneshot)
 
 
-def test_seed_dim_resume_half_materialized(spark, web, tmp_path):
+def test_seed_dim_resume_half_materialized(spark, web, tmp_path,
+                                           monkeypatch):
     """A crash between the seeds_dim and seeds_keys writes must not be
     trusted on resume: with seeds_keys missing, the resumed run rebuilds
     both files and still equals the one-shot dim run."""
     import shutil
+    _force_dim(monkeypatch)
     pages_df, _, n_docs = web
     seeds = gen_seeds(n_docs, k=2)
     sd = str(tmp_path / "state")
     run_crawl(spark, pages_df, seeds,
               CrawlParams(depth=2, link_limit=30, max_waves=1),
-              state_dir=sd, seed_dim=True)
+              state_dir=sd)
     shutil.rmtree(str(tmp_path / "state" / "seeds_keys"))
     resumed = run_crawl(spark, pages_df, seeds,
                         CrawlParams(depth=2, link_limit=30),
-                        state_dir=sd, resume=True, seed_dim=True)
+                        state_dir=sd, resume=True)
     oneshot = run_crawl(spark, pages_df, seeds,
-                        CrawlParams(depth=2, link_limit=30), seed_dim=True)
+                        CrawlParams(depth=2, link_limit=30))
     assert _trace(resumed) == _trace(oneshot)
     import os
     assert os.path.exists(str(tmp_path / "state" / "seeds_keys"))
 
 
-def test_duplicate_seeds_collapse(spark, web):
+def test_duplicate_seeds_collapse(spark, web, monkeypatch):
     """Duplicate seeds (same canonical url, different rank) collapse to
     min seed_rank in both modes and in the oracle — a url is crawled at
     most once."""
@@ -97,8 +107,9 @@ def test_duplicate_seeds_collapse(spark, web):
     params = CrawlParams(depth=1, link_limit=20)
     orc = crawl_oracle(pages_local, seeds, params)
     assert len(orc.seen) == len(orc.trace)  # no url crawled twice
-    lit = run_crawl(spark, pages_df, seeds, params, seed_dim=False)
-    dim = run_crawl(spark, pages_df, seeds, params, seed_dim=True)
+    lit = run_crawl(spark, pages_df, seeds, params)
+    _force_dim(monkeypatch)
+    dim = run_crawl(spark, pages_df, seeds, params)
     assert _trace(lit) == orc.trace
     assert _trace(dim) == orc.trace
 

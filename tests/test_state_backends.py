@@ -137,20 +137,23 @@ def test_backend_fresh_run_resets_used_state(spark, web, backend_cls):
         _cleanup(spark, d, be)
 
 
-def test_backend_known_table_engaged(spark, web, backend_cls):
-    """bucket_known=True exercises the backend's bucketed known table
-    (rebuild + append + compaction every 2 appends) — trace must equal
-    the plain run."""
+def test_backend_known_table_engaged(spark, web, backend_cls, monkeypatch):
+    """KNOWN_TABLE_THRESHOLD=-1 exercises the backend's bucketed known
+    table (rebuild + append + compaction every 2 appends) — trace must
+    equal the plain run."""
+    from supacrawler_spark.plans import crawl as crawl_mod
+
     pages_df, _, n_docs = web
     seeds = gen_seeds(n_docs, k=2)
     params = CrawlParams(depth=3, link_limit=60)
     ref = run_crawl(spark, pages_df, seeds, params)
+    monkeypatch.setattr(crawl_mod, "KNOWN_TABLE_THRESHOLD", -1)
 
     d = tempfile.mkdtemp(prefix="state_seam_")
     be = backend_cls(spark, d, known_compact_every=2)
     try:
         run = run_crawl(spark, pages_df, seeds, params, state_dir=d,
-                        state_backend=be, bucket_known=True)
+                        state_backend=be)
         assert _trace(run) == _trace(ref)
     finally:
         _cleanup(spark, d, be)
