@@ -30,6 +30,16 @@ SALT_BUCKETS = 16
 ORDER_COLS = ("depth", "parent_ord", "link_pos", "url")
 
 
+def sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal, for expressions parsed once
+    by the JVM (``F.expr``) instead of one py4j literal call per value.
+    Only the backslash and the quote need escaping: every other
+    character, control characters and newlines included, is taken as
+    written. (A lone surrogate never reaches the parser: py4j cannot
+    send it.)"""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def order_exprs():
     return [F.col("priority").desc(), F.col("depth"), F.col("parent_ord"),
             F.col("link_pos"), F.col("url")]
@@ -66,9 +76,7 @@ def politeness_select(
             # one JVM-parsed expression instead of 2x|dim| F.lit py4j
             # round-trips rebuilt EVERY wave (r6: the wave loop's
             # driver gaps were partly this plan-construction chatter)
-            def q(s):
-                return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-            entries = ", ".join(f"{q(h)}, {int(b)}"
+            entries = ", ".join(f"{sql_string(h)}, {int(b)}"
                                 for h, b in politeness_df.items())
             f = f.withColumn("_budget", F.expr(
                 f"coalesce(map({entries})[host], {int(default_budget)})"))

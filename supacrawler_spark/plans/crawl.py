@@ -1,5 +1,17 @@
 """The iterative crawl driver loop (SURVEY.md §3.1 re-architecture).
 
+``run_crawl`` sets up, runs ``_wave_step`` until the frontier or a
+budget runs out, and reports stats. The pieces:
+
+- ``_Cursor``: the crawl position one manifest line carries (fresh
+  start, resume and every wave commit);
+- ``_Session``: the crawl's footprint on the caller's SparkSession —
+  conf overrides, the caches it persisted, its background work — with
+  one release path on any exit;
+- ``_SeenSet``: the URL-seen decision of discovery (exact anti-join,
+  with the seen filter and the bucketed known table engaged by size);
+- ``_wave_step``: schedule -> fetch/extract -> discover -> commit.
+
 One Spark job pipeline per BFS wave:
 
     frontier --politeness rank--> scheduled --⨝ pages--> extraction UDF
@@ -37,12 +49,16 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-import threading
 import time
 import uuid
-from dataclasses import dataclass, field
+from concurrent import futures
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import AbstractContextManager
+from dataclasses import asdict, dataclass, field, fields
+from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from supacrawler_spark import urlkit as U
@@ -57,7 +73,11 @@ from supacrawler_spark.operators.fetch import (
     miss_results,
     transport_fetch,
 )
-from supacrawler_spark.operators.frontier import order_exprs, politeness_select
+from supacrawler_spark.operators.frontier import (
+    order_exprs,
+    politeness_select,
+    sql_string,
+)
 from supacrawler_spark.operators.rank import ordered_row_number
 from supacrawler_spark.params import CrawlParams
 from supacrawler_spark.schemas import (
@@ -119,14 +139,8 @@ class CrawlRun:
     link_limit: int = 0
     backend: "StateBackend | None" = None
 
-    def _backend(self) -> StateBackend:
-        if self.backend is None:
-            self.backend = ParquetStateBackend(self.spark, self.state_dir,
-                                               run_id=self.run_id)
-        return self.backend
-
     def _results_all(self) -> DataFrame:
-        df = (self._backend().read_all("results", RESULT_SCHEMA)
+        df = (self.backend.read_all("results", RESULT_SCHEMA)
               if self.manifest else None)
         if df is None:
             # zero committed waves (e.g. politeness starved wave 0)
@@ -163,7 +177,7 @@ class CrawlRun:
 
     @property
     def lineage(self) -> DataFrame:
-        df = self._backend().read_all("lineage", LINEAGE_SCHEMA)
+        df = self.backend.read_all("lineage", LINEAGE_SCHEMA)
         if df is None:
             return self.spark.createDataFrame([], LINEAGE_SCHEMA)
         return df
@@ -308,11 +322,8 @@ class _SeedSet:
                 # py4j literal call per seed and is rebuilt twice per
                 # wave (~0.9 s of driver time per bench crawl at 64
                 # seeds, cProfile-measured)
-                def q(s):
-                    return ("'" + s.replace("\\", "\\\\")
-                            .replace("'", "\\'") + "'")
-                cond = F.expr(
-                    "url IN (" + ", ".join(q(u) for u in self.urls) + ")")
+                cond = F.expr("url IN ("
+                              + ", ".join(map(sql_string, self.urls)) + ")")
             else:
                 cond = F.lit(False)
             return df.withColumn(out, cond)
@@ -370,41 +381,541 @@ def effective_politeness(politeness_df, robots_df, wave_window_ms: int,
     return merged.select("host", b_eff.alias("max_parallel"))
 
 
+def _politeness_arg(pol_eff, default_host_budget: int):
+    """The politeness argument every wave passes to politeness_select,
+    and an upper bound on any host's budget (with the frontier's
+    distinct-host count it bounds the scheduled-wave size before it is
+    computed: the broadcast-vs-shuffle gate). politeness_df is a
+    broadcastable dim by design, so this one-time driver action is tiny
+    at any scale."""
+    if pol_eff is None:
+        return None, default_host_budget
+    # Small dims (the norm: one row per throttled host) collapse to a
+    # driver dict -> literal MAP lookup in politeness_select: one
+    # collect here instead of a broadcast-build job EVERY wave. Large
+    # dims keep the broadcast-join path.
+    # coalesce(1) first: a limited collect over a many-partition dim
+    # otherwise runs Spark's incremental take — up to 4 escalating jobs
+    # (1 -> 4 -> 16 -> all partitions) for a dim of a few dozen rows
+    # (measured 4.9 s of preloop on a cold session). One partition ->
+    # one job; the single-thread scan is bounded because this IS a dim
+    # (and the limit bounds driver memory regardless).
+    rows = (pol_eff.select("host", "max_parallel")
+            .coalesce(1).limit(1025).collect())
+    if len(rows) > 1024:
+        mb = pol_eff.agg(F.max("max_parallel")).first()[0]
+        return pol_eff, max(default_host_budget, int(mb or 0))
+    pol = {r["host"]: int(r["max_parallel"]) for r in rows
+           if r["max_parallel"] is not None}
+    return pol, max([default_host_budget, *pol.values()])
+
+
+def _corpus_bytes(pages: DataFrame) -> int:
+    """Bytes of the corpus's local files; 0 when that is unknown (an
+    in-memory frame, a non-local file system). ``inputFiles`` returns
+    URIs, percent-encoded: ``file:///tmp/a%20b/...``."""
+    uris = [urlparse(f) for f in pages.inputFiles()]
+    if not all(u.scheme == "file" for u in uris):
+        return 0
+    return sum(os.path.getsize(unquote(u.path)) for u in uris)
+
+
 class _Background:
     """Driver-side work that overlaps the crawl's own jobs (concurrent
-    jobs on one SparkSession are supported). Submitted work runs in
-    order, one piece at a time, so two known-table appends never write
-    at once. ``join`` waits for all of it and re-raises the first
-    error: a lost bloom add or known append would silently drop URLs
-    that the exact anti-join trusts. ``wait`` only waits."""
+    jobs on one SparkSession are supported). One worker runs submitted
+    work in order, one piece at a time, so two known-table appends
+    never write at once. ``join`` waits for all of it and re-raises the
+    first error: a lost bloom add or known append would silently drop
+    URLs that the exact anti-join trusts. ``close`` only waits, and
+    ends the worker."""
 
     def __init__(self):
-        self._last: "threading.Thread | None" = None
-        self._errors: list = []
+        self._pool = ThreadPoolExecutor(max_workers=1)
+        self._pending: list = []
 
     def submit(self, fn, *args) -> None:
-        prev = self._last
-
-        def work():
-            if prev is not None:
-                prev.join()
-            try:
-                fn(*args)
-            except BaseException as e:  # noqa: BLE001 — re-raised by join
-                self._errors.append(e)
-
-        self._last = threading.Thread(target=work, daemon=True)
-        self._last.start()
-
-    def wait(self) -> None:
-        if self._last is not None:
-            self._last.join()
-            self._last = None
+        self._pending.append(self._pool.submit(fn, *args))
 
     def join(self) -> None:
-        self.wait()
-        if self._errors:
-            raise self._errors[0]
+        futures.wait(self._pending)
+        for f in self._pending:
+            f.result()
+        self._pending.clear()
+
+    def close(self) -> None:
+        self._pool.shutdown()
+
+
+class _Session(AbstractContextManager):
+    """run_crawl's footprint on the caller's SparkSession, undone on
+    exit whether the crawl returns or raises.
+
+    - ``set_conf`` keeps each overridden conf's first value to restore.
+    - ``persist`` caches a frame for the whole crawl (``wave=True``:
+      for the current wave, which ``release(wave)`` ends). A frame the
+      caller had already cached is used as it is and never released.
+    - ``bg`` runs the crawl's background work. Exit waits for it
+      first, so no job of the crawl still runs on the session it hands
+      back; a raising crawl's own exception is the one that propagates
+      (on the normal path the crawl has already joined and re-raised).
+    """
+
+    def __init__(self, spark: SparkSession):
+        self.spark = spark
+        self.bg = _Background()
+        self.wave: list = []  # also the operators' cache_out list
+        self._crawl: list = []
+        self._conf: dict = {}
+
+    def set_conf(self, key: str, value: str) -> None:
+        if key not in self._conf:
+            self._conf[key] = self.spark.conf.get(key)
+        self.spark.conf.set(key, value)
+
+    def persist(self, df: DataFrame, wave: bool = False) -> DataFrame:
+        if df.storageLevel == StorageLevel.NONE:
+            df = df.persist()
+            (self.wave if wave else self._crawl).append(df)
+        return df
+
+    def release(self, caches: list) -> None:
+        while caches:
+            caches.pop().unpersist()
+
+    def __exit__(self, *exc) -> None:
+        self.bg.close()
+        for k, v in self._conf.items():
+            self.spark.conf.set(k, v)
+        self.release(self.wave)
+        self.release(self._crawl)
+
+
+class _SeenSet:
+    """The URL-seen decision of discovery: ``prune`` drops candidates
+    already in the known set (the mapper's `links` set = every capped
+    candidate ever emitted), ``add`` queues a committed wave's new
+    candidates into it. The decision is an exact LEFT ANTI join; two
+    physical aids engage from the known set's observed size, and
+    neither changes a trace:
+
+    - Known table: above KNOWN_TABLE_THRESHOLD discovered URLs the
+      known set moves from per-wave frontier-file rescans into a parquet
+      table bucketed on `url` (StateBackend.known_*), so the anti-join
+      reads it bucket-aligned — candidates exchange into the table's
+      partitioning, the known side NEVER re-shuffles, and per-wave cost
+      stops growing with wave count. The table is derived state:
+      (re)built from committed frontier waves on engage/resume
+      (overwrite also discards any crash-orphaned append), appended per
+      committed wave, compacted every KNOWN_COMPACT_EVERY appends.
+    - Seen filter: above BLOOM_THRESHOLD known URLs the probabilistic
+      pre-filter (``seen_filter``: "bloom", "cuckoo" — cuckoo.py, 2-row
+      probes — or "off"; the north rule's "Bloom/cuckoo URL-seen")
+      passes its negatives straight through, and only its positives
+      probe the exact anti-join. Below it the anti-join alone is faster
+      than the probe shuffle; at the 10^10 regime the filter prunes
+      nearly all probe volume (SURVEY.md J2). The first activation
+      bulk-builds from the known set, which also covers resume.
+
+    Both aids are fed in the background (``bg``): a wave's adds only
+    have to land before the next wave's ``prune``, so they overlap
+    that wave's (much longer) fetch+extract job."""
+
+    def __init__(self, backend: StateBackend, state_dir: str,
+                 seen_filter: str, bg: _Background):
+        families = {"bloom": BloomState, "cuckoo": CuckooState, "off": None}
+        if seen_filter not in families:
+            raise ValueError(f"unknown seen_filter {seen_filter!r}")
+        cls = families[seen_filter]
+        self.filter = None if cls is None else cls(
+            os.path.join(state_dir, seen_filter))
+        self.backend = backend
+        self.bg = bg
+        self.built = False
+
+    def _frontier_files(self) -> "DataFrame | None":
+        """Each known URL appears exactly once across the committed
+        frontier files with is_new=true (deferred re-appearances are
+        flagged false), so the frontier table doubles as the known
+        table — one write per wave, two roles."""
+        raw = self.backend.read_all("frontier", FRONTIER_DISK_SCHEMA)
+        if raw is None:
+            return None
+        return raw.filter("is_new").select("url", "url_hash")
+
+    def prune(self, cand: DataFrame, discovered: int) -> DataFrame:
+        self.bg.join()  # every add issued so far must have landed
+        be = self.backend
+        if not be.known_active() and discovered > KNOWN_TABLE_THRESHOLD:
+            src = self._frontier_files()
+            if src is not None:
+                be.known_rebuild(src)
+        known = (be.known_read() if be.known_active()
+                 else self._frontier_files())
+        if known is None:
+            return cand
+        if self.filter is None or discovered <= BLOOM_THRESHOLD:
+            return cand.join(known.select("url"), "url", "left_anti")
+        if not self.built:
+            self.filter.add(known.select("url_hash"))
+            self.built = True
+        flagged = self.filter.flag(cand)
+        fresh = flagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
+        maybe = flagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
+        return fresh.unionByName(
+            maybe.join(known.select("url"), "url", "left_anti"))
+
+    def add(self, new_rows: DataFrame) -> None:
+        if self.built:
+            self.bg.submit(self.filter.add, new_rows.select("url_hash"))
+        if self.backend.known_active():
+            # a crash before the manifest line is healed by the
+            # engage-time overwrite rebuild on resume
+            self.bg.submit(self.backend.known_append,
+                           new_rows.select("url", "url_hash"))
+
+
+@dataclass
+class _Cursor:
+    """The crawl position a manifest line carries: fresh start, resume
+    and every wave commit go through it. ``iter`` is the last committed
+    wave (-1 before the first); ``scheduled`` and ``hosts_next`` are
+    the last wave's width and the next frontier's distinct hosts, the
+    size hints of the next wave's physical plan. Lines written before
+    ``failures``, ``hosts_next`` and ``scheduled`` existed resume with
+    None for them: no hints, and failed_pages falls back to a distinct
+    count."""
+
+    run_id: str
+    iter: int = -1
+    next_ord: int = 0
+    successes: int = 0
+    failures: "int | None" = 0
+    discovered_cnt: int = 0
+    limit_reached: bool = False
+    n_frontier_next: int = 0
+    hosts_next: "int | None" = None
+    scheduled: "int | None" = None
+
+    @classmethod
+    def from_line(cls, line: dict) -> "_Cursor":
+        return cls(**{f.name: line.get(f.name) for f in fields(cls)})
+
+    def line(self, **wave) -> dict:
+        """The manifest line committing the cursor's wave; ``wave``
+        adds what only describes that wave."""
+        return {**asdict(self), **wave}
+
+
+@dataclass
+class _Waves:
+    """What every wave of one crawl reads and never changes."""
+
+    params: CrawlParams
+    sess: _Session
+    backend: StateBackend
+    seedset: _SeedSet
+    seen: _SeenSet
+    pages: DataFrame
+    pages_urls: DataFrame
+    broadcast_urls: bool
+    pol_arg: object
+    max_budget: int
+    default_host_budget: int
+    robots_df: "DataFrame | None"
+    scrape_cache: "DataFrame | None"
+    transport: object
+    collect_lineage: bool
+    pattern_udf: object
+
+
+def _wave_step(w: _Waves, cur: _Cursor, frontier: DataFrame):
+    """One BFS wave: schedule -> fetch/extract -> discover -> commit.
+    Advances ``cur`` to the committed wave and returns its manifest
+    line and the next wave's frontier, or (None, None) when politeness
+    starved every host and nothing was committed."""
+    t0 = time.time()
+    spark, params, backend, sess = w.sess.spark, w.params, w.backend, w.sess
+    it = cur.iter + 1
+    L, ML = params.link_limit, params.discovery_cap
+    n_frontier = cur.n_frontier_next
+
+    # explicit shuffle-partition control per wave (north_rule):
+    # micro-waves pay per-task scheduling latency on every one of
+    # their ~10 shuffle stages — size the partition count to the
+    # wave, not the cluster. The heavy extraction stage is
+    # parallelized separately by an explicit repartition.
+    # Floor at cores/4, not cores: the wave-loop shuffles move
+    # O(wave) tiny frontier rows, and each shuffle task pays the
+    # same fixed deserialize/dispatch cost as above (~0.37 s/task
+    # measured on the frontier-commit stage — 83% of its task
+    # time at 64 partitions). Extraction parallelism is ruled by
+    # the corpus-scan splits and the explicit repartition of
+    # `scheduled`, not by this; large frontiers still scale via
+    # the rows term (10^7 frontier rows -> 3333 partitions).
+    cores = spark.sparkContext.defaultParallelism
+    wave_shuffle = min(max(1, cores // 4, n_frontier // 3000), 4 * cores)
+    sess.set_conf("spark.sql.shuffle.partitions", str(wave_shuffle))
+
+    # Driver-known bound on this wave's SCHEDULED row count, before
+    # anything is computed: <= n_frontier, <= remaining link
+    # budget, and <= distinct frontier hosts (prev wave's fused
+    # aggregate) x max host budget. Decides the fetch-join physical
+    # strategy and (tightened by the prev wave's actual width, a
+    # sound predictor because BFS discovery fans out <= ~10
+    # links/page) which global-rank path to take — gating on
+    # n_frontier alone would broadcast a huge scheduled frame when
+    # hosts are many (driver OOM), shuffle needlessly when a huge
+    # frontier collapses to a tiny polite wave, and pay the
+    # two-phase rank's extra exchanges + broadcast-build job on
+    # every steady-state micro-wave.
+    sched_bound = n_frontier
+    if L > 0:
+        sched_bound = min(sched_bound, max(L - cur.successes, 0))
+    if cur.hosts_next:
+        # +10% for approx_count_distinct error, +16 slack
+        sched_bound = min(sched_bound,
+                          int(cur.hosts_next * 1.1 + 16) * w.max_budget)
+    rank_hint = sched_bound
+    if cur.scheduled is not None:
+        # x4 covers every observed inter-wave growth ratio; an
+        # underestimate only means a single-partition sort of a
+        # <=4x-larger-than-hinted wave (slower, never wrong)
+        rank_hint = min(rank_hint, max(cur.scheduled * 4, 4096))
+
+    # 1. politeness selection (salted two-phase per-host top-B
+    # above the salt threshold; plain per-host window below),
+    # cached across the wave's two commits
+    selected, deferred, rank_cache = politeness_select(
+        frontier, w.pol_arg, w.default_host_budget,
+        hint_count=n_frontier, persist=True)
+    if rank_cache is not None:
+        sess.wave.append(rank_cache)
+
+    # 2. global rank in crawl order K; budget cut; crawl_ord
+    selected = ordered_row_number(
+        selected, order_exprs(), "_grank", hint_count=rank_hint,
+        cache_out=sess.wave)
+    if L > 0:
+        rem = L - cur.successes
+        overflow = selected.filter(F.col("_grank") > rem).drop("_grank")
+        deferred = deferred.unionByName(overflow)
+        selected = selected.filter(F.col("_grank") <= rem)
+    scheduled = (selected
+                 .withColumn("crawl_ord",
+                             (F.lit(cur.next_ord) + F.col("_grank") - 1))
+                 .drop("_grank")
+                 .withColumn("iter", F.lit(it)))
+
+    # 3. per-row flags: seed pattern gate + robots page gate
+    scheduled = scheduled.withColumn(
+        "pattern_ok",
+        F.when(F.col("parent_ord") == -1, w.pattern_udf(F.col("url")))
+        .otherwise(F.lit(True)))
+    if w.robots_df is not None:
+        rules = w.robots_df.select(
+            "host", "allow_prefixes", "disallow_prefixes")
+        scheduled = scheduled.join(F.broadcast(rules), "host", "left")
+        scheduled = scheduled.withColumn(
+            "robots_ok",
+            robots_allowed_udf(F.col("url"), F.col("disallow_prefixes"),
+                               F.col("allow_prefixes"))
+        ).drop("allow_prefixes", "disallow_prefixes")
+    else:
+        scheduled = scheduled.withColumn("robots_ok", F.lit(True))
+
+    # 4. fetch (corpus join) + extraction, committed to state.
+    # The global-rank window leaves `scheduled` in ONE partition —
+    # repartition first or extraction runs on a single core.
+    # `scheduled` appears 3x in the fetch-join plan (hits broadcast,
+    # miss probe, hit-url broadcast): persist it so the politeness/
+    # rank window chain materializes once per wave, not per
+    # occurrence.
+    scheduled = sess.persist(
+        scheduled.repartition(max(8, cores), "url"), wave=True)
+
+    # J3 scrape cache: only successful prior rows are cached
+    # (ScrapeWithCache caches after isValidResult,
+    # scrape/service.go:46-48); pattern-skipped seeds never reach
+    # the cache path (streamCrawl checks the pattern first, 470).
+    cache_hits = None
+    if w.scrape_cache is not None and not params.fresh:
+        cacheable = scheduled.filter(F.col("pattern_ok")).select(
+            "url", "iter", "depth", "crawl_ord", "seed_rank", "seed_host",
+            "host", "url_hash", "parent_ord", "link_pos", "attempt")
+        cache_hits = (
+            w.scrape_cache.filter("success")
+            .select("url", "status_code", "title", "markdown", "text",
+                    "links", "discovery", "discovered", "metadata", "html")
+            .join(F.broadcast(cacheable), "url", "inner")
+            .withColumn("success", F.lit(True))
+            .withColumn("error", F.lit(None).cast("string"))
+            .select(*RESULT_SCHEMA.fieldNames()))
+        scheduled = scheduled.join(
+            F.broadcast(cache_hits.select("url")), "url", "left_anti")
+
+    # broadcast-semi strategy while the politeness-capped SCHEDULED
+    # wave is broadcast-sized (sched_bound, computed above);
+    # shuffle-hash beyond (never sorts the corpus). With an
+    # injected transport the corpus join is bypassed entirely (the
+    # live-path seam).
+    extractor = make_extractor(params.include_html, params.fresh)
+    if w.transport is not None:
+        fetched = transport_fetch(scheduled, w.transport)
+        results = fetched.mapInPandas(extractor, RESULT_SCHEMA)
+    elif sched_bound <= SMALL_WAVE_ROWS:
+        # r6: misses never cross the Python boundary — their
+        # result rows are pure codegen expressions of the
+        # scheduled row (miss_results == the extractor's
+        # html-is-None branch, equality-tested), so the
+        # extraction UDF runs on hit rows only.
+        hits, miss = fetch_join_split(
+            scheduled, w.pages, pages_urls=w.pages_urls,
+            broadcast_urls=w.broadcast_urls)
+        results = (hits.mapInPandas(extractor, RESULT_SCHEMA)
+                   .unionByName(miss_results(miss, params.fresh)))
+    else:
+        fetched = fetch_join(scheduled, w.pages)
+        results = fetched.mapInPandas(extractor, RESULT_SCHEMA)
+    if cache_hits is not None:
+        results = results.unionByName(cache_hits)
+    t_fetch = time.time()
+    # per-wave aggregates ride the write actions as observed
+    # metrics — zero standalone aggregation jobs per wave (every
+    # saved action is ~0.5-1s of fixed, non-scaling driver latency)
+    obs_res = Observation(f"res_{cur.run_id}_{it}")
+    results = results.observe(
+        obs_res, F.count(F.lit(1)).alias("sched"),
+        F.sum(F.col("success").cast("long")).alias("succ"),
+        F.sum(F.col("error").isNotNull().cast("long")).alias("fail"))
+    backend.write_wave("results", it, results)
+    res_m = obs_res.get
+    # manifest phase timings: disjoint, consecutive intervals
+    t_disc = time.time()
+    stage_ms = {"fetch_extract": int((t_disc - t_fetch) * 1000)}
+    res_df = backend.read_wave("results", it, RESULT_SCHEMA)
+
+    if w.collect_lineage:
+        lin = (res_df
+               .groupBy(F.spark_partition_id().alias("partition_id"))
+               .agg(F.count("*").alias("rows"))
+               .select(F.lit(cur.run_id).alias("run_id"),
+                       F.lit(it).alias("iter"),
+                       F.lit("extract").alias("stage"),
+                       "partition_id", "rows"))
+        backend.write_wave("lineage", it, lin)
+
+    # 5. discovery: emission filters -> known-dedup -> cap, fused
+    # with the frontier commit: ONE write (deferred is_new=false ∪
+    # new candidates is_new=true) + ONE count job per wave.
+    if not cur.limit_reached:
+        cand = expand_candidates(
+            res_df, params.include_subdomains, params.patterns,
+            w.robots_df, max_depth=params.max_depth)
+        cand = w.seen.prune(cand, cur.discovered_cnt)
+        # intra-wave first-seen dedup (J5): min discovery order
+        # wins. Expressed as min(struct) — NOT a row_number window
+        # — because struct-min has a map-side partial aggregate:
+        # each task collapses its local duplicates before the
+        # exchange, so the shuffle carries ~distinct-url volume
+        # instead of every discovered link (a window must shuffle
+        # all rows first). (parent_ord, link_pos) is unique per
+        # candidate row and leads the struct, so lexicographic
+        # struct ordering == the discovery order and the result is
+        # deterministic and identical to the row_number form.
+        other = [c for c in cand.columns
+                 if c not in ("url", "parent_ord", "link_pos")]
+        cand = (cand.groupBy("url")
+                .agg(F.min(F.struct("parent_ord", "link_pos",
+                                    *other)).alias("_first"))
+                .select("url", "_first.*"))
+        # discovery cap (mapper limitReached)
+        if ML is not None:
+            avail = ML - cur.discovered_cnt
+            cand = ordered_row_number(
+                cand, ["parent_ord", "link_pos"], "_dord",
+                cache_out=sess.wave)
+            cand = cand.filter(F.col("_dord") <= avail).drop("_dord")
+        new_cand = cand.select(*FRONTIER_SCHEMA.fieldNames())
+    else:
+        new_cand = spark.createDataFrame([], FRONTIER_SCHEMA)
+
+    # 6. frontier commit. Seed-pointing candidates stay in the
+    # file with is_new=true (they consumed discovery budget and
+    # must stay in `known`) but are never scheduled — the read
+    # filter drops them (the crawler's processed map,
+    # crawl/service.go:525-527).
+    next_frontier = (
+        deferred.select(*FRONTIER_SCHEMA.fieldNames())
+        .withColumn("is_new", F.lit(False))
+        .unionByName(new_cand.withColumn("is_new", F.lit(True))))
+    if params.retry_failures:
+        # F9 retry: a failed fetch releases its budget slot and the URL
+        # re-enters the frontier (delete(processed,u) + releaseSlot,
+        # crawl/service.go:564-571) up to max_retries total attempts
+        # (TASK_MAX_RETRIES, config.go:90). Retry rows keep their
+        # original crawl-order key (depth, parent_ord, link_pos) and
+        # bypass the known-set anti-join (is_new=false: the processed
+        # map and the mapper's discovery dedup are separate states).
+        next_frontier = next_frontier.unionByName(res_df.filter(
+            F.col("error").isNotNull()
+            & (F.col("attempt") < params.max_retries - 1))
+            .select("url", "host", "url_hash", "depth", "parent_ord",
+                    "link_pos", "seed_rank", "seed_host",
+                    F.lit(0.0).alias("priority"),
+                    (F.col("attempt") + 1).alias("attempt"),
+                    F.lit(False).alias("is_new")))
+    next_frontier = w.seedset.flag(next_frontier)
+    sched_cond = ~(F.col("is_new") & F.col("_seed"))
+    obs_fr = Observation(f"fr_{cur.run_id}_{it}")
+    next_frontier = next_frontier.observe(
+        obs_fr,
+        F.sum(F.col("is_new").cast("long")).alias("new"),
+        F.sum(sched_cond.cast("long")).alias("sched"),
+        F.approx_count_distinct(
+            F.when(sched_cond, F.col("host"))).alias("hosts")
+    ).drop("_seed")
+    t_fr = time.time()
+    stage_ms["discovery"] = int((t_fr - t_disc) * 1000)
+    backend.write_wave("frontier", it, next_frontier)
+    fr_m = obs_fr.get
+    t_agg = time.time()
+    stage_ms["frontier"] = int((t_agg - t_fr) * 1000)
+    raw = backend.read_wave("frontier", it, FRONTIER_DISK_SCHEMA)
+    wave_sched = int(res_m["sched"] or 0)
+    wave_succ = int(res_m["succ"] or 0)
+    n_new = int(fr_m["new"] or 0)
+    sess.release(sess.wave)
+    if wave_sched == 0:
+        # a zero-budget politeness table starved every remaining
+        # host: nothing is ever schedulable again. Match the
+        # oracle's empty-selection exit — the empty wave is not
+        # committed (no manifest line, files pruned), instead of
+        # looping to max_waves at fixed driver cost per iteration.
+        backend.prune_uncommitted(it - 1)
+        return None, None
+    frontier = _schedulable_frontier(raw, w.seedset)
+    if not cur.limit_reached:
+        if n_new:
+            w.seen.add(raw.filter("is_new"))
+        if ML is not None and cur.discovered_cnt + n_new >= ML:
+            cur.limit_reached = True
+        cur.discovered_cnt += n_new
+    stage_ms["agg"] = int((time.time() - t_agg) * 1000)
+
+    # 7. commit the wave
+    cur.iter = it
+    cur.scheduled = wave_sched
+    cur.successes += wave_succ
+    cur.next_ord += wave_sched
+    if cur.failures is not None:
+        cur.failures += int(res_m["fail"] or 0)
+    cur.n_frontier_next = int(fr_m["sched"] or 0)
+    cur.hosts_next = int(fr_m["hosts"] or 0)
+    line = cur.line(wave_successes=wave_succ, retry=params.retry_failures,
+                    wall_ms=int((time.time() - t0) * 1000),
+                    stage_ms=stage_ms)
+    backend.append_manifest(line, truncate=(it == 0))
+    return line, frontier
 
 
 def run_crawl(
@@ -435,6 +946,10 @@ def run_crawl(
     ``pages_prepared``: pass True when pages_df already has url_canon
     (e.g. from bucketize_pages).
 
+    ``cache_pages``: keep the prepared corpus cached for the crawl (a
+    frame the caller already cached stays the caller's: the crawl
+    neither re-persists nor releases it).
+
     ``scrape_cache``: a prior run's successful result rows (J3, the
     Redis scrape cache, scrape/service.go:583-614): cache-hit URLs
     skip both the corpus join and the extraction UDF and reuse the
@@ -446,7 +961,7 @@ def run_crawl(
     URL-seen pre-filter prunes the exact anti-join (north_rule:
     "Bloom/cuckoo URL-seen"). A pure physical-plan choice: the exact
     anti-join re-checks every positive, so traces are identical across
-    all three (tested).
+    all three (tested; see _SeenSet).
 
     Every other physical path is picked from observed sizes, and each
     module threshold is the only selector of its path: the seeds dim
@@ -473,8 +988,7 @@ def run_crawl(
     """
     params = params or CrawlParams()
     t_init = time.time()
-    own_state = state_dir is None
-    if own_state:
+    if state_dir is None:
         state_dir = tempfile.mkdtemp(prefix="supacrawler_state_")
     os.makedirs(state_dir, exist_ok=True)
     backend = state_backend or ParquetStateBackend(
@@ -490,7 +1004,7 @@ def run_crawl(
 
     if pages_prepared:
         # caller already has a canonical-keyed (possibly bucketed) table
-        pages_prep = pages_df
+        pages = pages_df
     else:
         # materialize the prepared corpus ONCE: every wave's fetch join
         # then scans parquet instead of re-running the upstream lineage
@@ -499,29 +1013,10 @@ def run_crawl(
         pages_path = os.path.join(state_dir, "pages")
         if not (resume and os.path.exists(pages_path)):
             _write(prepare_pages(pages_df), pages_path)
-        pages_prep = spark.read.parquet(pages_path)
-    # Every session conf the crawl overrides goes through set_conf, which
-    # keeps its first value for the finally below to restore whether the
-    # crawl returns or raises.
-    saved_conf: dict = {}
-
-    def set_conf(key: str, value: str) -> None:
-        if key not in saved_conf:
-            saved_conf[key] = spark.conf.get(key)
-        spark.conf.set(key, value)
-
-    # the corpus url projection, Bloom adds and known-table appends
-    bg = _Background()
-    pages_urls = _rank_cache = None
-    wave_caches: list = []
-    try:
-        try:
-            _corpus_bytes = sum(
-                os.path.getsize(f[5:] if f.startswith("file:") else f)
-                for f in pages_prep.inputFiles())
-        except Exception:  # non-file source (in-memory test frame)
-            _corpus_bytes = 0
-        if _corpus_bytes:
+        pages = spark.read.parquet(pages_path)
+    with _Session(spark) as sess:
+        corpus_bytes = _corpus_bytes(pages)
+        if corpus_bytes:
             # The scan split size is Spark's own: min(maxPartitionBytes,
             # (bytes + files x openCost) / parallelism), which spreads
             # the corpus over every core and charges each file its open
@@ -536,544 +1031,92 @@ def run_crawl(
             # each pay the stage's fixed per-task cost. It is set before
             # the corpus's first action: a persisted corpus keeps the
             # partitioning of its first scan.
-            set_conf("spark.sql.files.openCostInBytes", str(512 * 1024))
+            sess.set_conf("spark.sql.files.openCostInBytes", str(512 * 1024))
         if cache_pages:
             # the fetch join scans the corpus every wave — keep it hot
             # (memory+disk). At 100-TB scale this is the executors' cache
             # of hot table partitions; disable for corpora >> cluster RAM.
-            pages_prep = pages_prep.persist()
+            pages = sess.persist(pages)
         # url-only corpus projection for the miss path of the fetch join:
         # a few bytes/row, so the fat html column is scanned once per wave.
         # Written in the background — the scan is independent of the rest
         # of preloop (politeness collapse, seed init, frontier count), so
         # overlapping it takes its 1-2 s off the preloop critical path;
         # joined just before the wave loop, where the projection is first
-        # read. Concurrent jobs on one SparkSession are supported (the
-        # wave loop's bloom/known appends rely on this too).
+        # read.
         urls_path = os.path.join(state_dir, "pages_urls")
         if not (resume and os.path.exists(urls_path)):
-            bg.submit(_write, pages_prep.select("url_canon"), urls_path)
-
-        D = params.max_depth
-        L = params.link_limit
-        ML = params.discovery_cap
-        pattern_udf = match_patterns_udf(params.patterns)
-
-        # upper bound on any host's politeness budget — used with the
-        # frontier's distinct-host count to bound the scheduled-wave size
-        # before it is computed (broadcast-vs-shuffle gate). politeness_df
-        # is a broadcastable dim by design, so this one-time driver action
-        # is tiny at any scale.
-        max_budget = default_host_budget
-        # Per-host delays fold into the budget BEFORE the collapse below
+            sess.bg.submit(_write, pages.select("url_canon"), urls_path)
+        # Per-host delays fold into the budget BEFORE the collapse
         # (semantics + citations: effective_politeness docstring).
-        pol_eff = effective_politeness(politeness_df, robots_df,
-                                       params.wave_window_ms,
-                                       default_host_budget)
-        pol_arg = pol_eff
-        if pol_eff is not None:
-            # Small dims (the norm: one row per throttled host) collapse to
-            # a driver dict -> literal MAP lookup in politeness_select: one
-            # collect here instead of a broadcast-build job EVERY wave.
-            # Large dims keep the broadcast-join path.
-            # coalesce(1) first: a limited collect over a many-partition
-            # dim otherwise runs Spark's incremental take — up to 4
-            # escalating jobs (1 -> 4 -> 16 -> all partitions) for a
-            # dim of a few dozen rows (measured 4.9 s of preloop on a
-            # cold session). One partition -> one job; the single-thread
-            # scan is bounded because this IS a dim (and the limit bounds
-            # driver memory regardless).
-            _rows = (pol_eff.select("host", "max_parallel")
-                     .coalesce(1).limit(1025).collect())
-            if len(_rows) <= 1024:
-                pol_arg = {r["host"]: int(r["max_parallel"]) for r in _rows
-                           if r["max_parallel"] is not None}
-                if pol_arg:
-                    max_budget = max(max(pol_arg.values()),
-                                     default_host_budget)
-            else:
-                _mb = pol_eff.agg(F.max("max_parallel")).first()[0]
-                if _mb is not None:
-                    max_budget = max(int(_mb), default_host_budget)
+        pol_arg, max_budget = _politeness_arg(
+            effective_politeness(politeness_df, robots_df,
+                                 params.wave_window_ms, default_host_budget),
+            default_host_budget)
 
         # ---- init / resume ------------------------------------------------
         manifest = backend.read_manifest() if resume else []
         seedset = _SeedSet(spark, seeds, state_dir, resume=bool(manifest))
         if manifest:
-            last = manifest[-1]
-            it0 = last["iter"] + 1
-            next_ord = last["next_ord"]
-            successes = last["successes"]
-            failures = last.get("failures")  # None on pre-upgrade state dirs
-            discovered_cnt = last["discovered_cnt"]
-            limit_reached = last["limit_reached"]
-            run_id = last["run_id"]
-            hosts_est = last.get("hosts_next")
-            prev_sched = last.get("scheduled")
+            cur = _Cursor.from_line(manifest[-1])
             frontier = _schedulable_frontier(
-                backend.read_wave("frontier", last["iter"],
-                                  FRONTIER_DISK_SCHEMA), seedset)
-            n_frontier = last["n_frontier_next"]
+                backend.read_wave("frontier", cur.iter, FRONTIER_DISK_SCHEMA),
+                seedset)
         else:
-            it0 = 0
-            next_ord = 0
-            successes = 0
-            failures = 0
-            limit_reached = False
-            run_id = uuid.uuid4().hex[:12]
             frontier = seedset.frontier()
             # literal-seed mode: the deduped canonical count is already
             # driver-known — no count job (dim mode still counts)
-            n_frontier = (len(seedset.urls) if seedset.urls is not None
-                          else frontier.count())
-            discovered_cnt = 0
-            hosts_est = None
-            prev_sched = None
-        backend.run_id = run_id  # known-table namespace (parquet backend)
+            cur = _Cursor(run_id=uuid.uuid4().hex[:12], n_frontier_next=(
+                len(seedset.urls) if seedset.urls is not None
+                else frontier.count()))
+        backend.run_id = cur.run_id  # known-table namespace (parquet backend)
         # crash-window hygiene: drop any wave tables newer than the last
         # committed manifest line (all of them on a fresh start)
-        backend.prune_uncommitted(manifest[-1]["iter"] if manifest else -1)
-
-        # Bloom engages lazily: below BLOOM_THRESHOLD known keys the exact
-        # anti-join alone is faster than the probe shuffle; at the 10^10
-        # regime the filter prunes nearly all probe volume (SURVEY.md J2).
-        # The first activation bulk-builds from the known table (this also
-        # covers resume — no separate rebuild path needed).
-        # `seen_filter` picks the probabilistic pre-filter family the north
-        # rule names ("Bloom/cuckoo URL-seen"): "bloom" (default),
-        # "cuckoo" (cuckoo.py — deletable, 2-row probes), or "off". Both
-        # expose the same add/flag API, so everything below is
-        # filter-agnostic; trace equivalence bloom == cuckoo == off is
-        # pinned by tests (the exact anti-join always re-checks positives).
-        if seen_filter == "bloom":
-            bloom = BloomState(os.path.join(state_dir, "bloom"))
-        elif seen_filter == "cuckoo":
-            bloom = CuckooState(os.path.join(state_dir, "cuckoo"))
-        elif seen_filter == "off":
-            bloom = None
-        else:
-            raise ValueError(f"unknown seen_filter {seen_filter!r}")
-        bloom_built = False
-
-        def _known_files_df() -> "DataFrame | None":
-            """The mapper's `links` set = all capped candidates ever
-            emitted. Each appears exactly once across frontier files with
-            is_new=true (deferred re-appearances are flagged false), so
-            the frontier table doubles as the known table — one write per
-            wave, two roles. Duplicates would be harmless anyway (the
-            consumer is a LEFT ANTI join)."""
-            raw = backend.read_all("frontier", FRONTIER_DISK_SCHEMA)
-            if raw is None:
-                return None
-            return raw.filter("is_new").select("url", "url_hash")
-
-        # ---- bucketed known-state table (module docstring scale note) -----
-        # Engaged above KNOWN_TABLE_THRESHOLD discovered URLs: the
-        # cumulative known set lives in a parquet table bucketed on
-        # `url`, so the per-wave exact anti-join reads it bucket-aligned —
-        # candidates exchange into the table's partitioning, the known
-        # side NEVER re-shuffles, and per-wave anti-join cost stops
-        # growing with wave count. The table is derived state: (re)built
-        # from committed frontier waves on engage/resume (overwrite also
-        # discards any crash-orphaned append), appended per committed
-        # wave, compacted into the next generation every
-        # KNOWN_COMPACT_EVERY appends. Storage lives on the state backend
-        # (StateBackend.known_*).
-
-        def known_df() -> "DataFrame | None":
-            if backend.known_active():
-                return backend.known_read()
-            return _known_files_df()
-
-        # Seed-membership semantics (why seeds are excluded from the known
-        # anti-join but dropped from the next frontier) live on _SeedSet.
+        backend.prune_uncommitted(cur.iter)
+        seen = _SeenSet(backend, state_dir, seen_filter, sess.bg)
 
         # ---- wave loop ----------------------------------------------------
-        bg.join()  # the url projection is read from the first wave on
-        pages_urls = spark.read.parquet(urls_path).persist()
-        it = it0
+        sess.bg.join()  # the url projection is read from the first wave on
+        waves = _Waves(
+            params=params, sess=sess, backend=backend, seedset=seedset,
+            seen=seen, pages=pages,
+            pages_urls=sess.persist(spark.read.parquet(urls_path)),
+            broadcast_urls=0 < corpus_bytes <= CORPUS_URLS_BROADCAST_BYTES,
+            pol_arg=pol_arg, max_budget=max_budget,
+            default_host_budget=default_host_budget, robots_df=robots_df,
+            scrape_cache=scrape_cache, transport=transport,
+            collect_lineage=collect_lineage,
+            pattern_udf=match_patterns_udf(params.patterns))
         t_loop = time.time()
         # AQE off for the wave loop: adaptive execution materializes every
         # exchange as a query stage with a driver round-trip — pure fixed
         # latency on iterative micro-waves. The two things AQE would buy
         # are already done explicitly here: shuffle partitions are sized to
-        # the wave (wave_shuffle below) and hot-host skew is pre-salted
+        # the wave (_wave_step) and hot-host skew is pre-salted
         # (operators/frontier.py). Restored on exit.
-        set_conf("spark.sql.adaptive.enabled", "false")
-        cores = spark.sparkContext.defaultParallelism
-        t_start = time.time()
+        sess.set_conf("spark.sql.adaptive.enabled", "false")
+        L = params.link_limit
         deadline_hit = False
-        while n_frontier > 0 and it < params.max_waves:
-            if L > 0 and successes >= L:
+        while cur.n_frontier_next > 0 and cur.iter + 1 < params.max_waves:
+            if L > 0 and cur.successes >= L:
                 break
             if (params.max_seconds is not None
-                    and time.time() - t_start > params.max_seconds):
+                    and time.time() - t_loop > params.max_seconds):
                 # L6 wall-clock cap (crawl/service.go:323-331): stop
                 # between waves; committed state stays resumable
                 deadline_hit = True
                 break
-            t0 = time.time()
-
-            # explicit shuffle-partition control per wave (north_rule):
-            # micro-waves pay per-task scheduling latency on every one of
-            # their ~10 shuffle stages — size the partition count to the
-            # wave, not the cluster. The heavy extraction stage is
-            # parallelized separately by an explicit repartition.
-            # Floor at cores/4, not cores: the wave-loop shuffles move
-            # O(wave) tiny frontier rows, and each shuffle task pays the
-            # same fixed deserialize/dispatch cost as above (~0.37 s/task
-            # measured on the frontier-commit stage — 83% of its task
-            # time at 64 partitions). Extraction parallelism is ruled by
-            # the corpus-scan splits and the explicit repartition of
-            # `scheduled`, not by this; large frontiers still scale via
-            # the rows term (10^7 frontier rows -> 3333 partitions).
-            wave_shuffle = min(max(1, cores // 4, n_frontier // 3000),
-                               4 * cores)
-            set_conf("spark.sql.shuffle.partitions", str(wave_shuffle))
-
-            # Driver-known bound on this wave's SCHEDULED row count, before
-            # anything is computed: <= n_frontier, <= remaining link
-            # budget, and <= distinct frontier hosts (prev wave's fused
-            # aggregate) x max host budget. Decides the fetch-join physical
-            # strategy and (tightened by the prev wave's actual width, a
-            # sound predictor because BFS discovery fans out <= ~10
-            # links/page) which global-rank path to take — gating on
-            # n_frontier alone would broadcast a huge scheduled frame when
-            # hosts are many (driver OOM), shuffle needlessly when a huge
-            # frontier collapses to a tiny polite wave, and pay the
-            # two-phase rank's extra exchanges + broadcast-build job on
-            # every steady-state micro-wave.
-            sched_bound = n_frontier
-            if L > 0:
-                sched_bound = min(sched_bound, max(L - successes, 0))
-            if hosts_est:
-                # +10% for approx_count_distinct error, +16 slack
-                sched_bound = min(sched_bound,
-                                  int(hosts_est * 1.1 + 16) * max_budget)
-            rank_hint = sched_bound
-            if prev_sched is not None:
-                # x4 covers every observed inter-wave growth ratio; an
-                # underestimate only means a single-partition sort of a
-                # <=4x-larger-than-hinted wave (slower, never wrong)
-                rank_hint = min(rank_hint, max(prev_sched * 4, 4096))
-
-            # 1. politeness selection (salted two-phase per-host top-B
-            # above the salt threshold; plain per-host window below),
-            # cached across the wave's two commits
-            selected, deferred, _rank_cache = politeness_select(
-                frontier, pol_arg, default_host_budget,
-                hint_count=n_frontier, persist=True)
-
-            # 2. global rank in crawl order K; budget cut; crawl_ord
-            wave_caches = []
-            selected = ordered_row_number(
-                selected, order_exprs(), "_grank", hint_count=rank_hint,
-                cache_out=wave_caches)
-            if L > 0:
-                rem = L - successes
-                overflow = (selected.filter(F.col("_grank") > rem)
-                            .drop("_grank"))
-                deferred = deferred.unionByName(overflow)
-                selected = selected.filter(F.col("_grank") <= rem)
-            scheduled = (selected
-                         .withColumn("crawl_ord",
-                                     (F.lit(next_ord) + F.col("_grank") - 1))
-                         .drop("_grank")
-                         .withColumn("iter", F.lit(it)))
-
-            # 3. per-row flags: seed pattern gate + robots page gate
-            scheduled = scheduled.withColumn(
-                "pattern_ok",
-                F.when(F.col("parent_ord") == -1, pattern_udf(F.col("url")))
-                .otherwise(F.lit(True)))
-            if robots_df is not None:
-                rules = robots_df.select(
-                    "host", "allow_prefixes", "disallow_prefixes")
-                scheduled = scheduled.join(F.broadcast(rules), "host", "left")
-                scheduled = scheduled.withColumn(
-                    "robots_ok",
-                    robots_allowed_udf(F.col("url"),
-                                       F.col("disallow_prefixes"),
-                                       F.col("allow_prefixes"))
-                ).drop("allow_prefixes", "disallow_prefixes")
-            else:
-                scheduled = scheduled.withColumn("robots_ok", F.lit(True))
-
-            # 4. fetch (corpus join) + extraction, committed to state.
-            # The global-rank window leaves `scheduled` in ONE partition —
-            # repartition first or extraction runs on a single core.
-            # `scheduled` appears 3x in the fetch-join plan (hits broadcast,
-            # miss probe, hit-url broadcast): persist it so the politeness/
-            # rank window chain materializes once per wave, not per
-            # occurrence.
-            scheduled = scheduled.repartition(
-                max(8, spark.sparkContext.defaultParallelism), "url").persist()
-            wave_caches.append(scheduled)
-
-            # J3 scrape cache: only successful prior rows are cached
-            # (ScrapeWithCache caches after isValidResult,
-            # scrape/service.go:46-48); pattern-skipped seeds never reach
-            # the cache path (streamCrawl checks the pattern first, 470).
-            cache_hits = None
-            if scrape_cache is not None and not params.fresh:
-                cacheable = scheduled.filter(F.col("pattern_ok"))
-                c = scrape_cache.filter("success").select(
-                    "url", "status_code", "title", "markdown", "text",
-                    "links", "discovery", "discovered", "metadata", "html")
-                hit = c.join(
-                    F.broadcast(cacheable.select(
-                        "url", "iter", "depth", "crawl_ord", "seed_rank",
-                        "seed_host", "host", "url_hash", "parent_ord",
-                        "link_pos", "attempt")), "url", "inner")
-                cache_hits = hit.select(
-                    "url", "iter", "depth", "crawl_ord", "seed_rank",
-                    "seed_host", "host", "url_hash", "parent_ord",
-                    "link_pos", "attempt", "status_code",
-                    F.lit(True).alias("success"),
-                    F.lit(None).cast("string").alias("error"),
-                    "title", "markdown", "text", "links", "discovery",
-                    "discovered", "metadata", "html")
-                scheduled = scheduled.join(
-                    F.broadcast(cache_hits.select("url")), "url", "left_anti")
-
-            # broadcast-semi strategy while the politeness-capped SCHEDULED
-            # wave is broadcast-sized (sched_bound, computed above);
-            # shuffle-hash beyond (never sorts the corpus). With an
-            # injected transport the corpus join is bypassed entirely (the
-            # live-path seam).
-            extractor = make_extractor(params.include_html, params.fresh)
-            if transport is not None:
-                fetched = transport_fetch(scheduled, transport)
-                results = fetched.mapInPandas(extractor, RESULT_SCHEMA)
-            elif sched_bound <= SMALL_WAVE_ROWS:
-                # r6: misses never cross the Python boundary — their
-                # result rows are pure codegen expressions of the
-                # scheduled row (miss_results == the extractor's
-                # html-is-None branch, equality-tested), so the
-                # extraction UDF runs on hit rows only.
-                hits, miss = fetch_join_split(
-                    scheduled, pages_prep, pages_urls=pages_urls,
-                    broadcast_urls=bool(
-                        _corpus_bytes
-                        and _corpus_bytes <= CORPUS_URLS_BROADCAST_BYTES))
-                results = (hits.mapInPandas(extractor, RESULT_SCHEMA)
-                           .unionByName(miss_results(miss, params.fresh)))
-            else:
-                fetched = fetch_join(scheduled, pages_prep)
-                results = fetched.mapInPandas(extractor, RESULT_SCHEMA)
-            if cache_hits is not None:
-                results = results.unionByName(
-                    cache_hits.select(*[f.name for f in RESULT_SCHEMA.fields]))
-            t_fetch = time.time()
-            # per-wave aggregates ride the write actions as observed
-            # metrics — zero standalone aggregation jobs per wave (every
-            # saved action is ~0.5-1s of fixed, non-scaling driver latency)
-            obs_res = Observation(f"res_{run_id}_{it}")
-            results = results.observe(
-                obs_res, F.count(F.lit(1)).alias("sched"),
-                F.sum(F.col("success").cast("long")).alias("succ"),
-                F.sum(F.col("error").isNotNull().cast("long")).alias("fail"))
-            backend.write_wave("results", it, results)
-            res_m = obs_res.get
-            # manifest phase timings: disjoint, consecutive intervals
-            t_disc = time.time()
-            stage_ms = {"fetch_extract": int((t_disc - t_fetch) * 1000)}
-            res_df = backend.read_wave("results", it, RESULT_SCHEMA)
-
-            if collect_lineage:
-                lin = (res_df
-                       .groupBy(F.spark_partition_id().alias("partition_id"))
-                       .agg(F.count("*").alias("rows"))
-                       .select(F.lit(run_id).alias("run_id"),
-                               F.lit(it).alias("iter"),
-                               F.lit("extract").alias("stage"),
-                               "partition_id", "rows"))
-                backend.write_wave("lineage", it, lin)
-
-            # 5. discovery: emission filters -> known-dedup -> cap, fused
-            # with the frontier commit: ONE write (deferred is_new=false ∪
-            # new candidates is_new=true) + ONE count job per wave.
-            n_new = 0
-            if not limit_reached:
-                cand = expand_candidates(
-                    res_df, params.include_subdomains, params.patterns,
-                    robots_df, max_depth=D)
-                # the anti-join and probe below must see every known
-                # append and bloom add issued so far
-                bg.join()
-                if (not backend.known_active()
-                        and discovered_cnt > KNOWN_TABLE_THRESHOLD):
-                    src = _known_files_df()
-                    if src is not None:
-                        backend.known_rebuild(src)
-                kdf = known_df()
-                if kdf is not None:
-                    bloom_active = bloom is not None and \
-                        discovered_cnt > BLOOM_THRESHOLD
-                    if bloom_active and not bloom_built:
-                        bloom.add(kdf.select("url_hash"))
-                        bloom_built = True
-                    if bloom_active:
-                        flagged = bloom.flag(cand)
-                        fresh_c = flagged.filter(~F.col("_maybe_seen")).drop(
-                            "_maybe_seen")
-                        maybe = flagged.filter(F.col("_maybe_seen")).drop(
-                            "_maybe_seen")
-                        maybe = maybe.join(kdf.select("url"), "url",
-                                           "left_anti")
-                        cand = fresh_c.unionByName(maybe)
-                    else:
-                        cand = cand.join(kdf.select("url"), "url", "left_anti")
-                # intra-wave first-seen dedup (J5): min discovery order
-                # wins. Expressed as min(struct) — NOT a row_number window
-                # — because struct-min has a map-side partial aggregate:
-                # each task collapses its local duplicates before the
-                # exchange, so the shuffle carries ~distinct-url volume
-                # instead of every discovered link (a window must shuffle
-                # all rows first). (parent_ord, link_pos) is unique per
-                # candidate row and leads the struct, so lexicographic
-                # struct ordering == the discovery order and the result is
-                # deterministic and identical to the row_number form.
-                other = [c for c in cand.columns
-                         if c not in ("url", "parent_ord", "link_pos")]
-                cand = (cand.groupBy("url")
-                        .agg(F.min(F.struct("parent_ord", "link_pos",
-                                            *other)).alias("_first"))
-                        .select("url", "_first.*"))
-                # discovery cap (mapper limitReached)
-                if ML is not None:
-                    avail = ML - discovered_cnt
-                    cand = ordered_row_number(
-                        cand, ["parent_ord", "link_pos"], "_dord",
-                        cache_out=wave_caches)
-                    cand = cand.filter(F.col("_dord") <= avail).drop("_dord")
-                new_cand = cand.select(*FRONTIER_SCHEMA.fieldNames())
-            else:
-                new_cand = spark.createDataFrame([], FRONTIER_SCHEMA)
-
-            # F9 retry: a failed fetch releases its budget slot and the URL
-            # re-enters the frontier (delete(processed,u) + releaseSlot,
-            # crawl/service.go:564-571) up to max_retries total attempts
-            # (TASK_MAX_RETRIES, config.go:90). Retry rows keep their
-            # original crawl-order key (depth, parent_ord, link_pos) and
-            # bypass the known-set anti-join (is_new=false: the processed
-            # map and the mapper's discovery dedup are separate states).
-            retry_rows = None
-            if params.retry_failures:
-                retry_rows = (res_df.filter(
-                    F.col("error").isNotNull()
-                    & (F.col("attempt") < params.max_retries - 1))
-                    .select("url", "host", "url_hash", "depth", "parent_ord",
-                            "link_pos", "seed_rank", "seed_host",
-                            F.lit(0.0).alias("priority"),
-                            (F.col("attempt") + 1).alias("attempt")))
-
-            # 6. frontier commit. Seed-pointing candidates stay in the
-            # file with is_new=true (they consumed discovery budget and
-            # must stay in `known`) but are never scheduled — the read
-            # filter drops them (the crawler's processed map,
-            # crawl/service.go:525-527).
-            next_frontier = (
-                deferred.select(*FRONTIER_SCHEMA.fieldNames())
-                .withColumn("is_new", F.lit(False))
-                .unionByName(new_cand.withColumn("is_new", F.lit(True))))
-            if retry_rows is not None:
-                next_frontier = next_frontier.unionByName(
-                    retry_rows.select(*FRONTIER_SCHEMA.fieldNames())
-                    .withColumn("is_new", F.lit(False)))
-            next_frontier = seedset.flag(next_frontier)
-            sched_cond = ~(F.col("is_new") & F.col("_seed"))
-            obs_fr = Observation(f"fr_{run_id}_{it}")
-            next_frontier = next_frontier.observe(
-                obs_fr,
-                F.sum(F.col("is_new").cast("long")).alias("new"),
-                F.sum(sched_cond.cast("long")).alias("sched"),
-                F.approx_count_distinct(
-                    F.when(sched_cond, F.col("host"))).alias("hosts")
-            ).drop("_seed")
-            t_fr = time.time()
-            stage_ms["discovery"] = int((t_fr - t_disc) * 1000)
-            backend.write_wave("frontier", it, next_frontier)
-            fr_m = obs_fr.get
-            t_agg = time.time()
-            stage_ms["frontier"] = int((t_agg - t_fr) * 1000)
-            raw = backend.read_wave("frontier", it, FRONTIER_DISK_SCHEMA)
-            wave_sched = int(res_m["sched"] or 0)
-            prev_sched = wave_sched
-            wave_succ = int(res_m["succ"] or 0)
-            if failures is not None:
-                failures += int(res_m["fail"] or 0)
-            n_new = int(fr_m["new"] or 0)
-            n_frontier = int(fr_m["sched"] or 0)
-            hosts_est = int(fr_m["hosts"] or 0)
-            if _rank_cache is not None:
-                _rank_cache.unpersist()
-            for c in wave_caches:
-                c.unpersist()
-            if wave_sched == 0:
-                # a zero-budget politeness table starved every remaining
-                # host: nothing is ever schedulable again. Match the
-                # oracle's empty-selection exit — the empty wave is not
-                # committed (no manifest line, files pruned), instead of
-                # looping to max_waves at fixed driver cost per iteration.
-                backend.prune_uncommitted(it - 1)
+            line, frontier = _wave_step(waves, cur, frontier)
+            if line is None:
                 break
-            frontier = _schedulable_frontier(raw, seedset)
-            if not limit_reached:
-                # both only have to land before the NEXT wave's anti-join,
-                # so they overlap that wave's (much longer) fetch+extract
-                # job instead of adding fixed latency to every wave
-                if bloom_built and n_new:
-                    bg.submit(bloom.add,
-                              raw.filter("is_new").select("url_hash"))
-                if backend.known_active() and n_new:
-                    # this wave's accepted candidates become `known` for
-                    # wave it+1; crash before the manifest line is healed
-                    # by the engage-time overwrite rebuild on resume
-                    bg.submit(backend.known_append,
-                              raw.filter("is_new").select("url", "url_hash"))
-                if ML is not None and discovered_cnt + n_new >= ML:
-                    limit_reached = True
-                discovered_cnt += n_new
-            stage_ms["agg"] = int((time.time() - t_agg) * 1000)
-
-            successes += wave_succ
-            next_ord += wave_sched
-
-            # 7. commit the wave
-            line = dict(run_id=run_id, iter=it, scheduled=wave_sched,
-                        wave_successes=wave_succ, successes=successes,
-                        failures=failures, retry=params.retry_failures,
-                        next_ord=next_ord, discovered_cnt=discovered_cnt,
-                        limit_reached=limit_reached,
-                        n_frontier_next=n_frontier,
-                        hosts_next=hosts_est,
-                        wall_ms=int((time.time() - t0) * 1000),
-                        stage_ms=stage_ms)
             manifest.append(line)
-            backend.append_manifest(line, truncate=(it == 0 and not resume))
-            it += 1
 
         t_post = time.time()
-        bg.join()  # bloom/known state must be durable before the run returns
+        sess.bg.join()  # bloom/known state must be durable before returning
         backend.known_close()
-    finally:
-        # A crawl that raised still waits for its background jobs before
-        # it hands the session back; its own exception is the one that
-        # propagates. On the normal path, bg.join() above has already
-        # waited and re-raised.
-        bg.wait()
-        for k, v in saved_conf.items():
-            spark.conf.set(k, v)
-        # a crawl that raised mid-wave still holds that wave's caches
-        for c in [pages_urls, _rank_cache] + wave_caches:
-            if c is not None:
-                c.unpersist()
-        if cache_pages:
-            pages_prep.unpersist()
-    run = CrawlRun(spark=spark, state_dir=state_dir, run_id=run_id,
+    run = CrawlRun(spark=spark, state_dir=state_dir, run_id=cur.run_id,
                    manifest=manifest, link_limit=L, backend=backend)
-    n_res = min(successes, L) if L > 0 else successes
+    n_res = min(cur.successes, L) if L > 0 else cur.successes
     # Failed-page count: without retries every error url is scheduled
     # exactly once, so the per-wave observed sums ARE the distinct
     # count — no post-loop scan job (it was ~1-2s of fixed, non-scaling
@@ -1084,16 +1127,16 @@ def run_crawl(
     # retry_failures=False over retry-era waves would otherwise count
     # one row per attempt). Resumed pre-upgrade state dirs (no
     # 'failures' in the manifest) also fall back to the scan.
-    if manifest and (params.retry_failures or failures is None
+    if manifest and (params.retry_failures or cur.failures is None
                      or any(ln.get("retry", False) for ln in manifest)):
         total_err = run._results_all().filter(
             F.col("error").isNotNull()
         ).select("url").distinct().count()
     else:
-        total_err = failures if manifest else 0
+        total_err = cur.failures if manifest else 0
     run.stats = dict(total_pages=n_res + total_err,
                      successful_pages=n_res, failed_pages=total_err,
-                     waves=len(manifest), urls_scheduled=next_ord,
+                     waves=len(manifest), urls_scheduled=cur.next_ord,
                      deadline_hit=deadline_hit,
                      wall_preloop_ms=int((t_loop - t_init) * 1000),
                      wall_waves_ms=int((t_post - t_loop) * 1000),

@@ -1,8 +1,9 @@
 """run_crawl's footprint on the caller's SparkSession and its manifest
 phase timings: a crawl that raises mid-wave restores every conf it
-overrode, releases its caches and waits for its own background work,
-and the per-wave ``stage_ms`` phases are disjoint intervals of the
-wave."""
+overrode, releases its caches and waits for its own background work; a
+crawl releases only the caches it persisted itself and measures a
+local corpus under any path; and the per-wave ``stage_ms`` phases are
+disjoint intervals of the wave."""
 
 import shutil
 import tempfile
@@ -41,6 +42,17 @@ class _SlowAppendThenResultsFail(ParquetStateBackend):
     def write_wave(self, name, it, df):
         if name == "results" and it == 2:
             raise RuntimeError("injected results write failure")
+        super().write_wave(name, it, df)
+
+
+class _RecordsOpenCost(ParquetStateBackend):
+    """Records the scan open cost in force while each wave is written."""
+
+    open_cost = None
+
+    def write_wave(self, name, it, df):
+        self.open_cost = self.spark.conf.get(
+            "spark.sql.files.openCostInBytes")
         super().write_wave(name, it, df)
 
 
@@ -133,3 +145,43 @@ def test_stage_ms_phases_are_disjoint(spark, web):
         assert sum(ms.values()) <= line["wall_ms"]
         if line["n_frontier_next"] > 0:
             assert ms["frontier"] > 0
+
+
+def test_crawl_keeps_callers_cache(spark, web):
+    """A prepared corpus the caller already cached stays cached after
+    the crawl: it releases only the caches it persisted itself."""
+    from pyspark import StorageLevel
+
+    from supacrawler_spark.sources import prepare_pages
+
+    pages_df, _, n_docs = web
+    prep = prepare_pages(pages_df).persist()
+    try:
+        prep.count()
+        level = prep.storageLevel
+        assert level != StorageLevel.NONE
+        cached = _persistent_rdds(spark)
+        run_crawl(spark, prep, gen_seeds(n_docs, k=1),
+                  CrawlParams(depth=2, link_limit=20), pages_prepared=True)
+        assert prep.storageLevel == level
+        assert _persistent_rdds(spark) == cached
+    finally:
+        prep.unpersist()
+
+
+def test_corpus_under_escaped_path_is_measured(spark, web, tmp_path):
+    """``inputFiles`` percent-encodes paths. A corpus under a directory
+    whose name holds a space and a percent sign is still measured, so
+    the crawl lowers the scan open cost for it as for any other local
+    corpus, and restores it afterwards."""
+    key = "spark.sql.files.openCostInBytes"
+    pages_df, _, n_docs = web
+    d = str(tmp_path / "a b%c")
+    be = _RecordsOpenCost(spark, d)
+    before = spark.conf.get(key)
+    run = run_crawl(spark, pages_df, gen_seeds(n_docs, k=1),
+                    CrawlParams(depth=1, link_limit=10), state_dir=d,
+                    state_backend=be)
+    assert run.stats["successful_pages"] > 0
+    assert be.open_cost == str(512 * 1024) != before
+    assert spark.conf.get(key) == before

@@ -162,6 +162,48 @@ def test_resume_retry_off_over_retry_era_state(spark, web):
         shutil.rmtree(state, ignore_errors=True)
 
 
+def test_resume_from_pre_upgrade_manifest(spark, web):
+    """A state dir whose manifest lines predate ``failures``,
+    ``hosts_next`` and ``scheduled`` resumes to the oracle's trace and
+    stats: the next waves plan without those size hints, and
+    failed_pages falls back to a distinct count of error urls, the
+    failures committed before the cut included."""
+    import json
+
+    from supacrawler_spark.oracle import crawl_oracle
+
+    pages_df, pages_local, n_docs = web
+    seeds = gen_seeds(n_docs, k=2, include_dangling=True)
+    params = CrawlParams(depth=3, link_limit=60)
+    orc = crawl_oracle(pages_local, seeds, params)
+    state = tempfile.mkdtemp(prefix="pre_upgrade_")
+    try:
+        run_crawl(spark, pages_df, seeds,
+                  CrawlParams(depth=3, link_limit=60, max_waves=2),
+                  state_dir=state)
+        mpath = os.path.join(state, "manifest.jsonl")
+        with open(mpath) as f:
+            lines = [json.loads(ln) for ln in f if ln.strip()]
+        assert len(lines) == 2
+        assert lines[-1]["failures"] > 0, "need failures before the cut"
+        with open(mpath, "w") as f:
+            for ln in lines:
+                for k in ("failures", "hosts_next", "scheduled"):
+                    del ln[k]
+                f.write(json.dumps(ln) + "\n")
+
+        resumed = run_crawl(spark, pages_df, seeds, params,
+                            state_dir=state, resume=True)
+        assert resumed.stats["waves"] > 2
+        etrace = [(r.crawl_ord, r.iter, r.depth, r.url, r.status_code)
+                  for r in resumed.trace.collect()]
+        assert etrace == orc.trace
+        for k in ("total_pages", "successful_pages", "failed_pages"):
+            assert resumed.stats[k] == orc.stats[k]
+    finally:
+        shutil.rmtree(state, ignore_errors=True)
+
+
 def test_manifest_written_per_wave(spark, web):
     pages_df, _, n_docs = web
     state = tempfile.mkdtemp(prefix="manifest_test_")
