@@ -18,6 +18,15 @@ Scale notes per operator are in the docstrings; the common themes:
   no broadcast of anything document-sized;
 - candidate verification only touches pairs sharing a band, never the
   n^2 cross join.
+
+Near-dup verification lives in one place: every candidate filter (LSH
+bands in lsh_verified_pairs, rarity prefixes in the allpairs_*
+operators) hands its lazy pair frame to _verified, which gates it on
+LSH_SMALL_PAIRS and returns the exact shingle overlap (n_inter, n_a,
+n_b); each operator applies only its own score and threshold. The
+bounded exactness anchors (ngram_jaccard_pairs, containment_pairs)
+share _overlap_pairs, and both paths attach the per-doc sizes through
+_with_sizes.
 """
 
 from __future__ import annotations
@@ -238,17 +247,29 @@ def exact_dedup(spark, sf_dir) -> DataFrame:
         .filter(F.col("dup_count") > 1))
 
 
-def shingles(docs, n: int = 3):
-    """Word 3-gram shingles via transform(sequence(...)) — array ops in
-    codegen, exploded lazily by callers. Docs shorter than n tokens are
-    dropped (sequence() would go negative)."""
-    w = F.split("text", " ")
-    docs = docs.filter(F.size(F.split("text", " ")) >= n)
-    idx = F.sequence(F.lit(0), F.size(w) - n)
-    sh = F.transform(idx, lambda i: F.concat_ws(
-        " ", F.element_at(w, i + 1),
-        F.element_at(w, i + 2), F.element_at(w, i + 3)))
-    return docs.select("doc_id", F.explode(sh).alias("shingle"))
+def _gram_arr(w, n: int):
+    """Array of word n-grams over a token-array column (rows with
+    fewer than n tokens must be filtered out by the caller)."""
+    idx = F.sequence(F.lit(1), F.size(w) - (n - 1))
+    return F.transform(idx, lambda i: F.concat_ws(
+        " ", *[F.element_at(w, i + k) for k in range(n)]))
+
+
+def _ngrams(docs, n: int):
+    """(doc_id, gram) word n-gram explode. Docs shorter than n tokens
+    are dropped (sequence() would go negative). The token array is a
+    column of its own: inlined into the gram lambda, split(text) would
+    run once per element_at, n times per gram."""
+    toks = (docs.select("doc_id", F.split("text", " ").alias("w"))
+            .filter(F.size("w") >= n))
+    return toks.select("doc_id",
+                       F.explode(_gram_arr(F.col("w"), n)).alias("gram"))
+
+
+def shingles(docs):
+    """(doc_id, shingle) word 3-gram shingles, exploded lazily; the
+    near-dup operators' unit of overlap."""
+    return _ngrams(docs, 3).withColumnRenamed("gram", "shingle")
 
 
 def doc_shingles(spark, sf_dir) -> DataFrame:
@@ -297,12 +318,22 @@ def minhash_lsh_pairs(spark, sf_dir, perms: int = MINHASH_PERMS,
     return pairs
 
 
-def ngram_jaccard_pairs(spark, sf_dir, threshold: float = 0.8,
-                        max_doc: int = 200) -> DataFrame:
-    """n-gram Jaccard near-dup verification over a bounded doc range:
-    intersection via shingle equi-join, union = |A|+|B|-∩. The join is
-    on the shingle value (co-partitioned); sizes come from a broadcast
-    of per-doc shingle counts."""
+def _with_sizes(inter: DataFrame, sizes: DataFrame, dim) -> DataFrame:
+    """Attach each side's distinct-shingle count to (doc_a, doc_b,
+    n_inter) pair rows: -> (doc_a, doc_b, n_inter, n_a, n_b). ``dim``
+    is F.broadcast or the identity; the caller's size gate decides."""
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
+    return (inter.join(dim(sa), "doc_a").join(dim(sb), "doc_b")
+            .select("doc_a", "doc_b", "n_inter", "n_a", "n_b"))
+
+
+def _overlap_pairs(spark, sf_dir, max_doc: int) -> DataFrame:
+    """Exact shingle overlap of EVERY pair over the bounded doc range
+    doc_id < max_doc -> (doc_a, doc_b, n_inter, n_a, n_b): the raw
+    shingle self-join the bounded exactness anchors use. The join is on
+    the shingle value (co-partitioned); the per-doc sizes broadcast —
+    the range bound keeps them small."""
     sh = (shingles(_docs(spark, sf_dir).filter(F.col("doc_id") < max_doc))
           .distinct())
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
@@ -312,61 +343,68 @@ def ngram_jaccard_pairs(spark, sf_dir, threshold: float = 0.8,
              .groupBy(F.col("a.doc_id").alias("doc_a"),
                       F.col("b.doc_id").alias("doc_b"))
              .agg(F.count("*").alias("n_inter")))
-    sa = sizes.select(F.col("doc_id").alias("doc_a"),
-                      F.col("n").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"),
-                      F.col("n").alias("n_b"))
-    j = (inter.join(F.broadcast(sa), "doc_a").join(F.broadcast(sb), "doc_b")
-         .withColumn("jaccard",
-                     F.col("n_inter") /
-                     (F.col("n_a") + F.col("n_b") - F.col("n_inter"))))
-    return (j.filter(F.col("jaccard") >= threshold)
-            .select("doc_a", "doc_b", "n_inter", "jaccard"))
+    return _with_sizes(inter, sizes, F.broadcast)
+
+
+def _jaccard():
+    """n_inter / |A ∪ B| over (n_inter, n_a, n_b) pair rows — the
+    quotient of two exact BIGINTs, so the double is bit-identical
+    across engines."""
+    return F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
+
+
+def ngram_jaccard_pairs(spark, sf_dir, threshold: float = 0.8,
+                        max_doc: int = 200) -> DataFrame:
+    """n-gram Jaccard near-dup verification over a bounded doc range:
+    intersection via the shingle equi-join of _overlap_pairs, union =
+    |A|+|B|-∩."""
+    jac = _jaccard()
+    return (_overlap_pairs(spark, sf_dir, max_doc).filter(jac >= threshold)
+            .select("doc_a", "doc_b", "n_inter", jac.alias("jaccard")))
 
 
 LSH_SMALL_PAIRS = 1_000_000
 """Candidate-pair bound below which the verification dims (pair list,
-candidate-doc ids, shingle-size table — all fixed-width, ≤3 BIGINTs per
-row, so ≲50 MB at the bound) broadcast. Above it — a duplicate-heavy
-corpus (boilerplate-dominated, mirror-heavy Common-Crawl shards) where
-LSH candidates are a large multiple of docs — every join falls back to
-a co-partitioned shuffle equi-join; nothing broadcast-sized is allowed
-to grow with dup density. Same driver-known-bound gating discipline as
-CC_SMALL_EDGES and fetch_join's sched_bound."""
+candidate-doc ids, candidate-doc size table — all fixed-width, ≤3
+BIGINTs per row, so ≲50 MB at the bound) broadcast. Above it — a
+duplicate-heavy corpus (boilerplate-dominated, mirror-heavy
+Common-Crawl shards) where candidates are a large multiple of docs —
+every join falls back to a co-partitioned shuffle equi-join; nothing
+broadcast-sized is allowed to grow with dup density. The only selector
+of _verified's path, so it gates every candidate filter alike. Same
+driver-known-bound gating discipline as CC_SMALL_EDGES and fetch_join's
+sched_bound."""
 
 
-def lsh_verified_pairs(spark, sf_dir, threshold: float = 0.8,
-                       force_shuffle: bool = False) -> DataFrame:
-    """The scale path for near-dup verification: exact n-gram Jaccard
-    computed ONLY for LSH candidate pairs (minhash_lsh_pairs), over the
-    FULL corpus — no doc_id bound, no raw shingle self-join.
+def _verified(pairs_src: DataFrame, sh: DataFrame) -> DataFrame:
+    """Exact shingle overlap of candidate pairs only: the lazy
+    (doc_a, doc_b) pair frame ``pairs_src`` (doc_a < doc_b, distinct)
+    against the distinct (doc_id, shingle) frame ``sh`` ->
+    (doc_a, doc_b, n_inter, n_a, n_b). No raw shingle self-join, no
+    doc_id bound: the one verification step every candidate filter
+    shares (TokenJoin's filter-then-verify split).
 
-    Scale shape: the candidate pairs are gated against LSH_SMALL_PAIRS
-    in ONE job — a ``limit(N+1)`` Arrow fetch that, below the bound, IS
-    the materialization (the ``_cc_small_head`` pattern): the pair list
-    becomes a driver-local table, so the three plan consumers pay zero
-    recompute and the gate costs no second action. Below the bound (the
-    normal regime: candidates are a vanishing fraction of docs) the
-    candidate-doc id set, the pair list and the size dims broadcast, so
-    the heavy shingle table is semi-join-filtered map-side before any
-    shuffle and the intersection join only ever touches candidate-doc
-    shingles. Above the bound the pairs localCheckpoint instead (the
-    distributed consumers re-read them) and every dim joins as a plain
-    shuffle equi-join — adversarial dup density degrades to extra
-    shuffles, never a driver OOM. Either way a hot shingle shared by
-    non-candidate docs never enters a join. ``force_shuffle`` pins the
-    fallback for tests."""
-    pairs_src = minhash_lsh_pairs(spark, sf_dir)
-    small = False
-    if not force_shuffle:
-        head = pairs_src.limit(LSH_SMALL_PAIRS + 1).toPandas()
-        if len(head) <= LSH_SMALL_PAIRS:
-            small = True
-            pairs = spark.createDataFrame(head, schema=pairs_src.schema)
-    if not small:
-        pairs = pairs_src.localCheckpoint()
+    Scale shape: the pairs are gated against LSH_SMALL_PAIRS in ONE
+    job — a ``limit(N+1)`` Arrow fetch that, below the bound, IS the
+    materialization (the ``_cc_small_head`` pattern): the pair list
+    becomes a driver-local table, so the plan's consumers pay zero
+    recompute and the gate costs no second action. Below the bound
+    (the normal regime: candidates are a vanishing fraction of docs)
+    the candidate-doc id set and the pair list broadcast, so the heavy
+    shingle table is semi-join-filtered map-side before any shuffle
+    and the intersection join only ever touches candidate-doc
+    shingles; the size table is counted over those shingles too, so it
+    holds candidate docs only. Above the bound the pairs
+    localCheckpoint instead (the distributed consumers re-read them)
+    and every dim joins as a plain shuffle equi-join — adversarial dup
+    density degrades to extra shuffles, never a driver OOM. Either way
+    a hot shingle shared by non-candidate docs never enters a join."""
+    head = pairs_src.limit(LSH_SMALL_PAIRS + 1).toPandas()
+    small = len(head) <= LSH_SMALL_PAIRS
+    pairs = (pairs_src.sparkSession.createDataFrame(
+        head, schema=pairs_src.schema) if small
+        else pairs_src.localCheckpoint())
     dim = F.broadcast if small else (lambda df: df)
-    sh = shingles(_docs(spark, sf_dir)).distinct()
     cand_docs = (pairs.select(F.col("doc_a").alias("doc_id"))
                  .union(pairs.select(F.col("doc_b").alias("doc_id")))
                  .distinct())
@@ -378,14 +416,18 @@ def lsh_verified_pairs(spark, sf_dir, threshold: float = 0.8,
              .join(b, ["doc_b", "shingle"])
              .groupBy("doc_a", "doc_b")
              .agg(F.count("*").alias("n_inter")))
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
-    j = (inter.join(dim(sa), "doc_a").join(dim(sb), "doc_b")
-         .withColumn("jaccard",
-                     F.col("n_inter") /
-                     (F.col("n_a") + F.col("n_b") - F.col("n_inter"))))
-    return (j.filter(F.col("jaccard") >= threshold)
-            .select("doc_a", "doc_b", "n_inter", "jaccard"))
+    return _with_sizes(inter, sizes, dim)
+
+
+def lsh_verified_pairs(spark, sf_dir, threshold: float = 0.8) -> DataFrame:
+    """The scale path for near-dup verification: exact n-gram Jaccard
+    computed ONLY for LSH candidate pairs (minhash_lsh_pairs), over the
+    FULL corpus, through the gated _verified step."""
+    jac = _jaccard()
+    v = _verified(minhash_lsh_pairs(spark, sf_dir),
+                  shingles(_docs(spark, sf_dir)).distinct())
+    return (v.filter(jac >= threshold)
+            .select("doc_a", "doc_b", "n_inter", jac.alias("jaccard")))
 
 
 def _simhash_df(docs: DataFrame, bits: int) -> DataFrame:
@@ -823,21 +865,6 @@ def repetition_stats(spark, sf_dir) -> DataFrame:
         .alias("top_token_frac"),
         (F.col("top_bg_c") / (F.col("n_tokens") - 1))
         .alias("top_bigram_frac"))
-
-
-def _gram_arr(w, n: int):
-    """Array of word n-grams over a token-array column (rows with
-    fewer than n tokens must be filtered out by the caller)."""
-    idx = F.sequence(F.lit(1), F.size(w) - (n - 1))
-    return F.transform(idx, lambda i: F.concat_ws(
-        " ", *[F.element_at(w, i + k) for k in range(n)]))
-
-
-def _ngrams(docs, n: int):
-    """Word n-gram explode, generic-n variant of shingles()."""
-    w = F.split("text", " ")
-    docs = docs.filter(F.size(F.split("text", " ")) >= n)
-    return docs.select("doc_id", F.explode(_gram_arr(w, n)).alias("gram"))
 
 
 def decontam_overlap(spark, sf_dir, n: int = 4,
@@ -1808,30 +1835,14 @@ def containment_pairs(spark, sf_dir, threshold: float = CONTAIN_THRESHOLD,
     min(|A|,|B|) — the Broder containment score that catches a short
     document quoted inside a long one, which symmetric Jaccard
     dilutes below threshold. Same bounded-exactness-anchor role (and
-    the same shingle equi-join shape) as ngram_jaccard_pairs; the
-    production-scale path would scope it to LSH candidates exactly
-    like lsh_verified_pairs.
+    the same _overlap_pairs self-join) as ngram_jaccard_pairs; the
+    full-corpus path is allpairs_containment, which verifies only its
+    prefix candidates through _verified.
 
     containment divides two exact BIGINTs — bit-identical doubles."""
-    sh = (shingles(_docs(spark, sf_dir).filter(F.col("doc_id") < max_doc))
-          .distinct())
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (a.join(b, "shingle")
-             .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-             .groupBy(F.col("a.doc_id").alias("doc_a"),
-                      F.col("b.doc_id").alias("doc_b"))
-             .agg(F.count("*").alias("n_inter")))
-    sa = sizes.select(F.col("doc_id").alias("doc_a"),
-                      F.col("n").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"),
-                      F.col("n").alias("n_b"))
-    j = (inter.join(F.broadcast(sa), "doc_a")
-         .join(F.broadcast(sb), "doc_b")
-         .withColumn("containment",
-                     F.col("n_inter") / F.least("n_a", "n_b")))
-    return (j.filter(F.col("containment") >= threshold)
-            .select("doc_a", "doc_b", "n_inter", "containment"))
+    c = F.col("n_inter") / F.least("n_a", "n_b")
+    return (_overlap_pairs(spark, sf_dir, max_doc).filter(c >= threshold)
+            .select("doc_a", "doc_b", "n_inter", c.alias("containment")))
 
 
 def containment_pairs_oracle_sql(threshold: float = CONTAIN_THRESHOLD,
@@ -1863,6 +1874,29 @@ ALLPAIRS_NUM = 4
 ALLPAIRS_DEN = 5
 
 
+def _rarity_prefix(sh: DataFrame, num: int, den: int) -> DataFrame:
+    """Each doc's rarity-ordered prefix for an overlap bound of
+    num/den (Bayardo et al., WWW'07): the doc's distinct shingles
+    ``sh`` ranked by global doc frequency (ties by value), first
+    n - ceil(num*n/den) + 1 kept -> (doc_id, shingle). Any pair whose
+    overlap reaches ceil(num*n/den) of a doc's n shingles must hit that
+    doc's prefix. n is a count over the rank window's own doc_id
+    partition (an unbounded frame of the same window, so one Window
+    node), so no per-doc size table is built or joined."""
+    freq = sh.groupBy("shingle").agg(F.count("*").alias("gf"))
+    w = Window.partitionBy("doc_id").orderBy("gf", "shingle")
+    whole = w.rowsBetween(Window.unboundedPreceding,
+                          Window.unboundedFollowing)
+    ranked = (sh.join(freq, "shingle")
+              .select("doc_id", "shingle",
+                      F.row_number().over(w).alias("pos"),
+                      F.count("*").over(whole).alias("n")))
+    # prefix_len = n - ceil(num*n/den) + 1, all in integers
+    ceil_tau_n = F.expr(f"(({num} * n + {den} - 1)) DIV {den}")
+    return (ranked.filter(F.col("pos") <= F.col("n") - ceil_tau_n + 1)
+            .select("doc_id", "shingle"))
+
+
 def allpairs_jaccard(spark, sf_dir) -> DataFrame:
     """EXACT all-pairs Jaccard >= 4/5 over the FULL corpus via prefix
     filtering (Bayardo et al., WWW'07; the TokenJoin/LCJoin family's
@@ -1871,7 +1905,8 @@ def allpairs_jaccard(spark, sf_dir) -> DataFrame:
     shingles — any pair with J >= tau MUST collide in the prefixes, so
     unlike MinHash-LSH this loses nothing, while the join touches a
     small, rare-token slice instead of every shingle. Candidates then
-    get the same scoped exact verification as lsh_verified_pairs.
+    go through _verified, the same gated exact verification as
+    lsh_verified_pairs.
 
     The driver oracle is the brute-force all-pairs self-join (DuckDB,
     sf0.01) — it replicates the SEMANTICS, not the optimization, so a
@@ -1899,48 +1934,17 @@ def allpairs_jaccard_from(docs) -> DataFrame:
     """allpairs_jaccard over an arbitrary (doc_id, text) DataFrame —
     split out so the property suite can fuzz random corpora."""
     sh = shingles(docs).distinct()
-    freq = sh.groupBy("shingle").agg(F.count("*").alias("gf"))
-    sized = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    w = Window.partitionBy("doc_id").orderBy("gf", "shingle")
-    ranked = (sh.join(freq, "shingle")
-              .select("doc_id", "shingle", "gf",
-                      F.row_number().over(w).alias("pos")))
-    # prefix_len = n - ceil(NUM*n/DEN) + 1, all in integers
-    ceil_tau_n = F.expr(
-        f"(({ALLPAIRS_NUM} * n + {ALLPAIRS_DEN} - 1)) DIV {ALLPAIRS_DEN}")
-    pref = (ranked.join(F.broadcast(sized), "doc_id")
-            .filter(F.col("pos") <= F.col("n") - ceil_tau_n + 1)
-            .select("doc_id", "shingle"))
+    pref = _rarity_prefix(sh, ALLPAIRS_NUM, ALLPAIRS_DEN)
     a = pref.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = pref.select(F.col("doc_id").alias("doc_b"), "shingle")
     cand = (a.join(b, "shingle")
             .filter(F.col("doc_a") < F.col("doc_b"))
             .select("doc_a", "doc_b").distinct())
-    # scoped exact verification (same shape as lsh_verified_pairs)
-    cand_docs = (cand.select(F.col("doc_a").alias("doc_id"))
-                 .union(cand.select(F.col("doc_b").alias("doc_id")))
-                 .distinct())
-    shc = sh.join(F.broadcast(cand_docs), "doc_id", "left_semi")
-    va = shc.select(F.col("doc_id").alias("doc_a"), "shingle")
-    vb = shc.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (va.join(F.broadcast(cand), "doc_a")
-             .join(vb, ["doc_b", "shingle"])
-             .groupBy("doc_a", "doc_b")
-             .agg(F.count("*").alias("n_inter")))
-    sa = sized.select(F.col("doc_id").alias("doc_a"),
-                      F.col("n").alias("n_a"))
-    sb = sized.select(F.col("doc_id").alias("doc_b"),
-                      F.col("n").alias("n_b"))
-    j = (inter.join(F.broadcast(sa), "doc_a")
-         .join(F.broadcast(sb), "doc_b"))
+    union = F.col("n_a") + F.col("n_b") - F.col("n_inter")
     gate = (F.lit(ALLPAIRS_DEN) * F.col("n_inter")
-            >= F.lit(ALLPAIRS_NUM)
-            * (F.col("n_a") + F.col("n_b") - F.col("n_inter")))
-    return (j.filter(gate)
-            .select("doc_a", "doc_b", "n_inter",
-                    (F.col("n_inter") /
-                     (F.col("n_a") + F.col("n_b") - F.col("n_inter")))
-                    .alias("jaccard")))
+            >= F.lit(ALLPAIRS_NUM) * union)
+    return (_verified(cand, sh).filter(gate)
+            .select("doc_a", "doc_b", "n_inter", _jaccard().alias("jaccard")))
 
 
 def allpairs_jaccard_oracle_sql() -> str:
@@ -1988,16 +1992,7 @@ def allpairs_containment(spark, sf_dir) -> DataFrame:
     (small gf), so per-key products stay tiny where a full self-join
     squares hot shingles; verification touches candidate docs only."""
     sh = shingles(_docs(spark, sf_dir)).distinct()
-    freq = sh.groupBy("shingle").agg(F.count("*").alias("gf"))
-    sized = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    w = Window.partitionBy("doc_id").orderBy("gf", "shingle")
-    ranked = (sh.join(freq, "shingle")
-              .select("doc_id", "shingle",
-                      F.row_number().over(w).alias("pos")))
-    ceil_tau_n = F.expr(
-        f"(({CONTAIN_NUM} * n + {CONTAIN_DEN} - 1)) DIV {CONTAIN_DEN}")
-    pref = (ranked.join(F.broadcast(sized), "doc_id")
-            .filter(F.col("pos") <= F.col("n") - ceil_tau_n + 1)
+    pref = (_rarity_prefix(sh, CONTAIN_NUM, CONTAIN_DEN)
             .select(F.col("doc_id").alias("p_doc"), "shingle"))
     full = sh.select(F.col("doc_id").alias("f_doc"), "shingle")
     cand = (pref.join(full, "shingle")
@@ -2005,28 +2000,11 @@ def allpairs_containment(spark, sf_dir) -> DataFrame:
             .select(F.least("p_doc", "f_doc").alias("doc_a"),
                     F.greatest("p_doc", "f_doc").alias("doc_b"))
             .distinct())
-    cand_docs = (cand.select(F.col("doc_a").alias("doc_id"))
-                 .union(cand.select(F.col("doc_b").alias("doc_id")))
-                 .distinct())
-    shc = sh.join(F.broadcast(cand_docs), "doc_id", "left_semi")
-    va = shc.select(F.col("doc_id").alias("doc_a"), "shingle")
-    vb = shc.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (va.join(F.broadcast(cand), "doc_a")
-             .join(vb, ["doc_b", "shingle"])
-             .groupBy("doc_a", "doc_b")
-             .agg(F.count("*").alias("n_inter")))
-    sa = sized.select(F.col("doc_id").alias("doc_a"),
-                      F.col("n").alias("n_a"))
-    sb = sized.select(F.col("doc_id").alias("doc_b"),
-                      F.col("n").alias("n_b"))
-    j = (inter.join(F.broadcast(sa), "doc_a")
-         .join(F.broadcast(sb), "doc_b"))
-    gate = (F.lit(CONTAIN_DEN) * F.col("n_inter")
-            >= F.lit(CONTAIN_NUM) * F.least("n_a", "n_b"))
-    return (j.filter(gate)
+    m = F.least("n_a", "n_b")
+    gate = F.lit(CONTAIN_DEN) * F.col("n_inter") >= F.lit(CONTAIN_NUM) * m
+    return (_verified(cand, sh).filter(gate)
             .select("doc_a", "doc_b", "n_inter",
-                    (F.col("n_inter") / F.least("n_a", "n_b"))
-                    .alias("containment")))
+                    (F.col("n_inter") / m).alias("containment")))
 
 
 def allpairs_containment_oracle_sql() -> str:

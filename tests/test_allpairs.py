@@ -87,10 +87,10 @@ def test_prefix_filter_kills_hot_shingle_candidates(spark):
     the rarity-ordered prefix keeps the hot shingles out of every
     prefix, so candidates stay near zero AND the result is still
     exact (equal to brute force)."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
     from supacrawler_spark.textops import (
-        ALLPAIRS_DEN, ALLPAIRS_NUM, allpairs_jaccard_from, shingles)
+        ALLPAIRS_DEN, ALLPAIRS_NUM, _rarity_prefix, allpairs_jaccard_from,
+        shingles)
 
     n = 40
     boiler = "click here to subscribe to our newsletter today"
@@ -104,18 +104,8 @@ def test_prefix_filter_kills_hot_shingle_candidates(spark):
                    .filter(F.col("a.doc_id") < F.col("b.doc_id"))
                    .select("a.doc_id", "b.doc_id").distinct().count())
     assert brute_pairs == n * (n - 1) // 2
-    # prefix candidates (same recipe as allpairs_jaccard_from)
-    freq = sh.groupBy("shingle").agg(F.count("*").alias("gf"))
-    sized = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    w = Window.partitionBy("doc_id").orderBy("gf", "shingle")
-    ranked = (sh.join(freq, "shingle")
-              .select("doc_id", "shingle",
-                      F.row_number().over(w).alias("pos")))
-    ceil_tau_n = F.expr(
-        f"(({ALLPAIRS_NUM} * n + {ALLPAIRS_DEN} - 1)) DIV {ALLPAIRS_DEN}")
-    pref = (ranked.join(F.broadcast(sized), "doc_id")
-            .filter(F.col("pos") <= F.col("n") - ceil_tau_n + 1)
-            .select("doc_id", "shingle"))
+    # the engine's own rarity prefix, as allpairs_jaccard_from builds it
+    pref = _rarity_prefix(sh, ALLPAIRS_NUM, ALLPAIRS_DEN)
     cand = (pref.alias("a").join(pref.alias("b"), "shingle")
             .filter(F.col("a.doc_id") < F.col("b.doc_id"))
             .select("a.doc_id", "b.doc_id").distinct().count())

@@ -207,15 +207,21 @@ def test_cc_driver_path_equals_distributed(spark):
         assert fast == slow, f"trial {trial}"
 
 
-def test_lsh_verified_pairs_shuffle_path_equals_broadcast(spark):
-    """The LSH_SMALL_PAIRS gate must be invisible: the shuffle-join
-    fallback (adversarial dup density) returns the exact same verified
-    pairs as the broadcast-dim fast path (mirror of
+VERIFIED_OPS = ("lsh_verified_pairs", "allpairs_jaccard",
+                "allpairs_containment")
+
+
+@pytest.mark.parametrize("op", VERIFIED_OPS)
+def test_lsh_verified_pairs_shuffle_path_equals_broadcast(
+        spark, monkeypatch, op):
+    """The LSH_SMALL_PAIRS gate must be invisible: for every operator
+    verified through it, the shuffle-join fallback (adversarial dup
+    density, forced by a negative bound) returns the exact same pairs
+    as the broadcast-dim fast path (mirror of
     test_cc_driver_path_equals_distributed)."""
-    fast = {(r["doc_a"], r["doc_b"], r["n_inter"], r["jaccard"]) for r in
-            textops.lsh_verified_pairs(spark, SF_DIR).collect()}
-    slow = {(r["doc_a"], r["doc_b"], r["n_inter"], r["jaccard"]) for r in
-            textops.lsh_verified_pairs(
-                spark, SF_DIR, force_shuffle=True).collect()}
+    build = getattr(textops, op)
+    fast = {tuple(r) for r in build(spark, SF_DIR).collect()}
+    monkeypatch.setattr(textops, "LSH_SMALL_PAIRS", -1)
+    slow = {tuple(r) for r in build(spark, SF_DIR).collect()}
     assert fast == slow
     assert len(fast) > 0  # the fixture corpus must exercise the path

@@ -228,22 +228,26 @@ def test_dup_span_removal_first_owner_is_window_min(spark):
     assert plan.count("posexplode") <= 2, plan
 
 
+@pytest.mark.parametrize("op", ("lsh_verified_pairs", "allpairs_jaccard",
+                                "allpairs_containment"))
 def test_lsh_verified_pairs_fallback_has_no_broadcast(
-        spark, no_aqe_no_autobroadcast):
-    """Above LSH_SMALL_PAIRS (pinned via force_shuffle) every
-    verification dim joins as a shuffle equi-join: zero
-    BroadcastExchange anywhere in the plan, so a duplicate-heavy
-    corpus can never OOM the driver. The fast path keeps its
-    broadcast-dim shape."""
-    from supacrawler_spark.textops import lsh_verified_pairs
+        spark, monkeypatch, no_aqe_no_autobroadcast, op):
+    """Above LSH_SMALL_PAIRS (pinned by a negative bound) every
+    verification dim of every operator verified through the gate joins
+    as a shuffle equi-join: zero BroadcastExchange anywhere in the
+    plan, so a duplicate-heavy corpus can never OOM the driver. The
+    fast path keeps its broadcast-dim shape."""
+    from supacrawler_spark import textops
 
     sf = "/root/testdata/sf0.001"
-    fallback = _plan(lsh_verified_pairs(spark, sf, force_shuffle=True))
+    build = getattr(textops, op)
+    fast = _plan(build(spark, sf))
+    assert "BroadcastHashJoin" in fast, fast
+
+    monkeypatch.setattr(textops, "LSH_SMALL_PAIRS", -1)
+    fallback = _plan(build(spark, sf))
     assert "BroadcastExchange" not in fallback, fallback
     assert "BroadcastHashJoin" not in fallback, fallback
-
-    fast = _plan(lsh_verified_pairs(spark, sf))
-    assert "BroadcastHashJoin" in fast, fast
 
 
 def test_published_filters_are_map_only(spark):
