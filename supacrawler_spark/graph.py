@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from supacrawler_spark.session import arrow_df, bounded_head
+
 PR_SCALE = 1_000_000        # fixed-point 1.0
 PR_DAMP_NUM = 85            # damping 0.85 as a ratio of integers
 PR_DAMP_DEN = 100
@@ -56,48 +58,39 @@ def host_link_edges(spark, sf_dir) -> DataFrame:
 
 PR_SMALL_EDGES = 100_000
 """Edge-count bound below which the power iteration runs driver-side
-(same driver-known-bound gating discipline as textops.CC_SMALL_EDGES):
-a host-level edge rollup is |hosts|-bounded, not corpus-bounded, and a
-dim-sized graph pays ~5 Spark jobs of pure fixed latency per query for
-microseconds of arithmetic (measured: pagerank_hosts 1.8 s -> the edge
-rollup alone). Exact BIGINT fixed-point either way — the local mirror
-uses the same truncating integer division on the same non-negative
-operands, so results are bit-identical (pinned by test_graph's
-python-twin tests and the force_distributed equality test)."""
+(same driver-known-bound gating discipline as textops.CC_SMALL_EDGES,
+through the same session.bounded_head gate): a host-level edge rollup
+is |hosts|-bounded, not corpus-bounded, and a dim-sized graph pays ~5
+Spark jobs of pure fixed latency per query for microseconds of
+arithmetic (measured: pagerank_hosts 1.8 s -> the edge rollup alone).
+Exact BIGINT fixed-point either way — the local mirror uses the same
+truncating integer division on the same non-negative operands, so
+results are bit-identical (pinned by test_graph's python-twin tests
+and by test_graph_smallgate, which forces the distributed path with a
+negative bound)."""
 
 
-def _edges_head(edges: DataFrame):
-    """ONE bounded job: collect up to PR_SMALL_EDGES+1 (src, dst,
-    weight) rows; the rows double as the data below the bound (the
-    _cc_small_head pattern). Returns None above the bound."""
-    head = (edges.select(F.col("src"), F.col("dst"),
-                         F.col("weight").cast("long"))
-            .limit(PR_SMALL_EDGES + 1).collect())
-    return head if len(head) <= PR_SMALL_EDGES else None
-
-
-def _power_iterate_local(head, iters: int, trusted_py):
+def _power_iterate_local(head, iters: int, trusted: bool) -> dict:
     """Driver-side mirror of _power_iterate's rounds: identical
     integer arithmetic ((rank*85*w) // (100*w_out) — Python floor ==
     Spark DIV truncation on non-negative operands), identical
-    no-incoming/coalesce-0 handling."""
-    edges = [(r[0], r[1], r[2]) for r in head]
+    no-incoming/coalesce-0 handling. Returns (host, pagerank_fp)
+    columns, hosts sorted."""
+    edges = list(zip(*head.to_pydict().values()))
     w_out: dict = {}
-    hosts = set()
     for s, d, w in edges:
         w_out[s] = w_out.get(s, 0) + w
-        hosts.add(s)
-        hosts.add(d)
-    trusted = {h: (trusted_py(h) if trusted_py else True) for h in hosts}
-    rank = {h: (PR_SCALE if trusted[h] else 0) for h in hosts}
+    hosts = sorted({h for s, d, _ in edges for h in (s, d)})
+    tr = {h: (trusted_host_py(h) if trusted else True) for h in hosts}
+    rank = {h: (PR_SCALE if tr[h] else 0) for h in hosts}
     for _ in range(iters):
         inc: dict = {}
         for s, d, w in edges:
             c = (rank[s] * PR_DAMP_NUM * w) // (PR_DAMP_DEN * w_out[s])
             inc[d] = inc.get(d, 0) + c
-        rank = {h: (PR_BASE if trusted[h] else 0) + inc.get(h, 0)
+        rank = {h: (PR_BASE if tr[h] else 0) + inc.get(h, 0)
                 for h in hosts}
-    return sorted(rank.items())
+    return {"host": hosts, "pagerank_fp": list(rank.values())}
 
 
 def trusted_host_py(host: str) -> bool:
@@ -129,43 +122,34 @@ def pagerank(edges: DataFrame, iters: int = PR_ITERS) -> DataFrame:
     real cluster, repartition edges by src once and every iteration's
     join reuses that exchange.
     """
-    return _power_iterate(edges, iters, trusted_pred=None)
+    return _power_iterate(edges, iters)
 
 
 def _power_iterate(edges: DataFrame, iters: int,
-                   trusted_pred=None, trusted_py=None,
-                   force_distributed: bool = False) -> DataFrame:
-    """Shared fixed-point power iteration. With ``trusted_pred`` (a
-    host-Column -> boolean-Column predicate) the teleport/base term is
-    restricted to the trusted set — TrustRank — so rank mass can only
-    originate at trusted nodes and flow along links; spam hosts with
-    no trusted in-path converge to 0.
+                   trusted: bool = False) -> DataFrame:
+    """Shared fixed-point power iteration. With ``trusted`` the
+    teleport/base term is restricted to the fixture's trusted set
+    (trusted_host; trusted_host_py is its driver-side mirror) —
+    TrustRank — so rank mass can only originate at trusted nodes and
+    flow along links; spam hosts with no trusted in-path converge to 0.
 
     Adaptive (PR_SMALL_EDGES): below the bound the rounds run
-    driver-side on the collected edge rollup — one Spark job instead
-    of persist + iters localCheckpoint actions; ``trusted_py`` is the
-    required Python mirror of ``trusted_pred``. Above the bound (or
-    when only a Column predicate is supplied) the distributed path is
-    unchanged."""
-    if not force_distributed and (trusted_pred is None
-                                  or trusted_py is not None):
-        head = _edges_head(edges)
-        if head is not None:
-            import pandas as pd
-            rows = _power_iterate_local(head, iters, trusted_py)
-            pdf = pd.DataFrame(
-                {"host": [r[0] for r in rows],
-                 "pagerank_fp": pd.array([r[1] for r in rows],
-                                         dtype="int64")})
-            return edges.sparkSession.createDataFrame(
-                pdf, "host string, pagerank_fp long")
+    driver-side on the gated edge rollup — one Spark job instead of
+    persist + iters localCheckpoint actions. Above the bound the
+    distributed path runs."""
+    head = bounded_head(edges.select("src", "dst",
+                                     F.col("weight").cast("long")),
+                        PR_SMALL_EDGES)
+    if head is not None:
+        return arrow_df(edges.sparkSession,
+                        _power_iterate_local(head, iters, trusted),
+                        "host string, pagerank_fp long")
     outw = edges.groupBy("src").agg(F.sum("weight").alias("w_out"))
     e = edges.join(outw, "src").persist()
     hosts = (e.select(F.col("src").alias("host"))
              .union(e.select(F.col("dst").alias("host")))
              .distinct())
-    tflag = (F.lit(True) if trusted_pred is None
-             else trusted_pred(F.col("host")))
+    tflag = trusted_host(F.col("host")) if trusted else F.lit(True)
     nodes = hosts.select("host", tflag.alias("trusted")).persist()
     init = F.when(F.col("trusted"), F.lit(PR_SCALE)).otherwise(F.lit(0))
     base = F.when(F.col("trusted"), F.lit(PR_BASE)).otherwise(F.lit(0))
@@ -211,8 +195,7 @@ def trustrank_hosts(spark, sf_dir, iters: int = PR_ITERS) -> DataFrame:
     two-hash-shuffles-per-round scale shape as pagerank_hosts; the
     trusted flag is one boolean on the slim node table."""
     return _power_iterate(host_link_edges(spark, sf_dir), iters,
-                          trusted_pred=trusted_host,
-                          trusted_py=trusted_host_py)
+                          trusted=True)
 
 
 def host_degree_stats(spark, sf_dir) -> DataFrame:
@@ -338,12 +321,10 @@ def hits_hosts(spark, sf_dir, iters: int = HITS_ITERS) -> DataFrame:
 def _hits_local(head, iters: int):
     """Driver-side mirror of hits' half-steps: identical weighted
     sums, max-normalization with truncating division, and
-    missing-score coalesce-to-0."""
-    edges = [(r[0], r[1], r[2]) for r in head]
-    hosts = set()
-    for s, d, w in edges:
-        hosts.add(s)
-        hosts.add(d)
+    missing-score coalesce-to-0. Returns (host, hub_fp, authority_fp)
+    columns, hosts sorted."""
+    edges = list(zip(*head.to_pydict().values()))
+    hosts = sorted({h for s, d, _ in edges for h in (s, d)})
 
     def half(score, rev):
         raw: dict = {}
@@ -359,28 +340,23 @@ def _hits_local(head, iters: int):
     for _ in range(iters):
         auth = half(hub, rev=False)
         hub = half(auth, rev=True)
-    return sorted((h, hub[h], auth[h]) for h in hosts)
+    return {"host": hosts, "hub_fp": [hub[h] for h in hosts],
+            "authority_fp": [auth[h] for h in hosts]}
 
 
-def hits(edges: DataFrame, iters: int = HITS_ITERS,
-         force_distributed: bool = False) -> DataFrame:
+def hits(edges: DataFrame, iters: int = HITS_ITERS) -> DataFrame:
     """HITS over an arbitrary (src, dst, weight) edge table — see
     hits_hosts for semantics and scale shape. Adaptive like
     _power_iterate: a PR_SMALL_EDGES-bounded graph iterates
     driver-side in one job (bit-identical; pinned by the python-twin
-    test plus the force_distributed equality test)."""
-    if not force_distributed:
-        head = _edges_head(edges)
-        if head is not None:
-            import pandas as pd
-            rows = _hits_local(head, iters)
-            pdf = pd.DataFrame(
-                {"host": [r[0] for r in rows],
-                 "hub_fp": pd.array([r[1] for r in rows], dtype="int64"),
-                 "authority_fp": pd.array([r[2] for r in rows],
-                                          dtype="int64")})
-            return edges.sparkSession.createDataFrame(
-                pdf, "host string, hub_fp long, authority_fp long")
+    test and by the distributed-path equality test, which forces the
+    distributed path with a negative bound)."""
+    head = bounded_head(edges.select("src", "dst",
+                                     F.col("weight").cast("long")),
+                        PR_SMALL_EDGES)
+    if head is not None:
+        return arrow_df(edges.sparkSession, _hits_local(head, iters),
+                        "host string, hub_fp long, authority_fp long")
     edges = edges.persist()
     hosts = (edges.select(F.col("src").alias("host"))
              .union(edges.select(F.col("dst").alias("host")))

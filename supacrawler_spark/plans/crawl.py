@@ -92,6 +92,7 @@ from supacrawler_spark.plans.state import (
     ParquetStateBackend,
     StateBackend,
 )
+from supacrawler_spark.session import arrow_local_df, bounded_head
 from supacrawler_spark.sources import prepare_pages
 
 BLOOM_THRESHOLD = 100_000
@@ -220,7 +221,6 @@ def _seed_frontier(spark, seeds) -> DataFrame:
         dedup.add(cu)
         rows.append((cu, U.extract_host(cu), U.url_hash64(cu), 0, -1,
                      int(rank), int(rank), U.extract_host(cu), 0.0, 0))
-    from supacrawler_spark.session import arrow_local_df
     return arrow_local_df(spark, rows, FRONTIER_SCHEMA)
 
 
@@ -392,21 +392,15 @@ def _politeness_arg(pol_eff, default_host_budget: int):
         return None, default_host_budget
     # Small dims (the norm: one row per throttled host) collapse to a
     # driver dict -> literal MAP lookup in politeness_select: one
-    # collect here instead of a broadcast-build job EVERY wave. Large
-    # dims keep the broadcast-join path.
-    # coalesce(1) first: a limited collect over a many-partition dim
-    # otherwise runs Spark's incremental take — up to 4 escalating jobs
-    # (1 -> 4 -> 16 -> all partitions) for a dim of a few dozen rows
-    # (measured 4.9 s of preloop on a cold session). One partition ->
-    # one job; the single-thread scan is bounded because this IS a dim
-    # (and the limit bounds driver memory regardless).
-    rows = (pol_eff.select("host", "max_parallel")
-            .coalesce(1).limit(1025).collect())
-    if len(rows) > 1024:
+    # bounded_head gate (one job) here instead of a broadcast-build job
+    # EVERY wave. Large dims keep the broadcast-join path. A null
+    # max_parallel leaves its host on the default budget.
+    head = bounded_head(pol_eff.select("host", "max_parallel"), 1024)
+    if head is None:
         mb = pol_eff.agg(F.max("max_parallel")).first()[0]
         return pol_eff, max(default_host_budget, int(mb or 0))
-    pol = {r["host"]: int(r["max_parallel"]) for r in rows
-           if r["max_parallel"] is not None}
+    pol = {h: m for h, m in zip(*head.to_pydict().values())
+           if m is not None}
     return pol, max([default_host_budget, *pol.values()])
 
 

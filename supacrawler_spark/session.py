@@ -85,16 +85,6 @@ def get_spark(
         .config("spark.driver.extraJavaOptions",
                 "-Xms" + os.environ.get("SPARK_DRIVER_MEMORY", "12g")
                 + " -XX:+AlwaysPreTouch")
-        # Every CollectLimit in this engine is a driver-known-bound
-        # gate (CC_SMALL_EDGES / PR_SMALL_EDGES / LSH_SMALL_PAIRS /
-        # the politeness-dim collapse) that expects to read its whole
-        # bounded input; Spark's default incremental take (1 partition,
-        # then x4) turns each into up to 4 sequential jobs of fixed
-        # driver latency. Scan up to 512 partitions in the first job —
-        # gate inputs are post-aggregation frames of <= a few hundred
-        # partitions, so the gate is ONE job; plain top-k queries use
-        # TakeOrdered and are unaffected.
-        .config("spark.sql.limit.initialNumPartitions", "512")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")
@@ -106,8 +96,28 @@ def get_spark(
     return b.getOrCreate()
 
 
-def arrow_local_df(spark, rows, schema):
-    """Tiny driver-side dim as an Arrow-backed LocalRelation.
+def bounded_head(df, bound: int):
+    """The gate of every driver-side small path: ``df`` as one
+    ``pyarrow.Table`` when it holds at most ``bound`` rows, else None.
+    Below the bound the table IS the data, so the small path never
+    evaluates ``df`` a second time; the bound is the caller's module
+    constant, the only selector of its path.
+
+    ``toArrow`` runs the ``limit(bound + 1)`` in ONE job whatever the
+    session's ``spark.sql.limit.*`` confs hold, where a row ``collect``
+    runs Spark's incremental take (1 partition, then x4: up to 4
+    sequential jobs of fixed driver latency over a sparse frame). Read
+    values with ``to_pylist``/``to_pydict``: Python ints, never numpy
+    int64, so the driver mirrors of the BIGINT operators compute on
+    exact integers."""
+    tbl = df.limit(bound + 1).toArrow()
+    return tbl if tbl.num_rows <= bound else None
+
+
+def arrow_df(spark, columns, schema):
+    """Driver-side data as an Arrow-backed LocalRelation: ``columns`` is
+    ``{name: values}`` in ``schema`` field order, or a ``pyarrow.Table``;
+    ``schema`` (DDL string or StructType) is what the table is cast to.
 
     ``spark.createDataFrame(list_of_rows)`` parallelizes the rows into
     an RDD (defaultParallelism slices), and EVERY evaluation of that
@@ -115,18 +125,17 @@ def arrow_local_df(spark, rows, schema):
     per crawl preloop for a 42-row politeness dim once ``coalesce(1)``
     serialized 32 slice evaluations into one task (guide §4: the
     JVM↔Python boundary is never free). An Arrow table becomes a
-    LocalTableScan that evaluates driver-side in milliseconds and
-    constant-folds into consumers. Rows are tuples matching ``schema``
-    field order; falls back to the classic path for empty input."""
-    if not rows:
-        return spark.createDataFrame([], schema)
+    LocalTableScan that evaluates driver-side in milliseconds, runs no
+    Spark job to build, and constant-folds into consumers."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
+    return spark.createDataFrame(pa.table(columns), schema)
 
-    names = schema.fieldNames()
-    tbl = pa.Table.from_pylist([dict(zip(names, r)) for r in rows],
-                               schema=to_arrow_schema(schema))
-    return spark.createDataFrame(tbl)
+
+def arrow_local_df(spark, rows, schema):
+    """Tiny driver-side dim from tuples in ``schema`` field order."""
+    return arrow_df(spark, {n: [r[i] for r in rows]
+                            for i, n in enumerate(schema.fieldNames())},
+                    schema)
 
 
 SMALL_SCAN_CONF = "spark.supacrawler.smallScanRepartition"

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from supacrawler_spark.session import arrow_df, bounded_head
+
 STOPWORDS_EN = ("the", "a", "and", "of", "to", "in", "is", "for")
 LANG_STOPWORDS = {
     "en": ("the", "and", "of", "to", "a"),
@@ -385,12 +387,12 @@ def _verified(pairs_src: DataFrame, sh: DataFrame) -> DataFrame:
     shares (TokenJoin's filter-then-verify split).
 
     Scale shape: the pairs are gated against LSH_SMALL_PAIRS in ONE
-    job — a ``limit(N+1)`` Arrow fetch that, below the bound, IS the
-    materialization (the ``_cc_small_head`` pattern): the pair list
-    becomes a driver-local table, so the plan's consumers pay zero
-    recompute and the gate costs no second action. Below the bound
-    (the normal regime: candidates are a vanishing fraction of docs)
-    the candidate-doc id set and the pair list broadcast, so the heavy
+    job by session.bounded_head, whose Arrow table, below the bound,
+    IS the materialization: the pair list becomes a driver-local
+    table, so the plan's consumers pay zero recompute and the gate
+    costs no second action. Below the bound (the normal regime:
+    candidates are a vanishing fraction of docs) the candidate-doc id
+    set and the pair list broadcast, so the heavy
     shingle table is semi-join-filtered map-side before any shuffle
     and the intersection join only ever touches candidate-doc
     shingles; the size table is counted over those shingles too, so it
@@ -399,11 +401,10 @@ def _verified(pairs_src: DataFrame, sh: DataFrame) -> DataFrame:
     and every dim joins as a plain shuffle equi-join — adversarial dup
     density degrades to extra shuffles, never a driver OOM. Either way
     a hot shingle shared by non-candidate docs never enters a join."""
-    head = pairs_src.limit(LSH_SMALL_PAIRS + 1).toPandas()
-    small = len(head) <= LSH_SMALL_PAIRS
-    pairs = (pairs_src.sparkSession.createDataFrame(
-        head, schema=pairs_src.schema) if small
-        else pairs_src.localCheckpoint())
+    head = bounded_head(pairs_src, LSH_SMALL_PAIRS)
+    small = head is not None
+    pairs = (arrow_df(pairs_src.sparkSession, head, pairs_src.schema)
+             if small else pairs_src.localCheckpoint())
     dim = F.broadcast if small else (lambda df: df)
     cand_docs = (pairs.select(F.col("doc_a").alias("doc_id"))
                  .union(pairs.select(F.col("doc_b").alias("doc_id")))
@@ -482,10 +483,12 @@ def winnow_fingerprints(spark, sf_dir, k: int = WINNOW_K,
     set, so the shuffle carries the selected minima only (~2n/(w+1)
     rows/doc, not n windows). Ties need no rule because the output is
     the distinct SET of selected hash values. md5 hex strings compare
-    lexicographically identically in both engines."""
-    toks = F.split("text", " ")
-    docs = _docs(spark, sf_dir).filter(F.size(toks) >= k + w - 1)
-    hashes = F.transform(_gram_arr(toks, k), lambda g: F.md5(g))
+    lexicographically identically in both engines. The token array is
+    its own column (see _ngrams)."""
+    docs = (_docs(spark, sf_dir)
+            .select("doc_id", F.split("text", " ").alias("toks"))
+            .filter(F.size("toks") >= k + w - 1))
+    hashes = F.transform(_gram_arr(F.col("toks"), k), lambda g: F.md5(g))
     docs = docs.select("doc_id", hashes.alias("hs"))
     idx = F.sequence(F.lit(1), F.size("hs") - (w - 1))
     mins = F.transform(idx, lambda i: F.array_min(F.slice("hs", i, w)))
@@ -543,24 +546,16 @@ def simhash_near_dup(spark, sf_dir, bits: int = SIMHASH_ND_BITS,
 # ---------------------------------------------------------------------------
 
 CC_SMALL_EDGES = 100_000
+"""Edge-count bound below which clustering runs driver-side: the
+session.bounded_head gate's rows are union-found on the driver. The
+only selector of the clustering path."""
 
 
-def _cc_small_head(edges: DataFrame):
-    """Collect up to CC_SMALL_EDGES+1 (src, dst) rows in ONE job — the
-    driver-known-bound gate AND (when small) the data itself, so the
-    small path never materializes the edge pipeline twice. Returns the
-    row list when the edge set is under the bound, else None."""
-    head = edges.select(F.col("src").cast("long"),
-                        F.col("dst").cast("long")) \
-        .limit(CC_SMALL_EDGES + 1).collect()
-    return head if len(head) <= CC_SMALL_EDGES else None
-
-
-def _union_find(head) -> dict:
-    """Driver-side union-find over collected (src, dst) rows ->
-    {node: min-id component}. Path-halving + min-root union keeps the
-    component label equal to the min node id, matching the distributed
-    min-label propagation bit-for-bit."""
+def _union_find(pairs) -> dict:
+    """Driver-side union-find over (src, dst) pairs -> {node: min-id
+    component}. Path-halving + min-root union keeps the component
+    label equal to the min node id, matching the distributed min-label
+    propagation bit-for-bit."""
     parent: dict = {}
 
     def find(x):
@@ -569,8 +564,7 @@ def _union_find(head) -> dict:
             x = parent[x]
         return x
 
-    for r in head:
-        a, b = r[0], r[1]
+    for a, b in pairs:
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
@@ -579,21 +573,22 @@ def _union_find(head) -> dict:
     return {n: find(n) for n in parent}
 
 
-def connected_components(edges: DataFrame, max_iter: int = 25,
-                         force_distributed: bool = False) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """Undirected edge list ``(src, dst)`` -> ``(id, component)`` where
-    ``component`` is the min node id in the node's connected component.
+    ``component`` is the min node id in the node's connected component:
+    the (doc_id, cluster_id) projection of _clusters_from_edges, so the
+    gate runs once per call and the unused size column is pruned.
 
     Adaptive: below CC_SMALL_EDGES edges the component structure is
     driver-sized even when the CORPUS is 100 TB (verified near-dup
-    edges are a vanishing fraction of documents), so collect once and
-    union-find in microseconds — the same driver-known-bound gating
-    as the fetch join's broadcast gate. Measured (4x sf0.1, local[8]):
-    neutral for dup_clusters (its edge input is pre-checkpointed and
-    converges in ~2 rounds) and **15.6s -> 10.1s for
-    multi_signal_clusters**, whose unioned two-pipeline edge input
-    made every distributed round re-walk more plan. Above the bound,
-    distributed min-label propagation:
+    edges are a vanishing fraction of documents), so the bounded_head
+    gate's rows are union-found in microseconds — the same
+    driver-known-bound gating as the fetch join's broadcast gate.
+    Measured (4x sf0.1, local[8]): neutral for dup_clusters (its edge
+    input is pre-checkpointed and converges in ~2 rounds) and **15.6s
+    -> 10.1s for multi_signal_clusters**, whose unioned two-pipeline
+    edge input made every distributed round re-walk more plan. Above
+    the bound, distributed min-label propagation:
 
     Min-label propagation: every round each node takes the min of its
     own label and its neighbours' labels; rounds needed = graph
@@ -612,22 +607,70 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
     MapReduce and Beyond", O(log^2 n) rounds, same per-round cost);
     dedup clusters never need it.
     """
-    spark = edges.sparkSession
-    if not force_distributed:
-        head = _cc_small_head(edges)
-        if head is not None:
-            comp = _union_find(head)
-            import pandas as pd
-            pdf = pd.DataFrame({"id": list(comp.keys()),
-                                "component": list(comp.values())},
-                               dtype="int64")
-            # Arrow-path createDataFrame (enabled in session.py):
-            # ~100k rows transfer as one Arrow batch, not pickled rows
-            return spark.createDataFrame(pdf, "id long, component long")
-    sym = edges.select(
-        F.col("src").cast("long"), F.col("dst").cast("long")).union(
-        edges.select(F.col("dst").cast("long").alias("src"),
-                     F.col("src").cast("long").alias("dst"))).persist()
+    return (_clusters_from_edges(_cluster_edges(edges, "src", "dst"),
+                                 max_iter)
+            .select(F.col("doc_id").alias("id"),
+                    F.col("cluster_id").alias("component")))
+
+
+def dup_clusters(spark, sf_dir, threshold: float = 0.8) -> DataFrame:
+    """End of the near-dup pipeline: Jaccard-verified LSH pairs
+    (lsh_verified_pairs) as edges -> connected components -> one row
+    per clustered doc ``(doc_id, cluster_id, cluster_size)`` with
+    ``cluster_id`` = min doc_id in the cluster. Docs in no pair are
+    not duplicates and are omitted (they would be size-1 clusters of
+    themselves)."""
+    return _clusters_from_edges(
+        _cluster_edges(lsh_verified_pairs(spark, sf_dir, threshold),
+                       "doc_a", "doc_b"))
+
+
+def _cluster_edges(pairs: DataFrame, a: str, b: str) -> DataFrame:
+    return pairs.select(F.col(a).cast("long").alias("src"),
+                        F.col(b).cast("long").alias("dst"))
+
+
+def _clusters_from_edges(edges: DataFrame, max_iter: int = 25) -> DataFrame:
+    """(src, dst) BIGINT near-dup edges (_cluster_edges) -> (doc_id,
+    cluster_id, cluster_size) via connected components; cluster_id =
+    min doc_id. Docs in no pair are omitted (size-1 clusters of
+    themselves), like dup_clusters.
+
+    Below CC_SMALL_EDGES the whole thing is ONE Spark job: the gate
+    doubles as the data fetch, union-find + cluster sizes run
+    driver-side, and the result ships back as a single Arrow batch —
+    no edge checkpoint, no distinct, no window shuffle (measured: this
+    family's 2->8-core scaling was driver-latency-bound; see BENCH.md).
+    Above the bound: checkpoint the edges (the distributed rounds read
+    them repeatedly) and run _clusters_distributed."""
+    head = bounded_head(edges, CC_SMALL_EDGES)
+    if head is not None:
+        return _clusters_local(edges.sparkSession, [head])
+    return _clusters_distributed(edges.localCheckpoint(), max_iter)
+
+
+def _clusters_local(spark, heads) -> DataFrame:
+    """Driver-side small path: union-find + cluster sizes over the
+    (src, dst) rows of the gated ``heads`` tables, shipped back as one
+    Arrow batch."""
+    from collections import Counter
+    comp = _union_find(p for h in heads
+                       for p in zip(*h.to_pydict().values()))
+    sizes = Counter(comp.values())
+    return arrow_df(spark, {"doc_id": list(comp),
+                            "cluster_id": list(comp.values()),
+                            "cluster_size": [sizes[c]
+                                             for c in comp.values()]},
+                    "doc_id long, cluster_id long, cluster_size long")
+
+
+def _clusters_distributed(edges: DataFrame, max_iter: int = 25) -> DataFrame:
+    """The min-label propagation rounds of connected_components over
+    materialized BIGINT (src, dst) edges, then the cluster size as a
+    window count over the tiny label table (the same single hash
+    shuffle a groupBy+join would cost)."""
+    sym = edges.union(edges.select(F.col("dst").alias("src"),
+                                   F.col("src").alias("dst"))).persist()
     labels = (sym.groupBy(F.col("src").alias("id"))
               .agg(F.min("dst").alias("nbr"))
               .select("id", F.least("id", "nbr").alias("component"))
@@ -656,70 +699,11 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
         if changed == 0:
             break
     sym.unpersist()
-    return labels
-
-
-def dup_clusters(spark, sf_dir, threshold: float = 0.8) -> DataFrame:
-    """End of the near-dup pipeline: Jaccard-verified LSH pairs
-    (lsh_verified_pairs) as edges -> connected components -> one row
-    per clustered doc ``(doc_id, cluster_id, cluster_size)`` with
-    ``cluster_id`` = min doc_id in the cluster. Docs in no pair are
-    not duplicates and are omitted (they would be size-1 clusters of
-    themselves). The size is a window count over cluster_id — the
-    same single hash shuffle a groupBy+join would cost."""
-    # edge materialization policy lives in _clusters_from_edges: one
-    # collect below CC_SMALL_EDGES, localCheckpoint above (the
-    # distributed rounds read the edges repeatedly)
-    return _clusters_from_edges(
-        _cluster_edges(lsh_verified_pairs(spark, sf_dir, threshold),
-                       "doc_a", "doc_b"))
-
-
-def _cluster_edges(pairs: DataFrame, a: str, b: str) -> DataFrame:
-    return pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-
-
-def _clusters_from_edges(edges: DataFrame) -> DataFrame:
-    """(src, dst) near-dup edges -> (doc_id, cluster_id, cluster_size)
-    via connected components; cluster_id = min doc_id. Docs in no pair
-    are omitted (size-1 clusters of themselves), like dup_clusters.
-
-    Below CC_SMALL_EDGES the whole thing is ONE Spark job: the gate
-    collect doubles as the data fetch, union-find + cluster sizes run
-    driver-side, and the result ships back as a single Arrow batch —
-    no edge checkpoint, no distinct, no window shuffle (measured: this
-    family's 2->8-core scaling was driver-latency-bound; see BENCH.md).
-    Above the bound: checkpoint the edges (the distributed rounds read
-    them repeatedly) and pay the window shuffle on the tiny label
-    table."""
-    head = _cc_small_head(edges)
-    if head is not None:
-        return _clusters_local(head, edges.sparkSession)
-    cc = connected_components(edges.localCheckpoint(),
-                              force_distributed=True)
     w = Window.partitionBy("component")
-    return cc.select(
+    return labels.select(
         F.col("id").alias("doc_id"),
         F.col("component").alias("cluster_id"),
         F.count("*").over(w).alias("cluster_size"))
-
-
-def _clusters_local(head, spark) -> DataFrame:
-    """Driver-side tail of the small-edge path: union-find + cluster
-    sizes over collected (src, dst) rows, shipped back as one Arrow
-    batch."""
-    from collections import Counter
-    import pandas as pd
-    comp = _union_find(head)
-    sizes = Counter(comp.values())
-    nodes = list(comp.keys())
-    pdf = pd.DataFrame(
-        {"doc_id": nodes,
-         "cluster_id": [comp[n] for n in nodes],
-         "cluster_size": [sizes[comp[n]] for n in nodes]},
-        dtype="int64")
-    return spark.createDataFrame(
-        pdf, "doc_id long, cluster_id long, cluster_size long")
 
 
 def simhash_clusters(spark, sf_dir) -> DataFrame:
@@ -744,14 +728,14 @@ def multi_signal_clusters(spark, sf_dir, threshold: float = 0.8) -> DataFrame:
     insensitive to duplicate edges, so deduping the edge set would
     spend a shuffle to change nothing.
 
-    r6: the two arms are INDEPENDENT Spark jobs, so their bounded edge
-    collects run concurrently (guide §2.6 — overlap independent jobs):
+    r6: the two arms are INDEPENDENT Spark jobs, so their bounded_head
+    gates run concurrently (guide §2.6 — overlap independent jobs):
     the SimHash arm's pipeline back-fills executors while the MinHash
     arm runs its gate + verification jobs, instead of serializing
-    ~1.4 s of SimHash work after them. The small-edge gate is
-    unchanged: local union-find iff the combined arm row count is
-    within CC_SMALL_EDGES (per-arm heads of N+1 make the sum test
-    exactly the old union-head test), distributed min-label otherwise."""
+    ~1.4 s of SimHash work after them. Local union-find iff the
+    combined arm row count is within CC_SMALL_EDGES (per-arm heads of
+    N+1 make the sum test exactly a gate on the union), distributed
+    min-label over the union otherwise — with no second gate."""
     def mh_edges():
         return _cluster_edges(lsh_verified_pairs(spark, sf_dir, threshold),
                               "doc_a", "doc_b")
@@ -762,13 +746,13 @@ def multi_signal_clusters(spark, sf_dir, threshold: float = 0.8) -> DataFrame:
 
     from concurrent.futures import ThreadPoolExecutor
     with ThreadPoolExecutor(max_workers=2) as ex:
-        fm = ex.submit(lambda: _cc_small_head(mh_edges()))
-        fs = ex.submit(lambda: _cc_small_head(sh_edges()))
-        hm, hs = fm.result(), fs.result()
-    if (hm is not None and hs is not None
-            and len(hm) + len(hs) <= CC_SMALL_EDGES):
-        return _clusters_local(hm + hs, spark)
-    return _clusters_from_edges(mh_edges().union(sh_edges()))
+        heads = list(ex.map(lambda arm: bounded_head(arm(), CC_SMALL_EDGES),
+                            (mh_edges, sh_edges)))
+    if (all(h is not None for h in heads)
+            and sum(h.num_rows for h in heads) <= CC_SMALL_EDGES):
+        return _clusters_local(spark, heads)
+    return _clusters_distributed(
+        mh_edges().union(sh_edges()).localCheckpoint())
 
 
 def dedup_rate_by_source(spark, sf_dir, threshold: float = 0.8) -> DataFrame:
@@ -1401,11 +1385,13 @@ def source_ngram_overlap(spark, sf_dir, n: int = 4) -> DataFrame:
     partial-agg distinct), a self EQUI-join keyed on the 32-byte gram
     hash (source_a < source_b — never a cross join; collision load per
     gram is bounded by the source count, not the corpus), then a tiny
-    groupBy over source pairs joined against per-source set sizes."""
-    docs = _docs(spark, sf_dir).filter(
-        F.size(F.split("text", " ")) >= n)
-    grams = (docs.select(
-        "source", F.explode(_gram_arr(F.split("text", " "), n)).alias("gram"))
+    groupBy over source pairs joined against per-source set sizes. The
+    token array is its own column (see _ngrams)."""
+    toks = (_docs(spark, sf_dir)
+            .select("source", F.split("text", " ").alias("w"))
+            .filter(F.size("w") >= n))
+    grams = (toks.select(
+        "source", F.explode(_gram_arr(F.col("w"), n)).alias("gram"))
         .select("source", F.md5("gram").alias("gh"))
         .distinct())
     sizes = grams.groupBy("source").agg(F.count("*").alias("n"))

@@ -186,10 +186,11 @@ def test_multi_signal_clusters_subsume_each_signal(spark):
                     assert ms[a] == ms[b], (a, b)
 
 
-def test_cc_driver_path_equals_distributed(spark):
+def test_cc_driver_path_equals_distributed(spark, monkeypatch):
     """The small-edge union-find gate must be invisible: same
-    (id, component) sets as the distributed min-label rounds on
-    random graphs (chains force multi-round propagation)."""
+    (id, component) sets as the distributed min-label rounds (forced
+    by a negative bound) on random graphs (chains force multi-round
+    propagation)."""
     import random
     from supacrawler_spark.textops import connected_components
 
@@ -201,9 +202,10 @@ def test_cc_driver_path_equals_distributed(spark):
         df = spark.createDataFrame(edges, "src long, dst long")
         fast = {(r["id"], r["component"])
                 for r in connected_components(df).collect()}
-        slow = {(r["id"], r["component"])
-                for r in connected_components(
-                    df, force_distributed=True).collect()}
+        with monkeypatch.context() as m:
+            m.setattr(textops, "CC_SMALL_EDGES", -1)
+            slow = {(r["id"], r["component"])
+                    for r in connected_components(df).collect()}
         assert fast == slow, f"trial {trial}"
 
 

@@ -123,20 +123,23 @@ def test_trustrank_hosts_matches_python_twin(spark):
     assert all(got[n] >= graph.PR_BASE for n in trusted)
 
 
-def test_trustrank_untrusted_island_converges_to_zero(spark):
+def test_trustrank_untrusted_island_converges_to_zero(spark, monkeypatch):
     """A component with no trusted in-path (the link-farm shape) must
-    end at rank 0 while the trusted component keeps mass."""
+    end at rank 0 while the trusted component keeps mass, on both
+    sides of the PR_SMALL_EDGES gate (-1 closes it)."""
     edges = spark.createDataFrame(
         # trusted island: h0 <-> h7 ; spam island: h3 <-> h5
         [("h0", "h7", 2), ("h7", "h0", 1),
          ("h3", "h5", 4), ("h5", "h3", 4)],
         "src string, dst string, weight long")
-    got = {r["host"]: r["pagerank_fp"]
-           for r in graph._power_iterate(
-               edges, graph.PR_ITERS,
-               trusted_pred=graph.trusted_host).collect()}
-    assert got["h3"] == 0 and got["h5"] == 0
-    assert got["h0"] > 0 and got["h7"] > 0
+    for bound in (graph.PR_SMALL_EDGES, -1):
+        with monkeypatch.context() as m:
+            m.setattr(graph, "PR_SMALL_EDGES", bound)
+            got = {r["host"]: r["pagerank_fp"]
+                   for r in graph._power_iterate(
+                       edges, graph.PR_ITERS, trusted=True).collect()}
+        assert got["h3"] == 0 and got["h5"] == 0, bound
+        assert got["h0"] > 0 and got["h7"] > 0, bound
     # and plain pagerank would NOT zero the spam island
     pr = {r["host"]: r["pagerank_fp"]
           for r in graph.pagerank(edges).collect()}

@@ -1,7 +1,8 @@
-"""r6: the PR_SMALL_EDGES driver-side gate (graph.py) must be a pure
+"""The PR_SMALL_EDGES driver-side gate (graph.py) must be a pure
 physical-plan choice — local and distributed paths bit-identical for
 pagerank, trustrank, and HITS, on the fixture graph and on random
-graphs (dangling nodes, untrusted islands, zero-score hosts)."""
+graphs (dangling nodes, untrusted islands, zero-score hosts). A
+negative bound forces the distributed path: no gate admits it."""
 
 import random
 
@@ -28,51 +29,41 @@ def _rand_edges(spark, seed, n_nodes=40, n_edges=120):
         "src string, dst string, weight long")
 
 
-def test_pagerank_local_equals_distributed(spark):
-    edges = graph.host_link_edges(spark, SF_DIR)
-    local = graph._power_iterate(edges, graph.PR_ITERS)
-    dist = graph._power_iterate(edges, graph.PR_ITERS,
-                                force_distributed=True)
-    assert _rows(local) == _rows(dist)
+def _both_paths(monkeypatch, build, *args):
+    """Rows of ``build(*args)`` through the gate, then with it closed."""
+    local = _rows(build(*args))
+    with monkeypatch.context() as m:
+        m.setattr(graph, "PR_SMALL_EDGES", -1)
+        return local, _rows(build(*args))
 
 
-def test_trustrank_local_equals_distributed(spark):
-    edges = graph.host_link_edges(spark, SF_DIR)
-    local = graph._power_iterate(
-        edges, graph.PR_ITERS, trusted_pred=graph.trusted_host,
-        trusted_py=graph.trusted_host_py)
-    dist = graph._power_iterate(
-        edges, graph.PR_ITERS, trusted_pred=graph.trusted_host,
-        force_distributed=True)
-    assert _rows(local) == _rows(dist)
+def test_pagerank_local_equals_distributed(spark, monkeypatch):
+    local, dist = _both_paths(monkeypatch, graph._power_iterate,
+                              graph.host_link_edges(spark, SF_DIR),
+                              graph.PR_ITERS)
+    assert local == dist
 
 
-def test_trustrank_column_only_pred_stays_distributed(spark):
-    # no Python mirror supplied -> the gate must NOT engage
-    edges = graph.host_link_edges(spark, SF_DIR)
-    out = graph._power_iterate(edges, 1, trusted_pred=graph.trusted_host)
-    # distributed path ends in a localCheckpoint scan, local path in a
-    # LocalTableScan of an Arrow batch
-    assert "Scan ExistingRDD" in out._jdf.queryExecution().toString() \
-        or "LocalTableScan" not in out._jdf.queryExecution().toString()
+def test_trustrank_local_equals_distributed(spark, monkeypatch):
+    local, dist = _both_paths(monkeypatch, graph._power_iterate,
+                              graph.host_link_edges(spark, SF_DIR),
+                              graph.PR_ITERS, True)
+    assert local == dist
 
 
-def test_pagerank_random_graphs_local_equals_distributed(spark):
+def test_pagerank_random_graphs_local_equals_distributed(spark,
+                                                         monkeypatch):
     for seed in (7, 21):
-        edges = _rand_edges(spark, seed)
-        local = graph.pagerank(edges)
-        dist = graph._power_iterate(edges, graph.PR_ITERS,
-                                    force_distributed=True)
-        assert _rows(local) == _rows(dist)
+        local, dist = _both_paths(monkeypatch, graph.pagerank,
+                                  _rand_edges(spark, seed))
+        assert local == dist
 
 
-def test_hits_local_equals_distributed(spark):
-    edges = graph.host_link_edges(spark, SF_DIR)
-    assert _rows(graph.hits(edges)) == _rows(
-        graph.hits(edges, force_distributed=True))
-    rnd = _rand_edges(spark, 3)
-    assert _rows(graph.hits(rnd)) == _rows(
-        graph.hits(rnd, force_distributed=True))
+def test_hits_local_equals_distributed(spark, monkeypatch):
+    for edges in (graph.host_link_edges(spark, SF_DIR),
+                  _rand_edges(spark, 3)):
+        local, dist = _both_paths(monkeypatch, graph.hits, edges)
+        assert local == dist
 
 
 def test_gate_falls_back_above_bound(spark, monkeypatch):
