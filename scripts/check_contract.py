@@ -13,7 +13,7 @@ import duckdb  # noqa: E402
 import pandas as pd  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
-from supacrawler_spark.session import get_spark  # noqa: E402
+from supacrawler_spark.session import get_spark, machine_heap  # noqa: E402
 
 SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
 TABLES = ("region nation customer supplier part orders lineitem events "
@@ -42,6 +42,7 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 def main():
     only = sys.argv[1:] or None
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", machine_heap())
     spark = get_spark(master="local[16]", shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
     if os.environ.get("SMALL_SCAN", "0") == "1":

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from supacrawler_spark.session import arrow_df, bounded_head
+from supacrawler_spark.session import arrow_df, bounded_head, read_table
 
 PR_SCALE = 1_000_000        # fixed-point 1.0
 PR_DAMP_NUM = 85            # damping 0.85 as a ratio of integers
@@ -35,7 +35,7 @@ PR_ITERS = 3
 
 
 def _events(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
+    return read_table(spark, sf_dir, "events")
 
 
 def host_link_edges(spark, sf_dir) -> DataFrame:

@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from supacrawler_spark.session import read_table
+
 MEDIA_META_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
     T.StructField("format", T.StringType()),
@@ -629,7 +631,7 @@ def audio_metadata(df: DataFrame, payload_col: str = "payload",
 
 def docs_as_audio(spark, sf_dir) -> DataFrame:
     """Fixture: a real WAV payload per document."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
 
     def gen(batches):
         for pdf in batches:
@@ -725,7 +727,7 @@ def docs_as_gradient_media(spark, sf_dir) -> DataFrame:
     exactly). Every pixel is a-priori computable by the SQL oracle —
     the oracle is container-agnostic, so a codec bug in EITHER path
     fails the hash."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
 
     def gen(batches):
         for pdf in batches:
@@ -749,7 +751,7 @@ def docs_as_gradient_media(spark, sf_dir) -> DataFrame:
 
 def docs_as_video(spark, sf_dir) -> DataFrame:
     """Fixture: a FAKV fake-video payload per document."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
 
     def gen(batches):
         for pdf in batches:
@@ -803,7 +805,7 @@ def docs_as_media(spark, sf_dir) -> DataFrame:
     """Fixture: a real image payload per document row, synthesized
     deterministically from doc_id (format/width/height are therefore
     a-priori known to the oracle while the bytes are real containers)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
 
     def gen(batches):
         for pdf in batches:
@@ -820,5 +822,5 @@ def docs_as_media(spark, sf_dir) -> DataFrame:
 
 def docs_as_text_media(spark, sf_dir) -> DataFrame:
     """Fixture: document text bytes as opaque payloads (digest path)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return docs.selectExpr("doc_id", "cast(text as binary) as payload")

@@ -168,7 +168,8 @@ def _parse_input(spark, sf_dir, cap: int, n_jobs: int,
     """Shared derivation for the parse driver queries: documents
     repeated to realistic page-markdown size (2k-22k chars) so the
     15,000-char cap genuinely fires on a subset of rows."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    from supacrawler_spark.session import read_table
+    docs = read_table(spark, sf_dir, "documents")
     r = F.repeat(F.concat(F.col("text"), F.lit(" ")), rep)
     return docs.select(
         (F.col("doc_id") % n_jobs).alias("job_id"),

@@ -37,6 +37,7 @@ from pyspark.sql.types import (
 )
 
 from supacrawler_spark import htmlkit as H
+from supacrawler_spark.session import read_table, split_small_scan
 
 # querySelectorAll('*') filter list, scrape/service.go:955-961
 _NON_CONTENT_TAGS = frozenset(
@@ -209,7 +210,7 @@ def recrawl_schedule(spark_or_df, sf_dir: str = None) -> "DataFrame":
     shape as top_terms/frontier_rank."""
     from pyspark.sql import Window
 
-    ev = (spark_or_df.read.parquet(f"{sf_dir}/events.parquet")
+    ev = (read_table(spark_or_df, sf_dir, "events")
           if sf_dir is not None else spark_or_df)
     obs = ev.select(F.col("user_id").alias("page_id"), "ts",
                     "event_id", F.col("event_type").alias("state"))
@@ -327,9 +328,8 @@ def redirect_chains(spark, sf_dir: str) -> DataFrame:
     actually occur), resolved to canonical targets. Exact integer
     arithmetic on both engines (md5 hex is engine-identical); the
     DuckDB twin is a recursive CTE capped at the same MAX_HOPS."""
-    from supacrawler_spark.session import split_small_scan
     docs = split_small_scan(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")).select("doc_id")
+        read_table(spark, sf_dir, "documents")).select("doc_id")
     n = docs.count()
     dst = (F.conv(F.substring(
         F.md5(F.concat(F.lit("redir|"), F.col("doc_id").cast("string"))),
@@ -417,10 +417,8 @@ def trap_detect(spark, sf_dir: str) -> DataFrame:
     counts 2..4 straddle the trap threshold), docs with
     doc_id % 7 == 0 get a 2-param query — then the trap features per
     URL. Exact string/integer arithmetic on both engines."""
-    from supacrawler_spark.session import split_small_scan
     docs = split_small_scan(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")).select(
-        "doc_id", "source")
+        read_table(spark, sf_dir, "documents")).select("doc_id", "source")
     did = F.col("doc_id")
     path = F.when(
         did % 13 == 0,
@@ -512,9 +510,8 @@ def crawl_diff(spark, sf_dir: str) -> DataFrame:
     (gone), rewrites text for doc_id % 11 == 0 (changed), and adds
     one new page per source (added); everything else is same. Exact
     md5/string arithmetic on both engines."""
-    from supacrawler_spark.session import split_small_scan
     docs = split_small_scan(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")).select(
+        read_table(spark, sf_dir, "documents")).select(
         "doc_id", "source", "text")
     url = F.concat(F.lit("https://"), F.col("source"),
                    F.lit(".example.org/doc/"),

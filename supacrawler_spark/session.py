@@ -96,6 +96,17 @@ def get_spark(
     return b.getOrCreate()
 
 
+def machine_heap() -> str:
+    """A driver heap sized to this machine: a quarter of physical
+    memory, 1-8 GiB. ``get_spark`` pins (and pre-touches) whatever
+    ``SPARK_DRIVER_MEMORY`` says, 12g when unset; the test suite and the
+    contract check set it to this first (an explicit value still wins),
+    so their JVM never takes a small machine's whole memory."""
+    with open("/proc/meminfo") as f:
+        kib = int(next(ln for ln in f if ln.startswith("MemTotal")).split()[1])
+    return f"{min(8, max(1, kib // 4 // 2**20))}g"
+
+
 def bounded_head(df, bound: int):
     """The gate of every driver-side small path: ``df`` as one
     ``pyarrow.Table`` when it holds at most ``bound`` rows, else None.
@@ -136,6 +147,42 @@ def arrow_local_df(spark, rows, schema):
     return arrow_df(spark, {n: [r[i] for r in rows]
                             for i, n in enumerate(schema.fieldNames())},
                     schema)
+
+
+# The session confs parquet schema inference reads: a schema inferred
+# under one setting is not the schema of the same file under another.
+_SCHEMA_CONFS = ("spark.sql.parquet.binaryAsString",
+                 "spark.sql.parquet.int96AsTimestamp",
+                 "spark.sql.parquet.mergeSchema",
+                 "spark.sql.parquet.inferTimestampNTZ.enabled")
+_schemas: dict = {}
+
+
+def read_table(spark, sf_dir: str, name: str):
+    """The ``<sf_dir>/<name>.parquet`` input table, inferring its schema
+    once per file: ``spark.read.parquet`` runs a one-task Spark job to
+    read the footer on every call (~100 ms of fixed driver latency, the
+    corpus operators make dozens of reads per pass), while a read with a
+    given schema runs none. The first read of a regular file infers and
+    remembers its schema; later reads pass it. The memo key is the
+    absolute path, size, mtime and the schema-inference confs, so a
+    rewritten file or a changed conf is inferred again. A directory (or
+    any non-local path) is inferred on every read: its schema is the
+    merge of files that may change without its own stat changing."""
+    path = f"{sf_dir}/{name}.parquet"
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    st = os.stat(path)
+    key = (os.path.abspath(path), st.st_size, st.st_mtime_ns,
+           *(spark.conf.get(k) for k in _SCHEMA_CONFS))
+    # Two threads reading one file for the first time may both infer it
+    # and store equal schemas: a duplicate job, never a wrong schema.
+    schema = _schemas.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _schemas[key] = df.schema
+    return df
 
 
 SMALL_SCAN_CONF = "spark.supacrawler.smallScanRepartition"

@@ -43,9 +43,8 @@ def plane_weights(n_planes: int = N_PLANES, dim: int = DIM, seed: int = 42):
 
 
 def _emb(spark, sf_dir):
-    from supacrawler_spark.session import split_small_scan
-    return split_small_scan(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
+    from supacrawler_spark.session import read_table, split_small_scan
+    return split_small_scan(read_table(spark, sf_dir, "embeddings"))
 
 
 def _dot(a, b):

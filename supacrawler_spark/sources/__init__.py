@@ -15,10 +15,6 @@ from pyspark.sql import functions as F
 from supacrawler_spark.functions import canon_info
 
 
-def load_table(spark, sf_dir: str, name: str):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 def prepare_pages(pages_df, dedup: bool = False):
     """Add the canonical join key to the corpus: url_canon + host +
     url_hash via one Arrow pass. The fetch join (J1) is an equi-join on

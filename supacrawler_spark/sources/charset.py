@@ -86,9 +86,8 @@ def charset_sniff(spark, sf_dir: str) -> DataFrame:
     encodes, sniffs, decodes, and emits md5(decoded utf-8 bytes); the
     DuckDB twin states charset/via/md5 in closed form from the
     planting rule."""
-    from supacrawler_spark.session import split_small_scan
-    docs = split_small_scan(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")).select(
+    from supacrawler_spark.session import read_table, split_small_scan
+    docs = split_small_scan(read_table(spark, sf_dir, "documents")).select(
         "doc_id", "text")
 
     def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

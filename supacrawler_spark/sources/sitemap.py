@@ -64,7 +64,8 @@ def docs_as_sitemaps(spark, sf_dir: str) -> DataFrame:
     """Fixture: one urlset sitemap document per source, entries in
     doc_id order (sort_array on the (doc_id, entry) struct keeps the
     assembly deterministic under any upstream partitioning)."""
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
+    from supacrawler_spark.session import read_table
+    docs = (read_table(spark, sf_dir, "documents")
             .select("doc_id", "source"))
     entries = docs.select(
         "source", F.struct("doc_id", _entry_expr().alias("e")).alias("s"))

@@ -309,7 +309,9 @@ def gen_pages_df(spark, sf_dir: str, seed: int = 42,
     """
     from supacrawler_spark.schemas import PAGES_SCHEMA
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    from supacrawler_spark.session import read_table
+
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang")
     if limit is not None:
         docs = docs.filter(f"doc_id < {int(limit)}")

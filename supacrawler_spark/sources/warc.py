@@ -203,7 +203,8 @@ def docs_as_warc_shards(spark, sf_dir: str,
     scale the shards already exist on storage and enter through
     binaryFile; this builder exists so the container path is
     exercised end-to-end with a-priori-known bytes."""
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
+    from supacrawler_spark.session import read_table
+    docs = (read_table(spark, sf_dir, "documents")
             .select("doc_id", "source", "text")
             .withColumn("file_id",
                         (F.col("doc_id") / records_per_shard)

@@ -23,10 +23,11 @@ Near-dup verification lives in one place: every candidate filter (LSH
 bands in lsh_verified_pairs, rarity prefixes in the allpairs_*
 operators) hands its lazy pair frame to _verified, which gates it on
 LSH_SMALL_PAIRS and returns the exact shingle overlap (n_inter, n_a,
-n_b); each operator applies only its own score and threshold. The
-bounded exactness anchors (ngram_jaccard_pairs, containment_pairs)
-share _overlap_pairs, and both paths attach the per-doc sizes through
-_with_sizes.
+n_b) by intersecting the two docs' shingle arrays on the pair row;
+each operator applies only its own score and threshold. The bounded
+exactness anchors (ngram_jaccard_pairs, containment_pairs) share
+_overlap_pairs, the raw shingle self-join that is also the reference
+_verified is tested against.
 """
 
 from __future__ import annotations
@@ -34,7 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from supacrawler_spark.session import arrow_df, bounded_head
+from supacrawler_spark.session import (
+    arrow_df, bounded_head, read_table, split_small_scan)
 
 STOPWORDS_EN = ("the", "a", "and", "of", "to", "in", "is", "for")
 LANG_STOPWORDS = {
@@ -50,9 +52,10 @@ SIMHASH_ND_MAXDIST = 3  # pigeonhole: dist<=3 => >=1 of 4 bands identical
 
 
 def _docs(spark, sf_dir):
-    from supacrawler_spark.session import split_small_scan
-    return split_small_scan(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    """The documents table (session.read_table: its schema is inferred
+    once per file, so a call after the first runs no Spark job),
+    small-scan healed. Docs frames are keyed by doc_id."""
+    return split_small_scan(read_table(spark, sf_dir, "documents"))
 
 
 def _tokens(docs):
@@ -283,8 +286,10 @@ def minhash_signatures(spark, sf_dir, perms: int = MINHASH_PERMS) -> DataFrame:
     md5(k || '|' || shingle); the signature component is the min over
     the doc's distinct shingles. One explode + one groupBy; the min()
     aggregates combine map-side, so the shuffle carries one row per
-    doc, not per shingle."""
-    sh = shingles(_docs(spark, sf_dir)).distinct()
+    doc, not per shingle. No distinct before it: the min over a
+    multiset is the min over its set, so a (doc, shingle) dedup
+    shuffle would change no signature."""
+    sh = shingles(_docs(spark, sf_dir))
     aggs = [F.min(F.md5(F.concat_ws("|", F.lit(str(k)), "shingle")))
             .alias(f"mh{k}") for k in range(perms)]
     return sh.groupBy("doc_id").agg(*aggs)
@@ -320,24 +325,14 @@ def minhash_lsh_pairs(spark, sf_dir, perms: int = MINHASH_PERMS,
     return pairs
 
 
-def _with_sizes(inter: DataFrame, sizes: DataFrame, dim) -> DataFrame:
-    """Attach each side's distinct-shingle count to (doc_a, doc_b,
-    n_inter) pair rows: -> (doc_a, doc_b, n_inter, n_a, n_b). ``dim``
-    is F.broadcast or the identity; the caller's size gate decides."""
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
-    return (inter.join(dim(sa), "doc_a").join(dim(sb), "doc_b")
-            .select("doc_a", "doc_b", "n_inter", "n_a", "n_b"))
-
-
-def _overlap_pairs(spark, sf_dir, max_doc: int) -> DataFrame:
-    """Exact shingle overlap of EVERY pair over the bounded doc range
-    doc_id < max_doc -> (doc_a, doc_b, n_inter, n_a, n_b): the raw
-    shingle self-join the bounded exactness anchors use. The join is on
-    the shingle value (co-partitioned); the per-doc sizes broadcast —
-    the range bound keeps them small."""
-    sh = (shingles(_docs(spark, sf_dir).filter(F.col("doc_id") < max_doc))
-          .distinct())
+def _overlap_pairs(docs: DataFrame) -> DataFrame:
+    """Exact shingle overlap of EVERY pair of a bounded docs frame ->
+    (doc_a, doc_b, n_inter, n_a, n_b), pairs sharing >= 1 shingle: the
+    raw shingle self-join the bounded exactness anchors use (over
+    doc_id < max_doc). The join is on the shingle value
+    (co-partitioned); the per-doc sizes broadcast — the caller's bound
+    keeps them small."""
+    sh = shingles(docs).distinct()
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (a.join(b, "shingle")
@@ -345,7 +340,11 @@ def _overlap_pairs(spark, sf_dir, max_doc: int) -> DataFrame:
              .groupBy(F.col("a.doc_id").alias("doc_a"),
                       F.col("b.doc_id").alias("doc_b"))
              .agg(F.count("*").alias("n_inter")))
-    return _with_sizes(inter, sizes, F.broadcast)
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
+    return (inter.join(F.broadcast(sa), "doc_a")
+            .join(F.broadcast(sb), "doc_b")
+            .select("doc_a", "doc_b", "n_inter", "n_a", "n_b"))
 
 
 def _jaccard():
@@ -361,14 +360,15 @@ def ngram_jaccard_pairs(spark, sf_dir, threshold: float = 0.8,
     intersection via the shingle equi-join of _overlap_pairs, union =
     |A|+|B|-∩."""
     jac = _jaccard()
-    return (_overlap_pairs(spark, sf_dir, max_doc).filter(jac >= threshold)
+    return (_overlap_pairs(_docs(spark, sf_dir)
+                           .filter(F.col("doc_id") < max_doc))
+            .filter(jac >= threshold)
             .select("doc_a", "doc_b", "n_inter", jac.alias("jaccard")))
 
 
 LSH_SMALL_PAIRS = 1_000_000
-"""Candidate-pair bound below which the verification dims (pair list,
-candidate-doc ids, candidate-doc size table — all fixed-width, ≤3
-BIGINTs per row, so ≲50 MB at the bound) broadcast. Above it — a
+"""Candidate-pair bound below which the pair list (fixed-width, 2
+BIGINTs per row, so ≲40 MB at the bound) broadcasts. Above it — a
 duplicate-heavy corpus (boilerplate-dominated, mirror-heavy
 Common-Crawl shards) where candidates are a large multiple of docs —
 every join falls back to a co-partitioned shuffle equi-join; nothing
@@ -378,55 +378,70 @@ driver-known-bound gating discipline as CC_SMALL_EDGES and fetch_join's
 sched_bound."""
 
 
-def _verified(pairs_src: DataFrame, sh: DataFrame) -> DataFrame:
+def _shingle_sets(docs: DataFrame) -> DataFrame:
+    """(doc_id, sh): each doc's distinct 3-gram shingle array, built
+    row-locally (no explode, no shuffle); docs shorter than 3 tokens
+    have no shingles and are dropped, as in shingles()."""
+    w = (docs.select("doc_id", F.split("text", " ").alias("w"))
+         .filter(F.size("w") >= 3))
+    return w.select("doc_id",
+                    F.array_distinct(_gram_arr(F.col("w"), 3)).alias("sh"))
+
+
+def _verified(pairs_src: DataFrame, docs: DataFrame) -> DataFrame:
     """Exact shingle overlap of candidate pairs only: the lazy
     (doc_a, doc_b) pair frame ``pairs_src`` (doc_a < doc_b, distinct)
-    against the distinct (doc_id, shingle) frame ``sh`` ->
-    (doc_a, doc_b, n_inter, n_a, n_b). No raw shingle self-join, no
-    doc_id bound: the one verification step every candidate filter
-    shares (TokenJoin's filter-then-verify split).
+    against the (doc_id, text) frame ``docs`` (keyed by doc_id) ->
+    (doc_a, doc_b, n_inter, n_a, n_b) BIGINTs, pairs sharing >= 1
+    shingle. No raw shingle self-join, no doc_id bound: the one
+    verification step every candidate filter shares (TokenJoin's
+    filter-then-verify split).
+
+    Verification is list intersection on the pair row (LCJoin, ICDE'19;
+    HERO, SIGMOD'24), not a join: each doc's distinct shingle array is
+    built row-locally (_shingle_sets), joined to the pairs on doc_a and
+    then on doc_b, and n_inter = size(array_intersect(sa, sb)) over the
+    exact shingle strings, so a hash collision can never change it. No
+    (doc, shingle) rows are exploded, shuffled or grouped.
 
     Scale shape: the pairs are gated against LSH_SMALL_PAIRS in ONE
     job by session.bounded_head, whose Arrow table, below the bound,
     IS the materialization: the pair list becomes a driver-local
     table, so the plan's consumers pay zero recompute and the gate
     costs no second action. Below the bound (the normal regime:
-    candidates are a vanishing fraction of docs) the candidate-doc id
-    set and the pair list broadcast, so the heavy
-    shingle table is semi-join-filtered map-side before any shuffle
-    and the intersection join only ever touches candidate-doc
-    shingles; the size table is counted over those shingles too, so it
-    holds candidate docs only. Above the bound the pairs
-    localCheckpoint instead (the distributed consumers re-read them)
-    and every dim joins as a plain shuffle equi-join — adversarial dup
-    density degrades to extra shuffles, never a driver OOM. Either way
-    a hot shingle shared by non-candidate docs never enters a join."""
+    candidates are a vanishing fraction of docs) the pair list
+    broadcasts, so the doc_a side is filtered map-side before any
+    shuffle; the doc_b side joins as the planner sizes it (a broadcast
+    of the arrays while the docs scan is under the broadcast
+    threshold). Above the bound the pairs localCheckpoint instead (the
+    distributed consumers re-read them) and both joins are plain
+    shuffle equi-joins — adversarial dup density degrades to extra
+    shuffles, never a driver OOM."""
     head = bounded_head(pairs_src, LSH_SMALL_PAIRS)
     small = head is not None
     pairs = (arrow_df(pairs_src.sparkSession, head, pairs_src.schema)
              if small else pairs_src.localCheckpoint())
     dim = F.broadcast if small else (lambda df: df)
-    cand_docs = (pairs.select(F.col("doc_a").alias("doc_id"))
-                 .union(pairs.select(F.col("doc_b").alias("doc_id")))
-                 .distinct())
-    shc = sh.join(dim(cand_docs), "doc_id", "left_semi")
-    sizes = shc.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = shc.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = shc.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (a.join(dim(pairs), "doc_a")
-             .join(b, ["doc_b", "shingle"])
-             .groupBy("doc_a", "doc_b")
-             .agg(F.count("*").alias("n_inter")))
-    return _with_sizes(inter, sizes, dim)
+    sets = _shingle_sets(docs)
+    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sa"))
+    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sb"))
+    return (sa.join(dim(pairs), "doc_a").join(sb, "doc_b")
+            .selectExpr("doc_a", "doc_b",
+                        "CAST(size(array_intersect(sa, sb)) AS BIGINT)"
+                        " AS n_inter",
+                        "CAST(size(sa) AS BIGINT) AS n_a",
+                        "CAST(size(sb) AS BIGINT) AS n_b")
+            .filter("n_inter > 0"))
 
 
 def lsh_verified_pairs(spark, sf_dir, threshold: float = 0.8) -> DataFrame:
     """The scale path for near-dup verification: exact n-gram Jaccard
     computed ONLY for LSH candidate pairs (minhash_lsh_pairs), over the
-    FULL corpus, through the gated _verified step."""
+    FULL corpus, through the gated _verified step, which reads each
+    candidate's shingles from its text row — the shingles are exploded
+    once per call, for the signatures."""
     jac = _jaccard()
-    v = _verified(minhash_lsh_pairs(spark, sf_dir),
-                  shingles(_docs(spark, sf_dir)).distinct())
+    v = _verified(minhash_lsh_pairs(spark, sf_dir), _docs(spark, sf_dir))
     return (v.filter(jac >= threshold)
             .select("doc_a", "doc_b", "n_inter", jac.alias("jaccard")))
 
@@ -434,27 +449,31 @@ def lsh_verified_pairs(spark, sf_dir, threshold: float = 0.8) -> DataFrame:
 def _simhash_df(docs: DataFrame, bits: int) -> DataFrame:
     """SimHash core over a docs frame: per token, bit b of md5(token)
     votes +1/-1; fingerprint bit = sign of the vote sum. Bits come
-    from the first ``bits/4`` hex chars — cross-engine exact. One
-    explode + one groupBy with partial (map-side) agg; bits must be
-    < 63 so the fingerprint stays a non-negative BIGINT."""
-    # r6: the expressions are built as SQL strings parsed JVM-side in
-    # one call each — the prior per-bit Column-builder loops issued
-    # ~300 py4j round-trips per query (~1.2 s of measured driver-side
-    # build time, the query's single largest cost at bench scale).
-    # Same operators, same arithmetic, bit-identical fingerprints.
-    toks = _tokens(docs)
-    t = toks.select("doc_id", F.md5("tok").alias("hx")).selectExpr(
-        "doc_id",
-        *[f"cast(conv(substring(hx, {i + 1}, 1), 16, 10) as int) as n{i}"
-          for i in range(bits // 4)])
-    votes = [F.expr(
-        f"sum(CASE WHEN (shiftright(n{b // 4}, {b % 4}) & 1) = 1 "
-        f"THEN 1 ELSE -1 END)").alias(f"v{b}") for b in range(bits)]
-    v = t.groupBy("doc_id").agg(*votes)
-    terms = " + ".join(
-        f"CAST(CASE WHEN v{b} > 0 THEN {1 << b} ELSE 0 END AS BIGINT)"
-        for b in range(bits))
-    return v.selectExpr("doc_id", f"({terms}) AS simhash")
+    from the first ``bits/4`` hex chars — cross-engine exact: nibble i
+    of the hex prefix is bits 4i..4i+3 of the fingerprint, so with
+    h = that prefix as an integer, fingerprint bit b is bit
+    4*(bits/4-1-b div 4) + b%4 of h. bits must be < 63 so the
+    fingerprint stays a non-negative BIGINT.
+
+    A small plan: h is computed once per token; the token rows explode
+    over sequence(0, bits-1), the votes sum per (doc_id, b) with
+    map-side partial aggregation, and one more groupBy folds the bit
+    signs into the fingerprint. Every expression is one SQL string
+    parsed JVM-side, so the plan's size and its build time do not grow
+    with ``bits`` (48 vote aggregates and a 48-term sum took ~0.4 s of
+    driver time to build and plan)."""
+    hexes = bits // 4
+    votes = (_tokens(docs)
+             .selectExpr("doc_id", "CAST(conv(substring(md5(tok), 1, "
+                         f"{hexes}), 16, 10) AS BIGINT) AS h")
+             .selectExpr("doc_id", "h",
+                         f"explode(sequence(0, {bits - 1})) AS b")
+             .selectExpr("doc_id", "b",
+                         f"IF(shiftright(h, 4 * ({hexes - 1} - b div 4)"
+                         " + b % 4) & 1 = 1, 1, -1) AS s")
+             .groupBy("doc_id", "b").agg(F.expr("sum(s)").alias("v")))
+    return votes.groupBy("doc_id").agg(
+        F.expr("sum(IF(v > 0, shiftleft(1L, b), 0L))").alias("simhash"))
 
 
 def simhash(spark, sf_dir, bits: int = 16) -> DataFrame:
@@ -735,7 +754,10 @@ def multi_signal_clusters(spark, sf_dir, threshold: float = 0.8) -> DataFrame:
     ~1.4 s of SimHash work after them. Local union-find iff the
     combined arm row count is within CC_SMALL_EDGES (per-arm heads of
     N+1 make the sum test exactly a gate on the union), distributed
-    min-label over the union otherwise — with no second gate."""
+    min-label over the union otherwise — with no second gate. Each arm
+    thread takes the caller's job group and description: under
+    PySpark's pinned-thread mode a new thread starts without the
+    caller's local properties, so its jobs would land in no group."""
     def mh_edges():
         return _cluster_edges(lsh_verified_pairs(spark, sf_dir, threshold),
                               "doc_a", "doc_b")
@@ -744,10 +766,18 @@ def multi_signal_clusters(spark, sf_dir, threshold: float = 0.8) -> DataFrame:
         return _cluster_edges(simhash_near_dup(spark, sf_dir),
                               "doc_id_a", "doc_id_b")
 
+    sc = spark.sparkContext
+    labels = {k: sc.getLocalProperty(k)
+              for k in ("spark.jobGroup.id", "spark.job.description")}
+
+    def head(arm):
+        for k, v in labels.items():
+            sc.setLocalProperty(k, v)
+        return bounded_head(arm(), CC_SMALL_EDGES)
+
     from concurrent.futures import ThreadPoolExecutor
     with ThreadPoolExecutor(max_workers=2) as ex:
-        heads = list(ex.map(lambda arm: bounded_head(arm(), CC_SMALL_EDGES),
-                            (mh_edges, sh_edges)))
+        heads = list(ex.map(head, (mh_edges, sh_edges)))
     if (all(h is not None for h in heads)
             and sum(h.num_rows for h in heads) <= CC_SMALL_EDGES):
         return _clusters_local(spark, heads)
@@ -1827,7 +1857,9 @@ def containment_pairs(spark, sf_dir, threshold: float = CONTAIN_THRESHOLD,
 
     containment divides two exact BIGINTs — bit-identical doubles."""
     c = F.col("n_inter") / F.least("n_a", "n_b")
-    return (_overlap_pairs(spark, sf_dir, max_doc).filter(c >= threshold)
+    return (_overlap_pairs(_docs(spark, sf_dir)
+                           .filter(F.col("doc_id") < max_doc))
+            .filter(c >= threshold)
             .select("doc_a", "doc_b", "n_inter", c.alias("containment")))
 
 
@@ -1929,7 +1961,7 @@ def allpairs_jaccard_from(docs) -> DataFrame:
     union = F.col("n_a") + F.col("n_b") - F.col("n_inter")
     gate = (F.lit(ALLPAIRS_DEN) * F.col("n_inter")
             >= F.lit(ALLPAIRS_NUM) * union)
-    return (_verified(cand, sh).filter(gate)
+    return (_verified(cand, docs).filter(gate)
             .select("doc_a", "doc_b", "n_inter", _jaccard().alias("jaccard")))
 
 
@@ -1977,7 +2009,8 @@ def allpairs_containment(spark, sf_dir) -> DataFrame:
     100-TB shape: the candidate join keys on rare prefix shingles
     (small gf), so per-key products stay tiny where a full self-join
     squares hot shingles; verification touches candidate docs only."""
-    sh = shingles(_docs(spark, sf_dir)).distinct()
+    docs = _docs(spark, sf_dir)
+    sh = shingles(docs).distinct()
     pref = (_rarity_prefix(sh, CONTAIN_NUM, CONTAIN_DEN)
             .select(F.col("doc_id").alias("p_doc"), "shingle"))
     full = sh.select(F.col("doc_id").alias("f_doc"), "shingle")
@@ -1988,7 +2021,7 @@ def allpairs_containment(spark, sf_dir) -> DataFrame:
             .distinct())
     m = F.least("n_a", "n_b")
     gate = F.lit(CONTAIN_DEN) * F.col("n_inter") >= F.lit(CONTAIN_NUM) * m
-    return (_verified(cand, sh).filter(gate)
+    return (_verified(cand, docs).filter(gate)
             .select("doc_a", "doc_b", "n_inter",
                     (F.col("n_inter") / m).alias("containment")))
 

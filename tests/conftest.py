@@ -10,8 +10,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    from supacrawler_spark.session import get_spark
+    from supacrawler_spark.session import get_spark, machine_heap
 
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", machine_heap())
     s = get_spark(master="local[8]", shuffle_partitions=8,
                   app_name="supacrawler-tests")
     s.sparkContext.setLogLevel("ERROR")
