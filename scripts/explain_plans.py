@@ -20,7 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from supacrawler_spark.session import get_spark  # noqa: E402
+from supacrawler_spark.session import get_spark, machine_heap  # noqa: E402
 
 
 def header(title):
@@ -29,6 +29,7 @@ def header(title):
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", machine_heap())
     spark = get_spark(master="local[8]", shuffle_partitions=8,
                       app_name="explain-plans")
     spark.sparkContext.setLogLevel("ERROR")

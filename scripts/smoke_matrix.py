@@ -1,17 +1,35 @@
-import sys, time
-sys.path.insert(0, "/root/repo")
-from supacrawler_spark.session import get_spark
+"""Engine vs oracle over a matrix of crawl parameters: one line per
+case, OK when trace, seen set, page set, extracted bytes and stats all
+equal crawl_oracle's.
+
+Usage: python scripts/smoke_matrix.py
+"""
+import os, sys, time
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from supacrawler_spark.session import get_spark, machine_heap
 from supacrawler_spark.sources import gen_pages_df, gen_seeds, gen_robots_df, gen_politeness_df
 from supacrawler_spark.params import CrawlParams
 from supacrawler_spark.plans import run_crawl
+from supacrawler_spark.plans.crawl import SEED_DIM_THRESHOLD
 from supacrawler_spark.oracle import crawl_oracle
 from supacrawler_spark.sources.synth import host_name
 
+os.environ.setdefault("SPARK_DRIVER_MEMORY", machine_heap())
 spark = get_spark(master="local[8]", shuffle_partitions=8)
 spark.sparkContext.setLogLevel("ERROR")
 pages_df, n_docs = gen_pages_df(spark, "/root/testdata/sf0.001")
 pages_local = {r["url"]: bytes(r["html"]).decode() for r in pages_df.select("url", "html").collect()}
 seeds = gen_seeds(n_docs, k=2)
+
+def bulk_seeds(sds):
+    """A list above SEED_DIM_THRESHOLD (the list-to-dim seed path): the
+    corpus seeds, distinct off-corpus seeds, and repeats of both (a
+    repeat with a lower rank, a #fragment variant)."""
+    extra = [(f"https://bulk{i}.example.net/p{i}", 100 + i)
+             for i in range(SEED_DIM_THRESHOLD + 50)]
+    dups = [(sds[0][0] + "#frag", 5000), (extra[0][0], 50), (sds[1][0], 5001)]
+    return sds + extra + dups
+
 
 def robots_rules():
     return {host_name(h): {"allow": [], "disallow": ["/product/"]} for h in range(42)}
@@ -26,6 +44,7 @@ cases = [
     ("limit1", CrawlParams(depth=2, link_limit=1), {}, {}),
     ("dangling_seed", CrawlParams(depth=2, link_limit=10), {}, {"dangle": True}),
     ("no_bloom", CrawlParams(depth=2, link_limit=40), {}, {"bloom": False}),
+    ("seed_list_dim", CrawlParams(depth=2, link_limit=40), {}, {"bulk": True}),
 ]
 
 for name, params, pol, opt in cases:
@@ -36,6 +55,8 @@ for name, params, pol, opt in cases:
     rob_df = gen_robots_df(spark) if opt.get("robots") else None
     rob_rules = robots_rules() if opt.get("robots") else None
     sds = gen_seeds(n_docs, k=2, include_dangling=opt.get("dangle", False))
+    if opt.get("bulk"):
+        sds = bulk_seeds(sds)
     orc = crawl_oracle(pages_local, sds, params, politeness=pol_dict, robots_rules=rob_rules)
     run = run_crawl(spark, pages_df, sds, params, politeness_df=pol_df,
                     robots_df=rob_df,

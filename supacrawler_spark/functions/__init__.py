@@ -5,10 +5,6 @@ every UDF here is a batch-level Arrow transfer (`pandas_udf`); the
 per-element work inside a batch is plain Python over the kernel
 functions (URL parsing has no numpy form), which is the allowed shape —
 what is forbidden is Spark's row-at-a-time Python UDF API.
-
-Cheap predicates that Catalyst can push down (scheme defaulting,
-host parsing) also have native-column variants so they stay JVM-side
-where exactness allows (SURVEY.md §4.2).
 """
 
 from __future__ import annotations
@@ -40,27 +36,18 @@ def canon_info(urls: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"url_canon": canon, "host": host, "url_hash": h})
 
 
-@pandas_udf(CANON_STRUCT)
-def link_info(urls: pd.Series) -> pd.DataFrame:
-    """host + hash for ALREADY-normalized discovery links (colly emits
-    normalized links, mapper/service.go:128). Unlike `canon_info` this
-    must NOT re-apply cleanURL: scheme-defaulting a `mailto:` or
-    `javascript:` link would invent a bogus host and leak it past the
-    domain-scope filter. url_canon passes through unchanged."""
-    host = urls.map(lambda u: U.extract_host(u) if u is not None else None)
-    h = urls.map(lambda u: U.url_hash64(u) if u is not None else None)
-    return pd.DataFrame({"url_canon": urls, "host": host, "url_hash": h})
-
-
 def link_scope_info(include_subdomains: bool):
     """Fused discovery-link kernel: host + hash + domain-scope verdict
-    in ONE Arrow pass (link_info ∘ domain_scope_udf). The candidate
-    expansion runs over every discovered link of a wave (~10x the wave
-    row count) — two separate pandas-UDF passes there mean two full
-    Arrow serialize/deserialize round-trips of the hottest column in
-    the discovery path; fusing halves that traffic. Semantics are
-    exactly link_info + domains_match (mapper/service.go:128,
-    241-254)."""
+    in ONE Arrow pass. The candidate expansion runs over every
+    discovered link of a wave (~10x the wave row count) — two separate
+    pandas-UDF passes there mean two full Arrow serialize/deserialize
+    round-trips of the hottest column in the discovery path; fusing
+    halves that traffic. Semantics are exactly U.extract_host +
+    U.url_hash64 + U.domains_match (mapper/service.go:128, 241-254).
+    Links arrive ALREADY normalized (colly emits normalized links), so
+    unlike `canon_info` this must NOT re-apply cleanURL: scheme-
+    defaulting a `mailto:` or `javascript:` link would invent a bogus
+    host and leak it past the domain-scope filter."""
     inc = bool(include_subdomains)
 
     @pandas_udf("host string, url_hash long, in_scope boolean")
@@ -130,9 +117,3 @@ def robots_allowed_udf(url: pd.Series, disallow: pd.Series,
         ))
     return pd.Series(out)
 
-
-def native_host(col):
-    """JVM-side host extraction (parse_url) for grouping/partitioning
-    where byte-exactness vs Go is not required (SURVEY.md X10). The
-    exact kernel host lives in `canon_info`."""
-    return F.parse_url(col, F.lit("HOST"))

@@ -39,12 +39,6 @@ MEDIA_META_SCHEMA = T.StructType([
     T.StructField("height", T.IntegerType()),
 ])
 
-MEDIA_DIGEST_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("n_bytes", T.IntegerType()),
-    T.StructField("digest", T.StringType()),
-])
-
 # Everything a corrupt/truncated payload can raise out of the pure-bytes
 # decoders: zlib.error (bad/short IDAT), struct.error (truncated fixed
 # headers), IndexError (short inflated data / short pixel rows), plus the

@@ -3,7 +3,6 @@
 from supacrawler_spark.operators.rank import ordered_row_number  # noqa: F401
 from supacrawler_spark.operators.frontier import (  # noqa: F401
     politeness_select,
-    ORDER_COLS,
 )
 from supacrawler_spark.operators.fetch import (  # noqa: F401
     fetch_join,

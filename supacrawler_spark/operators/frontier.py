@@ -24,11 +24,6 @@ from pyspark.sql import functions as F
 
 SALT_BUCKETS = 16
 
-# The deterministic total crawl order K (SURVEY.md §2.5): priority
-# queue first (north_star), then BFS wave order. Oracle equivalence
-# holds because default priority is constant 0.
-ORDER_COLS = ("depth", "parent_ord", "link_pos", "url")
-
 
 def sql_string(s: str) -> str:
     """``s`` as a Spark SQL string literal, for expressions parsed once
@@ -41,6 +36,9 @@ def sql_string(s: str) -> str:
 
 
 def order_exprs():
+    """The deterministic total crawl order K (SURVEY.md §2.5): priority
+    queue first (north_star), then BFS wave order. Oracle equivalence
+    holds because default priority is constant 0."""
     return [F.col("priority").desc(), F.col("depth"), F.col("parent_ord"),
             F.col("link_pos"), F.col("url")]
 

@@ -24,13 +24,12 @@ def ordered_row_number(
     df: DataFrame,
     order_cols,
     name: str,
-    offset: int = 0,
     hint_count: "int | None" = None,
     cache_out: "list | None" = None,
 ) -> DataFrame:
     """Add a deterministic 1-based global rank ``name`` ordered by
-    ``order_cols`` (+ ``offset``). The order must be a total order
-    (include a unique tiebreaker column).
+    ``order_cols``. The order must be a total order (include a unique
+    tiebreaker column).
 
     Correctness does not depend on partition boundaries: range
     partitioning guarantees pid order == key order, local ranks are
@@ -46,8 +45,7 @@ def ordered_row_number(
 
     if hint_count is not None and hint_count <= SMALL_INPUT_THRESHOLD:
         w = Window.orderBy(*cols)
-        return df.withColumn(
-            name, (F.row_number().over(w) + F.lit(offset)).cast("long"))
+        return df.withColumn(name, F.row_number().over(w).cast("long"))
 
     # `ranked` feeds BOTH the counts aggregate and the final join. The
     # partition ids those two consumers see MUST agree, so:
@@ -75,8 +73,6 @@ def ordered_row_number(
         "_off", F.coalesce(F.sum("_cnt").over(w_prefix), F.lit(0)))
     out = ranked.join(F.broadcast(offsets.select("_pid", "_off")), "_pid")
     return (
-        out.withColumn(
-            name,
-            (F.lit(offset) + F.col("_off") + F.col("_lrank")).cast("long"))
+        out.withColumn(name, (F.col("_off") + F.col("_lrank")).cast("long"))
         .drop("_pid", "_lrank", "_off")
     )

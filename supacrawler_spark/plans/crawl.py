@@ -92,7 +92,7 @@ from supacrawler_spark.plans.state import (
     ParquetStateBackend,
     StateBackend,
 )
-from supacrawler_spark.session import arrow_local_df, bounded_head
+from supacrawler_spark.session import arrow_df, bounded_head
 from supacrawler_spark.sources import prepare_pages
 
 BLOOM_THRESHOLD = 100_000
@@ -211,24 +211,19 @@ def _schedulable_frontier(raw: DataFrame, seedset: "_SeedSet") -> DataFrame:
             .select(*FRONTIER_SCHEMA.fieldNames()))
 
 
-def _seed_frontier(spark, seeds) -> DataFrame:
-    rows = []
-    dedup = set()
-    for raw_url, rank in sorted(seeds, key=lambda s: s[1]):
-        cu = U.canonical_url(raw_url)
-        if cu in dedup:
-            continue  # duplicate seeds collapse: min seed_rank wins
-        dedup.add(cu)
-        rows.append((cu, U.extract_host(cu), U.url_hash64(cu), 0, -1,
-                     int(rank), int(rank), U.extract_host(cu), 0.0, 0))
-    return arrow_local_df(spark, rows, FRONTIER_SCHEMA)
+def _committed(path: str) -> bool:
+    """A set-up write at ``path`` finished: Spark's job commit writes
+    ``_SUCCESS`` last, so a crash mid-write leaves the directory (a
+    ``_temporary/`` tree, maybe some part files) without it. Resume
+    reuses a set-up file only through this test and redoes the rest."""
+    return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
 # A seed list at or below this count stays a driver-side literal (zero
 # extra per-wave jobs: the membership test is an IN-list Catalyst can
 # constant-fold). Above it — or when the caller passes a DataFrame —
-# the seeds become a canonical parquet dim and every membership test is
-# a broadcast join, so neither the driver nor the plan grows with seed
+# the seed dim is written to parquet and every membership test is a
+# broadcast join, so neither the driver nor the plan grows with seed
 # count (the north rule's input is a Common-Crawl-style seed LIST).
 SEED_DIM_THRESHOLD = 1024
 
@@ -236,18 +231,23 @@ _SEED_DIM_SCHEMA = "url string, host string, url_hash long, seed_rank int"
 
 
 class _SeedSet:
-    """Seed handling at two scales.
+    """The crawl's seeds as ONE canonical dim (url, host, url_hash,
+    seed_rank), a row per canonical url; the wave-0 frontier is a
+    projection of it (``frontier``) and ``n`` its row count.
 
-    Literal mode (small lists): canonical urls live in a Python list;
-    the wave-0 frontier is a tiny createDataFrame and seed-membership
-    predicates are IN-lists — exactly the pre-dim behavior.
+    - A list is canonicalized and deduplicated once on the driver (it
+      already holds every seed) into an Arrow-backed local frame: no
+      Python-worker scan, no Spark job.
+    - A DataFrame is canonicalized by the vectorized ``canon_info``
+      kernel (the driver never touches its rows).
 
-    Dim mode (large lists / DataFrame input): seeds are canonicalized
-    by the vectorized ``canon_info`` kernel (the driver never touches
-    seed rows), persisted once under ``state_dir/seeds_dim`` (resume
-    reuses the files), with a distinct-url key table alongside
-    (``seeds_keys``) so the per-wave membership flag is a broadcast
-    left join that never fans out a joined row.
+    Literal mode (a list of at most SEED_DIM_THRESHOLD seeds): the dim
+    stays local and seed membership is an IN-list over ``urls`` — zero
+    jobs to set up, none per wave. Dim mode (anything else): the dim
+    is written once, as ``state_dir/seeds_dim`` (resume reuses it only
+    if that write committed), and membership is a broadcast left join
+    on its url column, unique by construction, so it never fans out a
+    joined row.
 
     Duplicate seeds (same canonical url) collapse to the minimum
     seed_rank in BOTH modes — a url is crawled at most once (the
@@ -262,47 +262,39 @@ class _SeedSet:
     """
 
     def __init__(self, spark, seeds, state_dir: str, resume: bool):
-        self.spark = spark
         self.urls: "list[str] | None" = None
-        self._dim_path = os.path.join(state_dir, "seeds_dim")
-        self._keys_path = os.path.join(state_dir, "seeds_keys")
+        self.n: "int | None" = None
         is_df = isinstance(seeds, DataFrame)
-        use_dim = is_df or len(seeds) > SEED_DIM_THRESHOLD
-        if not use_dim:
-            self.seeds_list = sorted(seeds, key=lambda s: s[1])
-            self.urls = [U.canonical_url(u) for u, _ in self.seeds_list]
-            return
-        # resume reuses the persisted dim only when BOTH files landed —
-        # a crash between the dim and keys writes must not leave a
-        # half-materialized seed set
-        if (resume and os.path.exists(self._dim_path)
-                and os.path.exists(self._keys_path)):
-            return
-        raw = (seeds.select("url", "seed_rank") if is_df
-               else spark.createDataFrame(
-                   [(u, int(r)) for u, r in seeds], "url string, seed_rank int"))
-        from supacrawler_spark.functions import canon_info
-        dim = (raw.withColumn("_c", canon_info("url"))
-               .select(F.col("_c.url_canon").alias("url"),
-                       F.col("_c.host").alias("host"),
-                       F.col("_c.url_hash").alias("url_hash"),
-                       F.col("seed_rank").cast("int").alias("seed_rank")))
-        # duplicate-seed collapse (host/url_hash are functions of url,
-        # so min() over the group is both deterministic and exact)
-        dim = (dim.groupBy("url")
-               .agg(F.min("host").alias("host"),
-                    F.min("url_hash").alias("url_hash"),
-                    F.min("seed_rank").alias("seed_rank")))
-        _write(dim, self._dim_path)
-        _write(self.spark.read.schema(_SEED_DIM_SCHEMA)
-               .parquet(self._dim_path).select("url").distinct(),
-               self._keys_path)
+        if is_df:
+            from supacrawler_spark.functions import canon_info
+            c = seeds.select(canon_info("url").alias("c"), "seed_rank")
+            # host/url_hash are functions of url: min() is exact
+            dim = c.groupBy(F.col("c.url_canon").alias("url")).agg(
+                F.min("c.host").alias("host"),
+                F.min("c.url_hash").alias("url_hash"),
+                F.min("seed_rank").cast("int").alias("seed_rank"))
+        else:
+            ranks: dict = {}
+            for raw_url, rank in sorted(seeds, key=lambda s: s[1]):
+                ranks.setdefault(U.canonical_url(raw_url), int(rank))
+            self.n = len(ranks)
+            dim = arrow_df(spark, {
+                "url": list(ranks),
+                "host": [U.extract_host(u) for u in ranks],
+                "url_hash": [U.url_hash64(u) for u in ranks],
+                "seed_rank": list(ranks.values())}, _SEED_DIM_SCHEMA)
+            if len(seeds) <= SEED_DIM_THRESHOLD:
+                self.urls, self.dim = list(ranks), dim
+                return
+        path = os.path.join(state_dir, "seeds_dim")
+        if not (resume and _committed(path)):
+            obs = Observation()
+            _write(dim.observe(obs, F.count(F.lit(1)).alias("n")), path)
+            self.n = obs.get["n"]
+        self.dim = spark.read.schema(_SEED_DIM_SCHEMA).parquet(path)
 
     def frontier(self) -> DataFrame:
-        if self.urls is not None:
-            return _seed_frontier(self.spark, self.seeds_list)
-        dim = self.spark.read.schema(_SEED_DIM_SCHEMA).parquet(self._dim_path)
-        return dim.select(
+        return self.dim.select(
             "url", "host", "url_hash",
             F.lit(0).alias("depth"),
             F.lit(-1).cast("long").alias("parent_ord"),
@@ -314,8 +306,8 @@ class _SeedSet:
 
     def flag(self, df: DataFrame, out: str = "_seed") -> DataFrame:
         """Add a boolean seed-membership column. Literal mode: an
-        IN-list predicate. Dim mode: broadcast left join on the
-        distinct-key table (flat per-row cost in seed count)."""
+        IN-list predicate. Dim mode: broadcast left join on the dim's
+        unique urls (flat per-row cost in seed count)."""
         if self.urls is not None:
             if self.urls:
                 # one JVM-parsed IN-list: Column.isin(list) issues one
@@ -327,8 +319,7 @@ class _SeedSet:
             else:
                 cond = F.lit(False)
             return df.withColumn(out, cond)
-        keys = (self.spark.read.schema("url string").parquet(self._keys_path)
-                .withColumn(out, F.lit(True)))
+        keys = self.dim.select("url", F.lit(True).alias(out))
         return (df.join(F.broadcast(keys), "url", "left")
                 .withColumn(out, F.coalesce(F.col(out), F.lit(False))))
 
@@ -936,7 +927,15 @@ def run_crawl(
 
     ``seeds``: list of (url, seed_rank) OR a DataFrame with columns
     (url, seed_rank) — the scale path for Common-Crawl-style seed
-    lists (the driver never materializes seed rows; see _SeedSet).
+    lists (the driver never materializes its rows). Either becomes one
+    canonical seed dim (see _SeedSet).
+
+    ``state_dir`` holds, besides the state backend's wave tables and
+    manifest, the set-up files: ``pages`` (the prepared corpus, unless
+    ``pages_prepared``) and ``seeds_dim`` (dim-mode seeds). ``resume``
+    reuses each only if its write committed (``_SUCCESS``) and redoes
+    it otherwise.
+
     ``pages_prepared``: pass True when pages_df already has url_canon
     (e.g. from bucketize_pages).
 
@@ -1005,7 +1004,7 @@ def run_crawl(
         # (at design scale the corpus is already an Iceberg table and
         # this step does not exist — pass pages_prepared=True)
         pages_path = os.path.join(state_dir, "pages")
-        if not (resume and os.path.exists(pages_path)):
+        if not (resume and _committed(pages_path)):
             _write(prepare_pages(pages_df), pages_path)
         pages = spark.read.parquet(pages_path)
     with _Session(spark) as sess:
@@ -1031,16 +1030,6 @@ def run_crawl(
             # (memory+disk). At 100-TB scale this is the executors' cache
             # of hot table partitions; disable for corpora >> cluster RAM.
             pages = sess.persist(pages)
-        # url-only corpus projection for the miss path of the fetch join:
-        # a few bytes/row, so the fat html column is scanned once per wave.
-        # Written in the background — the scan is independent of the rest
-        # of preloop (politeness collapse, seed init, frontier count), so
-        # overlapping it takes its 1-2 s off the preloop critical path;
-        # joined just before the wave loop, where the projection is first
-        # read.
-        urls_path = os.path.join(state_dir, "pages_urls")
-        if not (resume and os.path.exists(urls_path)):
-            sess.bg.submit(_write, pages.select("url_canon"), urls_path)
         # Per-host delays fold into the budget BEFORE the collapse
         # (semantics + citations: effective_politeness docstring).
         pol_arg, max_budget = _politeness_arg(
@@ -1058,11 +1047,8 @@ def run_crawl(
                 seedset)
         else:
             frontier = seedset.frontier()
-            # literal-seed mode: the deduped canonical count is already
-            # driver-known — no count job (dim mode still counts)
-            cur = _Cursor(run_id=uuid.uuid4().hex[:12], n_frontier_next=(
-                len(seedset.urls) if seedset.urls is not None
-                else frontier.count()))
+            cur = _Cursor(run_id=uuid.uuid4().hex[:12],
+                          n_frontier_next=seedset.n)
         backend.run_id = cur.run_id  # known-table namespace (parquet backend)
         # crash-window hygiene: drop any wave tables newer than the last
         # committed manifest line (all of them on a fresh start)
@@ -1070,11 +1056,13 @@ def run_crawl(
         seen = _SeenSet(backend, state_dir, seen_filter, sess.bg)
 
         # ---- wave loop ----------------------------------------------------
-        sess.bg.join()  # the url projection is read from the first wave on
         waves = _Waves(
             params=params, sess=sess, backend=backend, seedset=seedset,
             seen=seen, pages=pages,
-            pages_urls=sess.persist(spark.read.parquet(urls_path)),
+            # url-only corpus projection for the miss path of the fetch
+            # join: a few bytes/row, cached by its first wave, so the fat
+            # html column is scanned once per wave
+            pages_urls=sess.persist(pages.select("url_canon")),
             broadcast_urls=0 < corpus_bytes <= CORPUS_URLS_BROADCAST_BYTES,
             pol_arg=pol_arg, max_budget=max_budget,
             default_host_budget=default_host_budget, robots_df=robots_df,

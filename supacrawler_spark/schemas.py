@@ -39,12 +39,6 @@ FRONTIER_SCHEMA = T.StructType([
 FRONTIER_DISK_SCHEMA = T.StructType(
     list(FRONTIER_SCHEMA.fields) + [T.StructField("is_new", T.BooleanType())])
 
-SEEN_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType()),
-    T.StructField("url_hash", T.LongType()),
-    T.StructField("iter", T.IntegerType()),
-])
-
 METADATA_STRUCT = T.StructType([
     T.StructField("status_code", T.IntegerType()),
     T.StructField("source_url", T.StringType()),

@@ -16,7 +16,8 @@ largely sitemap-fed — so this module adds the missing source:
   urlsets);
 - ``seeds_from_sitemaps`` projects parsed locs into the crawl
   engine's ``(url, seed_rank)`` seeds-DataFrame contract, so a parsed
-  sitemap feeds ``run_crawl``'s broadcast seeds dim directly
+  sitemap feeds ``run_crawl`` directly: a seeds DataFrame is
+  canonicalized by the vectorized kernel into the parquet seeds dim
   (plans/crawl.py::_SeedSet) — no driver round-trip, Common-Crawl-
   scale loc lists stay distributed.
 

@@ -43,9 +43,6 @@ from pyspark.sql import types as T
 CRLF = b"\r\n"
 _WARC_VERSION = b"WARC/1.0"
 
-# deterministic WARC-Date base: BASE_TS (synth.py) + doc_id seconds
-_DATE_BASE = "2024-01-01T00:00:00Z"
-
 WARC_RECORD_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
     T.StructField("warc_date", T.StringType()),

@@ -1,6 +1,6 @@
 """The fused discovery-link kernel (link_scope_info) must agree
-exactly with its two-pass predecessors (link_info + domain_scope_udf
-/ U.domains_match) — it exists purely to halve Arrow round-trips in
+exactly with the per-url kernels it fuses (U.extract_host,
+U.url_hash64 and U.domains_match, the domain_scope_udf predicate) — it exists purely to halve Arrow round-trips in
 the candidate-expansion hot path (operators/fetch.py), so any
 semantic drift is a crawl-trace bug."""
 

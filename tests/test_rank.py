@@ -41,8 +41,8 @@ def test_two_phase_stable_across_input_partitioning(spark):
     assert ra == rb
 
 
-def test_offset_and_one_based(spark):
+def test_one_based(spark):
     df = spark.range(10).withColumn("v", F.col("id"))
-    got = R.ordered_row_number(df, ["v"], "rk", offset=100, hint_count=10)
+    got = R.ordered_row_number(df, ["v"], "rk", hint_count=10)
     rows = {r.id: r.rk for r in got.collect()}
-    assert rows[0] == 101 and rows[9] == 110
+    assert rows[0] == 1 and rows[9] == 10

@@ -56,7 +56,7 @@ def test_seed_dataframe_input(spark, web):
 
 def test_seed_dim_resume(spark, web, tmp_path, monkeypatch):
     """Dim-path resume: run one wave, resume to completion — equals a
-    one-shot dim run (the persisted seeds_dim/seeds_keys are reused)."""
+    one-shot dim run (the persisted seeds_dim is reused)."""
     _force_dim(monkeypatch)
     pages_df, _, n_docs = web
     seeds = gen_seeds(n_docs, k=2)
@@ -75,10 +75,12 @@ def test_seed_dim_resume(spark, web, tmp_path, monkeypatch):
 
 def test_seed_dim_resume_half_materialized(spark, web, tmp_path,
                                            monkeypatch):
-    """A crash between the seeds_dim and seeds_keys writes must not be
-    trusted on resume: with seeds_keys missing, the resumed run rebuilds
-    both files and still equals the one-shot dim run."""
-    import shutil
+    """A seeds_dim write that never committed must not be trusted on
+    resume: with its _SUCCESS marker and one part file gone (a crash
+    mid-write), the resumed run rebuilds the dim and still equals the
+    one-shot dim run."""
+    import glob
+    import os
     _force_dim(monkeypatch)
     pages_df, _, n_docs = web
     seeds = gen_seeds(n_docs, k=2)
@@ -86,15 +88,19 @@ def test_seed_dim_resume_half_materialized(spark, web, tmp_path,
     run_crawl(spark, pages_df, seeds,
               CrawlParams(depth=2, link_limit=30, max_waves=1),
               state_dir=sd)
-    shutil.rmtree(str(tmp_path / "state" / "seeds_keys"))
+    dim = os.path.join(sd, "seeds_dim")
+    os.remove(os.path.join(dim, "_SUCCESS"))
+    parts = sorted(glob.glob(os.path.join(dim, "part-*.parquet")))
+    assert parts  # each part holds seeds: removing one loses some
+    os.remove(parts[0])
     resumed = run_crawl(spark, pages_df, seeds,
                         CrawlParams(depth=2, link_limit=30),
                         state_dir=sd, resume=True)
     oneshot = run_crawl(spark, pages_df, seeds,
                         CrawlParams(depth=2, link_limit=30))
     assert _trace(resumed) == _trace(oneshot)
-    import os
-    assert os.path.exists(str(tmp_path / "state" / "seeds_keys"))
+    assert os.path.exists(os.path.join(dim, "_SUCCESS"))
+    assert spark.read.parquet(dim).count() == len(seeds)
 
 
 def test_duplicate_seeds_collapse(spark, web, monkeypatch):
